@@ -60,15 +60,13 @@ BUILD_SPLIT = {
     "llm_substring_dedup_spans",    # persists the sliding gram table
     "llm_bigram_lm_score",          # persists the positioned bigram stream
     "llm_bpe_train_merges",         # persists the per-round word tables
-    # r14 (VERDICT r13 task 2): the five queries that gained persisted
+    # r14 (VERDICT r13 task 2): the headline queries that gained persisted
     # slim artifacts in r13 report their one-time materialization in the
     # build column like every other artifact query -- the warm median
     # alone would silently exclude the expensive pass.
     "llm_dataset_card",             # persists the slim tokenized projection
     "llm_segment_dedup",            # persists the slim segment-hash stream
-    "llm_segment_dedup_keep_first",  # same slim segment-hash stream
     "llm_boilerplate_strip",        # same slim segment-hash stream (+source)
-    "llm_embedding_outlier",        # persists the slim (vec_id, d2) frame
 }
 
 # Measurement shape (r6): an explicit BUILD run, then N_WARM timed warm

@@ -181,6 +181,25 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q11 important stock (TPC-H Q11 shape)
 # ---------------------------------------------------------------------------
+def _q11_value_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q11's pre-checkpoint cascade (the per-part value frame), exposed
+    as its own function so tools/explain_audit.py can pin the cascade's
+    join strategy directly (VERDICT r13 task 7): the checkpointed query
+    plan starts at Scan ExistingRDD, which hides the cascade from the
+    generic AUDIT loop."""
+    t = load_tables(spark, sf_dir, ["supplier", "nation"])
+    ps = build_partsupp(spark, sf_dir)
+    g = (
+        ps.join(F.broadcast(t.supplier), ps.ps_suppkey == t.supplier.s_suppkey)
+        .join(F.broadcast(t.nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .filter(F.col("n_name").isin("NATION_3", "NATION_7"))
+        .select("ps_partkey", "ps_cost_cents", "ps_availqty")
+    )
+    return g.groupBy("ps_partkey").agg(
+        F.sum(F.col("ps_cost_cents") * F.col("ps_availqty")).alias("value_cents")
+    )
+
+
 @register(
     "q11_important_stock",
     oracle=f"""
@@ -211,25 +230,6 @@ WHERE value_cents * 1000 > total_cents
         "builds once."
     ),
 )
-def _q11_value_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q11's pre-checkpoint cascade (the per-part value frame), exposed
-    as its own function so tools/explain_audit.py can pin the cascade's
-    join strategy directly (VERDICT r13 task 7): the checkpointed query
-    plan starts at Scan ExistingRDD, which hides the cascade from the
-    generic AUDIT loop."""
-    t = load_tables(spark, sf_dir, ["supplier", "nation"])
-    ps = build_partsupp(spark, sf_dir)
-    g = (
-        ps.join(F.broadcast(t.supplier), ps.ps_suppkey == t.supplier.s_suppkey)
-        .join(F.broadcast(t.nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .filter(F.col("n_name").isin("NATION_3", "NATION_7"))
-        .select("ps_partkey", "ps_cost_cents", "ps_availqty")
-    )
-    return g.groupBy("ps_partkey").agg(
-        F.sum(F.col("ps_cost_cents") * F.col("ps_availqty")).alias("value_cents")
-    )
-
-
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _q11_value_frame(spark, sf_dir)
     # v is referenced twice (the scalar total + the output rows). AQE

@@ -4,6 +4,12 @@ app/Console/Commands/SyncCustomers.php + Processors/CustomerProcessor.php).
 Groove customer -> HelpScout Customer struct (P1-P5) as one declarative
 select -- map-only ETL, zero shuffles, fully codegen'd. Warnings
 (truncations) go to the side-channel; nothing aborts a record.
+
+Scale: the acquire boundary. The input is read once: a lazy local
+checkpoint at the top of the plan is filled by the caller's first action
+(the warnings collect), and the five warning branches and the publish
+read its blocks, so no Groove page is fetched twice. Observations sit
+above it, so ``customers_in`` counts each input row once.
 """
 
 from __future__ import annotations
@@ -30,6 +36,7 @@ def transform_customers(
     is a carried column, never a wrapper object). ``metrics`` observes
     in/out/warning counts inside the caller's action (K5/A4 surface).
     """
+    groove_customers = groove_customers.localCheckpoint(eager=False)
     if metrics is not None:
         groove_customers = metrics.track(groove_customers, "customers_in")
     name = split_full_name(F.col("name"))

@@ -19,6 +19,16 @@ shuffles are messages->groupBy(ticket_number) and the final
 conversation join, both on the same key so AQE can coalesce. At 100 TB
 attachment bytes are dropped right after hashing (T6) so the group-back
 never carries binaries.
+
+The acquire boundary: each input is read once. Every ``groove.*`` and
+``hs.*`` frame read by more than one branch or action is a lazy local
+checkpoint taken at the top of the plan, before any observation or
+branch; the first action that reads it (the validation collect, the
+errors collect) fills it and the other branches and the publish read its
+blocks, so no page is re-fetched and no dimension re-evaluated.
+Attachments are materialized post-hash: MIME and content hash depend on
+the attachment row alone, so they are computed ahead of the message join
+and the stored rows never hold the binary.
 """
 
 from __future__ import annotations
@@ -78,6 +88,23 @@ def _resolve_customer(base: DataFrame, hs_customers: DataFrame, groove_customers
     )
 
 
+def _read_once(inputs: SimpleNamespace, *names: str) -> SimpleNamespace:
+    """-> ``inputs`` with the named frames materialized lazily, once.
+
+    A lazy local checkpoint is filled by the first action that reads
+    it; every later branch and action reads its blocks. So no page is
+    re-fetched and no dimension re-evaluated, and a fetch failure still
+    surfaces at the caller's action. An action that reads only some
+    partitions (a capped collect) makes Spark run one more job to fill
+    the rest, so name frames whose first read is a full one. The blocks
+    live as long as the returned frames: the ContextCleaner frees them
+    (session.py sets ``cleanCheckpoints``)."""
+    return SimpleNamespace(**{
+        name: df.localCheckpoint(eager=False) if name in names else df
+        for name, df in vars(inputs).items()
+    })
+
+
 def build_conversations(
     groove: SimpleNamespace,
     hs: SimpleNamespace,
@@ -95,10 +122,35 @@ def build_conversations(
     counts inside the pipeline's own action -- the K5/A4 progress
     surface, zero extra jobs.
     """
-    spark = groove.tickets.sparkSession
-
     def _track(df: DataFrame, step: str) -> DataFrame:
         return metrics.track(df, step) if metrics is not None else df
+
+    # ---- Acquire -> Process boundary: every input is read once ----
+    # P13 MIME sniff from magic bytes (JVM-side hex prefix, no UDF);
+    # K3 content hash then DROP the binary (T6 memory hygiene). Both
+    # depend on the attachment row alone, so they run before the message
+    # join and the materialized attachments never hold a binary.
+    hex_prefix = F.upper(F.hex(F.substring(F.col("data"), 1, 4)))
+    atts = (
+        groove.attachments.withColumnRenamed("message_id", "att_src_msg_id")
+        .withColumn(
+            "mime",
+            F.when(F.col("data").isNull(), F.lit(None).cast("string"))
+            .when(hex_prefix.startswith("89504E47"), "image/png")
+            .when(hex_prefix.startswith("FFD8"), "image/jpeg")
+            .when(hex_prefix.startswith("25504446"), "application/pdf")
+            .when(hex_prefix.startswith("47494638"), "image/gif")
+            .otherwise("application/octet-stream"),
+        )
+        .withColumn("content_hash", F.md5(F.col("data")))
+        .drop("data")
+        .localCheckpoint(eager=False)
+    )
+    # Groove mailboxes and agents feed only the validation below: one
+    # capped collect that reads as few partitions as it needs, where a
+    # checkpoint would add a job per frame to fill the rest.
+    groove = _read_once(groove, "tickets", "messages", "customers", "agent_dir")
+    hs = _read_once(hs, "mailboxes", "users", "customers", "conversations")
 
     # ---- Phase 1: fail-fast validation (J6; SyncTickets.php:70-115) ----
     run_validations(
@@ -274,23 +326,10 @@ def build_conversations(
     att_msgs = good_msgs.withColumn(
         "att_msg_id", F.regexp_extract(F.col("links.attachments.href"), ATTACH_MSG_RE, 1)
     )
-    atts = groove.attachments.withColumnRenamed("message_id", "att_src_msg_id")
-    joined_atts = att_msgs.filter(F.col("att_msg_id") != "").select(
+    # atts carries mime/content_hash from the acquire boundary
+    sniffed = att_msgs.filter(F.col("att_msg_id") != "").select(
         "ticket_number", "message_id", "att_msg_id", "conv_status"
     ).join(atts, F.col("att_msg_id") == F.col("att_src_msg_id"), "inner")
-
-    # P13 MIME sniff from magic bytes (JVM-side hex prefix, no UDF);
-    # K3 content hash then DROP the binary (T6 memory hygiene)
-    hex_prefix = F.upper(F.hex(F.substring(F.col("data"), 1, 4)))
-    sniffed = joined_atts.withColumn(
-        "mime",
-        F.when(F.col("data").isNull(), F.lit(None).cast("string"))
-        .when(hex_prefix.startswith("89504E47"), "image/png")
-        .when(hex_prefix.startswith("FFD8"), "image/jpeg")
-        .when(hex_prefix.startswith("25504446"), "application/pdf")
-        .when(hex_prefix.startswith("47494638"), "image/gif")
-        .otherwise("application/octet-stream"),
-    ).withColumn("content_hash", F.md5(F.col("data"))).drop("data")
 
     # P14 size warnings (side output, record continues)
     size_warnings = sniffed.filter(F.col("size") > ATTACH_SIZE_CAP).select(

@@ -3,13 +3,19 @@
 The reference's acquire loop (``while page <= totalPages`` with a
 metadata probe first) becomes:
 
-    probe (1 driver-side request)  ->  spark.range(1, total_pages + 1)
-      -> repartition to the rate budget -> mapInPandas(fetch_page)
+    probe (1 driver-side request)
+      -> spark.range(1, total_pages + 1, numPartitions=<rate budget>)
+      -> mapInPandas(fetch_page)
 
 so page fetches distribute across executors, each task throttled by its
-share of the global budget (ratelimit.py). The fetch function is
-injected -- tests pass a local fake; production passes an HTTP client.
-No live HTTP happens anywhere in this repo's tests.
+share of the global budget (ratelimit.py), with no shuffle in the scan.
+The fetch function is injected -- tests pass a local fake; production
+passes an HTTP client. No live HTTP happens anywhere in this repo's
+tests.
+
+The returned frame is lazy: every action over it re-fetches its pages,
+unless its consumer materializes it first -- the plans do, with a lazy
+local checkpoint at their acquire boundary (plans/ticket_pipeline.py).
 
 Resume (T2): ``start_page``/``stop_page`` filter the page range BEFORE
 fetching (partition pruning of remote work). Point lookups (S4) take an
@@ -75,8 +81,9 @@ def paginated_source(
         )
     n_pages = stop - start_page + 1
     num_parts = min(n_pages, max(1, requests_per_minute))
-    pages = spark.range(start_page, stop + 1).withColumnRenamed("id", "page")
-    pages = pages.repartition(num_parts)
+    pages = spark.range(start_page, stop + 1, numPartitions=num_parts).withColumnRenamed(
+        "id", "page"
+    )
     rate = per_task_rate(requests_per_minute, num_parts)
     out_schema = T.StructType(schema.fields + [T.StructField("page", T.LongType())])
 

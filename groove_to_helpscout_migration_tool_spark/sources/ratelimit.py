@@ -6,8 +6,8 @@ with a sleep-until-window-reset counter in a single thread. On Spark the
 budget must hold ACROSS executors with no shared state, so the governor
 is conservative by construction (SURVEY.md section 4): each task gets
 budget/num_partitions requests per window. Partition counts therefore
-bound worst-case concurrency -- callers repartition the fetch plan to
-match the budget, not the data size.
+bound worst-case concurrency -- callers size the fetch plan's partitions
+to match the budget, not the data size.
 """
 
 from __future__ import annotations

@@ -39,6 +39,18 @@ def test_every_query_has_unique_name():
     assert len(catalog.QUERIES) == len(set(catalog.QUERIES))
 
 
+def test_every_query_is_registered_on_its_own_function():
+    """A decorator that lands on a helper serves the helper's frame under
+    the query's name; naming each query function after its query catches
+    that without running it."""
+    misplaced = {
+        name: spec.fn.__name__
+        for name, spec in catalog.QUERIES.items()
+        if spec.fn.__name__ != name
+    }
+    assert misplaced == {}
+
+
 def test_certification_debt_is_retirable_this_round():
     """The bound tools/certage.py promises: every query that NEEDS an
     official row this round (never checked, red, or green older than

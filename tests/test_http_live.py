@@ -11,10 +11,14 @@ ones RecordedTransport replays in-process; executor tasks reach it at
 
 from __future__ import annotations
 
+import base64
+import functools
 import json
 import threading
 import time
+from collections import Counter
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +26,14 @@ from pyspark.sql import types as T
 
 from groove_to_helpscout_migration_tool_spark.operators.joins import (
     dedup_anti_join,
+)
+from groove_to_helpscout_migration_tool_spark.plans import (
+    build_conversations,
+    transform_customers,
+)
+from groove_to_helpscout_migration_tool_spark.sources import (
+    groove_fixtures,
+    helpscout_fixtures,
 )
 from groove_to_helpscout_migration_tool_spark.sources.api import (
     foreach_partition_sink,
@@ -295,6 +307,112 @@ class TestEndToEndLive:
         )
         with pytest.raises(Exception, match="500"):
             df.collect()
+
+
+def _served(df, resource: str) -> list[dict]:
+    """A fixture frame's rows as the API serves them: no ``page`` column
+    (the scan adds its own) and attachment bytes as base64 text."""
+    out = []
+    for r in df.drop("page").collect():
+        d = r.asDict(recursive=True)
+        if resource == "attachments" and d["data"] is not None:
+            d["data"] = base64.b64encode(d["data"]).decode("ascii")
+        out.append(d)
+    return out
+
+
+def _decoding_fetch(client, resource: str):
+    def fetch(page: int, per_page: int) -> list[dict]:
+        records = client.fetch_page(page, per_page, resource)
+        if resource == "attachments":
+            for r in records:
+                if r["data"] is not None:
+                    r["data"] = base64.b64decode(r["data"])
+        return records
+
+    return fetch
+
+
+class TestAcquireBoundaryLive:
+    """Both migration plans over live TCP, each with two actions (the
+    side-channel collect, then the publish) and several branches over
+    every input: each plan reads every page once -- a page is fetched
+    once plus its scripted failures -- and publishes exactly once what
+    the same plans produce in-process without HTTP."""
+
+    PER_PAGE = 2
+    FLAKY = {"tickets": {2: [429]}, "messages": {3: [500]}, "attachments": {1: [503]}}
+    RESOURCES = ("customers", "tickets", "messages", "attachments")
+
+    def test_each_page_fetched_once_and_receipts_exactly_once(self, spark, serve):
+        groove, hs = groove_fixtures(spark, include_invalid=False), helpscout_fixtures(spark)
+        served = {r: _served(getattr(groove, r), r) for r in self.RESOURCES}
+        script = {}
+        for r, records in served.items():
+            script.update(paged_script(records, per_page=self.PER_PAGE, resource=r,
+                                       flaky=self.FLAKY.get(r)))
+        s = serve(_paths(script, "https://api.example.test/v1"))
+        client = FixtureHttpClient(LiveHttpTransport(), base_url=s.base_url)
+
+        def scan(resource: str):
+            schema = getattr(groove, resource).drop("page").schema
+            return paginated_source(
+                spark, _decoding_fetch(client, resource),
+                total_count=client.probe_total(resource), schema=schema,
+                per_page=self.PER_PAGE, requests_per_minute=600, retry_attempts=3)
+
+        def page_calls(resource: str) -> dict[str, int]:
+            with s.lock:
+                return {p: n for p, n in s.calls.items()
+                        if p.startswith(f"/v1/{resource}?")
+                        and p.endswith(f"&per_page={self.PER_PAGE}")}
+
+        def expected_calls(resource: str, reads: int) -> dict[str, int]:
+            flaky = self.FLAKY.get(resource, {})
+            n_pages = -(-len(served[resource]) // self.PER_PAGE)
+            return {f"/v1/{resource}?page={p}&per_page={self.PER_PAGE}":
+                    reads + len(flaky.get(p, [])) for p in range(1, n_pages + 1)}
+
+        def receipts(resource: str) -> list[str]:
+            with s.lock:
+                return sorted(json.dumps(rec, sort_keys=True) for p in s.posts
+                              if p["url"] == f"/v1/{resource}" for rec in p["payload"])
+
+        def rows(df) -> list[str]:
+            return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True)
+                          for r in df.collect())
+
+        def kinds(errors) -> Counter:
+            return Counter(r["error_type"] for r in errors.collect())
+
+        # sync-customers: warnings collect, then publish
+        out, warnings = transform_customers(scan("customers"))
+        got_warnings = kinds(warnings)
+        foreach_partition_sink(out, functools.partial(client.publish, resource="customers"),
+                               requests_per_minute=6000)
+        assert page_calls("customers") == expected_calls("customers", 1)
+
+        # sync-tickets: validation and errors collects, then publish. The
+        # customer directory is this plan's own scan, so its pages are read
+        # once more: once by each plan.
+        g = SimpleNamespace(**{r: scan(r) for r in self.RESOURCES},
+                            mailboxes=groove.mailboxes, agents=groove.agents,
+                            agent_dir=groove.agent_dir)
+        convs, errors = build_conversations(g, hs)
+        got_errors = kinds(errors)
+        foreach_partition_sink(convs, client.publish, requests_per_minute=6000)
+        for r in self.RESOURCES:
+            assert page_calls(r) == expected_calls(r, 2 if r == "customers" else 1), r
+
+        ref_out, ref_warnings = transform_customers(groove.customers)
+        ref_convs, ref_errors = build_conversations(groove, hs)
+        assert got_warnings == kinds(ref_warnings)
+        assert got_errors == kinds(ref_errors)
+        # exactly once: the receipts are the in-process rows, each one time
+        assert receipts("customers") == rows(ref_out)
+        expected = rows(ref_convs)
+        assert len(set(expected)) == len(expected) > 0
+        assert receipts("conversations") == expected
 
 
 class TestSyncTicketsResumeLive:

@@ -224,6 +224,7 @@ class TestPipelineMetrics:
         out, warnings = transform_customers(groove.customers, metrics=pm)
         n_out, n_warn = out.count(), warnings.count()
         n_in = groove.customers.count()
+        assert n_in == 5
 
         metrics = {
             (r["step"], r["metric"]): r["value"]
@@ -242,20 +243,23 @@ class TestPipelineMetrics:
         )
 
         pm = PipelineMetrics()
+        groove = groove_fixtures(spark)
         convs, errors = build_conversations(
-            groove_fixtures(spark),
+            groove,
             helpscout_fixtures(spark),
             bypass_validation=True,
             metrics=pm,
         )
         n_convs, n_errors = convs.count(), errors.count()
+        n_in = groove.tickets.count()
         metrics = {
             (r["step"], r["metric"]): r["value"]
             for r in pm.snapshot(spark).collect()
         }
         assert metrics[("conversations_out", "n_rows")] == n_convs
         assert metrics[("errors_out", "n_rows")] == n_errors
-        assert metrics[("tickets_in", "n_rows")] > 0
+        # observed above the inputs' materialization: each row once
+        assert metrics[("tickets_in", "n_rows")] == n_in
 
     def test_log_renders_progress_lines(self, spark):
         from pyspark.sql import functions as F
