@@ -601,10 +601,12 @@ def build_output(
     # hard guard: never exceed the driver's ~2KB tail buffer. Precision
     # ladder 2dp -> 1dp -> int: at 4-digit timings 1dp saves nothing
     # ("9999.99" -> "10000.0"), so the final rung rounds to integers,
-    # which bounds the line for any plausible headline count.
+    # which bounds the line for any plausible headline count. An engaged
+    # rung is named in "precision" so a rounded line is never read as 2dp.
     for ndigits in (1, 0):
         if len(line) <= 1900:
             break
+        compact["precision"] = ndigits
         compact["queries"] = {
             k: (round(v, ndigits) if ndigits else int(round(v)))
             for k, v in timings.items()

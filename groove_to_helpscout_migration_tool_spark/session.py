@@ -17,6 +17,20 @@ Scale notes:
     (``spark.sql.legacy.parquet.nanosAsLong``, runtime-settable) and
     convert to TIMESTAMP_NTZ at microsecond precision (truncation --
     identical to DuckDB's ns->us cast).
+  - One JIT policy (``JIT_POLICY``): the C2 (tier-4) promotion thresholds
+    are 10x their JDK 17 defaults. A migration command is one short-lived
+    driver JVM, and most of what C2 compiles during it (Catalyst rules,
+    Janino, one-off planning) stops running before the command ends; at
+    the defaults the C2 threads used 30-47 s of a 70-100 s cold benchmark
+    round on 4 vCPUs. Code that stays hot still reaches C2: repeated
+    sf0.1 calls are back within run-to-run spread of the default walls
+    after ~8 calls. C1 only (``-XX:TieredStopAtLevel=1``) saves more on a
+    cold round but leaves repeated sf0.1 q01 calls ~2x slower, so it is
+    not used. The policy rides ``spark.driver.defaultJavaOptions``, which
+    Spark prepends to a caller's ``--driver-java-options``, so both reach
+    the JVM. It acts only when ``get_session`` launches the JVM
+    (perfbench, ``bench.py``, ``tools/minidriver.py``, the test suite); a
+    JVM that is already running keeps its own flags.
 """
 
 from __future__ import annotations
@@ -42,6 +56,11 @@ TABLES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
 
 def get_session(
     app_name: str = "groove2hs-spark-engine",
@@ -62,6 +81,7 @@ def get_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.defaultJavaOptions", JIT_POLICY)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # Python Data Source pushdown (sources/pyds.py page pruning)

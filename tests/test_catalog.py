@@ -369,7 +369,19 @@ class TestBenchContract:
         assert parsed["metric"] == "headline_queries_total"
         assert set(parsed["queries"]) == set(bench.HEADLINE)
         assert all(v == 8.77 for v in parsed["queries"].values())
+        assert "precision" not in parsed
         assert json.loads(json.dumps(detail))["spread_pct"] == dict(timings)
+        # 2-digit timings push the 2dp line over the guard: the 1dp rung
+        # engages and says so, so the rounded values are never read as 2dp
+        timings = {n: 18.77 for n in bench.HEADLINE}
+        _, line = bench.build_output(
+            timings, dict(timings), dict(timings), 0.1, "0123abc-dirty"
+        )
+        assert len(line) < 1900
+        parsed = json.loads(line)
+        assert parsed["precision"] == 1
+        assert set(parsed["queries"]) == set(bench.HEADLINE)
+        assert all(v == 18.8 for v in parsed["queries"].values())
         # pathological case (4-digit timings): the line must STILL parse
         # under the buffer; any dropped entries must be counted, and the
         # detail dict keeps the full record
@@ -379,6 +391,7 @@ class TestBenchContract:
         )
         assert len(line) < 1900
         parsed = json.loads(line)
+        assert parsed["precision"] == 0
         omitted = parsed.get("queries_omitted", 0)
         assert len(parsed["queries"]) + omitted == len(bench.HEADLINE)
         assert set(detail["queries"]) == set(bench.HEADLINE)

@@ -333,6 +333,29 @@ SCALE_REGIME_AUDIT = {
 }
 
 
+def audit_plan(
+    label: str,
+    plan: str,
+    require: list[str],
+    forbid: list[str],
+    checks: str | None = None,
+) -> tuple[bool, str]:
+    """Check one executed plan against required / forbidden regexes.
+
+    Returns ``(ok, row)``: ``row`` is the PLANS.md table row for
+    ``label``, naming every missing or forbidden pattern on failure.
+    ``checks`` replaces the default "n required, m forbidden" summary.
+    """
+    missing = [p for p in require if not re.search(p, plan)]
+    present = [p for p in forbid if re.search(p, plan)]
+    detail = (["missing: " + "; ".join(missing)] if missing else []) + (
+        ["forbidden present: " + "; ".join(present)] if present else []
+    )
+    checks = checks or f"{len(require)} required, {len(forbid)} forbidden"
+    result = "FAIL — " + " / ".join(detail) if detail else "PASS"
+    return not detail, f"| `{label}` | {checks} | {result} |"
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_session(app_name="explain-audit", shuffle_partitions=8)
@@ -426,26 +449,15 @@ def main() -> None:
         .executedPlan()
         .toString()
     )
-    rel_require = [r"Exchange hashpartitioning\(split[^,]*, shard"]
-    rel_forbid = [r"Exchange rangepartitioning", r"RoundRobinPartitioning"]
-    missing = [p for p in rel_require if not re.search(p, rel_plan)]
-    present = [p for p in rel_forbid if re.search(p, rel_plan)]
-    ok = not missing and not present
-    lines.append(
-        "| `q_release_layout (write_release pre-repartition)` | Exchange"
-        " hashpartitioning(split, shard) before partitionBy; no"
-        " round-robin/range | "
-        + (
-            "PASS"
-            if ok
-            else "FAIL — "
-            + " / ".join(
-                (["missing: " + "; ".join(missing)] if missing else [])
-                + (["forbidden present: " + "; ".join(present)] if present else [])
-            )
-        )
-        + " |"
+    ok, row = audit_plan(
+        "q_release_layout (write_release pre-repartition)",
+        rel_plan,
+        [r"Exchange hashpartitioning\(split[^,]*, shard"],
+        [r"Exchange rangepartitioning", r"RoundRobinPartitioning"],
+        checks="Exchange hashpartitioning(split, shard) before partitionBy;"
+        " no round-robin/range",
     )
+    lines.append(row)
     if not ok:
         failures.append("q_release_layout_write_plan")
 
@@ -462,25 +474,13 @@ def main() -> None:
     vf = _q11_value_frame(spark, sf_dir)
     vf.collect()
     vplan = vf._jdf.queryExecution().executedPlan().toString()
-    v_require = ["BroadcastHashJoin", "HashAggregate", "Scan parquet"]
-    v_forbid = ["SortMergeJoin", "CartesianProduct"]
-    missing = [p for p in v_require if not re.search(p, vplan)]
-    present = [p for p in v_forbid if re.search(p, vplan)]
-    ok = not missing and not present
-    lines.append(
-        "| `q11_important_stock (pre-checkpoint cascade)` |"
-        f" {len(v_require)} required, {len(v_forbid)} forbidden | "
-        + (
-            "PASS"
-            if ok
-            else "FAIL — "
-            + " / ".join(
-                (["missing: " + "; ".join(missing)] if missing else [])
-                + (["forbidden present: " + "; ".join(present)] if present else [])
-            )
-        )
-        + " |"
+    ok, row = audit_plan(
+        "q11_important_stock (pre-checkpoint cascade)",
+        vplan,
+        ["BroadcastHashJoin", "HashAggregate", "Scan parquet"],
+        ["SortMergeJoin", "CartesianProduct"],
     )
+    lines.append(row)
     if not ok:
         failures.append("q11_cascade")
 
@@ -489,19 +489,8 @@ def main() -> None:
         df.collect()  # run so AQE finalizes the plan
         plan = df._jdf.queryExecution().executedPlan().toString()
         plans[name] = plan
-        missing = [p for p in require if not re.search(p, plan)]
-        present = [p for p in forbid if re.search(p, plan)]
-        ok = not missing and not present
-        detail = []
-        if missing:
-            detail.append("missing: " + "; ".join(missing))
-        if present:
-            detail.append("forbidden present: " + "; ".join(present))
-        lines.append(
-            f"| `{name}` | {len(require)} required, {len(forbid)} forbidden | "
-            + ("PASS" if ok else "FAIL — " + " / ".join(detail))
-            + " |"
-        )
+        ok, row = audit_plan(name, plan, require, forbid)
+        lines.append(row)
         if not ok:
             failures.append(name)
     import os
