@@ -323,7 +323,8 @@ def _scale_metrics() -> dict | None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    spark = get_session(app_name="bench")
+    # JDK-default JIT: this harness times warm repeats (session.py notes)
+    spark = get_session(app_name="bench", jit_policy=False)
     timings: dict[str, float] = {}
     build: dict[str, float] = {}
     spreads: dict[str, float] = {}

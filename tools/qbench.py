@@ -41,7 +41,8 @@ def main() -> None:
     from groove_to_helpscout_migration_tool_spark import catalog, get_session
     from groove_to_helpscout_migration_tool_spark.operators import cache
 
-    spark = get_session(app_name="qbench")
+    # JDK-default JIT, as bench.py runs (session.py notes)
+    spark = get_session(app_name="qbench", jit_policy=False)
     # warm the JVM + parquet footers once, as bench.py does
     catalog.QUERIES["q06_forecast_revenue"].fn(spark, sf_dir).collect()
 
