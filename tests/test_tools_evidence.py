@@ -121,3 +121,53 @@ def test_bench_compare_rounds_totals_are_in_value_norm_units(tmp_path):
     assert out["total_norm_new"] == round(20.0 * 0.99 / 0.99, 3)
     # 19.8 -> 20.0 is ~+1%: inside both triggers
     assert proc.returncode == 0, proc.stdout
+
+
+def _top_level_names(path: str) -> set[str]:
+    import ast
+
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(t.id for t in targets if isinstance(t, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+    return names
+
+
+def test_every_tool_compiles_and_its_imports_resolve():
+    """Only a few tools run under Tier-1, so compile every tools/*.py and
+    resolve, without running anything, each module it imports and each
+    name it imports from a sibling tool: a tool still importing a deleted
+    tool or helper fails here instead of mid-run."""
+    import ast
+    import glob
+    import importlib.util
+    import py_compile
+
+    paths = sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
+    tools = {os.path.basename(p)[:-3]: p for p in paths}
+    problems = []
+    for path in paths:
+        py_compile.compile(path, doraise=True)
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                wanted = [(a.name, []) for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                wanted = [(node.module, [a.name for a in node.names])]
+            else:
+                continue
+            for module, names in wanted:
+                if module in tools:
+                    missing = set(names) - _top_level_names(tools[module])
+                    problems += [f"{path}: {module}.{n}" for n in sorted(missing)]
+                elif importlib.util.find_spec(module) is None:
+                    problems.append(f"{path}: {module}")
+    assert problems == []

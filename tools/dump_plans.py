@@ -6,13 +6,12 @@ against these instead of running Spark).
 Usage: python tools/dump_plans.py <sf_dir> <tag> <suffix> <query...|ALL>
 e.g.   python tools/dump_plans.py /root/testdata/sf0.1 r13 after q02_min_cost_supplier
 
-SPARK_GRAFT_PLAN_FINAL=1 additionally EXECUTES each query (count(), the
-bench action) before dumping, so the file holds the FINAL adaptive plan
-(AdaptiveSparkPlan isFinalPlan=true): AQE's runtime decisions --
+SPARK_GRAFT_PLAN_FINAL=1 instead runs each query through the shared fold
+(`eventlog.fold`; `count()` would run a QueryExecution of its own) and
+dumps the fold's FINAL adaptive plan: AQE's runtime decisions --
 ReusedExchange/stage reuse, coalesced AQEShuffleReads, demoted/promoted
-joins, InMemoryTableScans of persisted artifacts -- none of which the
-static dump can show. Static dumps stay the default: they are cheap and
-match what `.explain("formatted")` prints before a run.
+joins, InMemoryTableScans of persisted artifacts. Static dumps stay the
+default: cheap, and what `.explain("formatted")` prints before a run.
 """
 
 from __future__ import annotations
@@ -22,22 +21,16 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import eventlog
+from census import ROOT, query_names
 from groove_to_helpscout_migration_tool_spark import catalog, get_session
 from groove_to_helpscout_migration_tool_spark.operators import cache
 
 
 def main() -> None:
     sf_dir, tag, suffix = sys.argv[1], sys.argv[2], sys.argv[3]
-    names = sys.argv[4:]
-    if names == ["ALL"]:
-        import json
-
-        with open(os.path.join(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__))), "bench_manifest.json")) as f:
-            names = list(json.load(f)["headline"])
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", tag)
+    names = query_names(sys.argv[4:])
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_session(app_name="dump-plans")
     final = os.environ.get("SPARK_GRAFT_PLAN_FINAL", "0") == "1"
@@ -45,9 +38,10 @@ def main() -> None:
         spec = catalog.QUERIES[name]
         df = spec.fn(spark, sf_dir)
         if final:
-            df.count()
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+            _rows, plan = eventlog.fold(df)
+        else:
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

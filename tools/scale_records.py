@@ -55,9 +55,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import eventlog
 
 DATA_RATIO = 10.0
 LINEAR_BOUND = 30.0  # linear-class ops: max allowed record-growth ratio
@@ -219,84 +220,6 @@ PROBES = {
 }
 
 
-def _build_session(event_dir: str):
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-records")
-        # JVM heap default ALIGNED with the package session's own
-        # default (session.py: 32g) -- the harness used to default to
-        # 16g, BELOW the engine it measures. Record counts are
-        # size-invariant in heap. Two distinct r10 failure modes, both
-        # closed in r11: (a) broadcast state accumulated across probes
-        # because ContextCleaner only fires on driver GC -- the
-        # per-probe System.gc() in _run_sweep keeps the live set flat
-        # (40 sf10 probes + warm passes ran clean at 16g where r10 died
-        # mid-sweep); (b) llm_neardup_pagerank's sf10 plan
-        # intrinsically needs >16g for its unrolled-round broadcasts --
-        # it OOMs SOLO at 16g, i.e. not an accumulation problem, and
-        # runs at the engine-default 32g.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", event_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
-
-
-def _group_records(event_dir: str) -> dict[str, int]:
-    """event log -> {job_group: total shuffle-read records}. Attribution
-    per stage ATTEMPT via its own StageSubmitted properties (same scheme
-    as tools/skew_stress.py: skipped stages can't be claimed, retries
-    don't merge)."""
-    stage_group: dict[tuple[int, int], str] = {}
-    stage_records: dict[tuple[int, int], int] = {}
-    paths = []
-    for root, _dirs, files in os.walk(event_dir):
-        paths.extend(
-            os.path.join(root, f)
-            for f in files
-            if not f.startswith(".") and "appstatus" not in f
-        )
-    for path in paths:
-        with open(path) as fh:
-            for line in fh:
-                try:
-                    ev = json.loads(line)
-                except ValueError:
-                    continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerStageSubmitted":
-                    si = ev.get("Stage Info") or {}
-                    key = (si.get("Stage ID"), si.get("Stage Attempt ID", 0))
-                    stage_group[key] = (ev.get("Properties") or {}).get(
-                        "spark.jobGroup.id", ""
-                    )
-                elif kind == "SparkListenerTaskEnd":
-                    key = (ev.get("Stage ID"), ev.get("Stage Attempt ID", 0))
-                    srm = (ev.get("Task Metrics") or {}).get(
-                        "Shuffle Read Metrics"
-                    ) or {}
-                    stage_records[key] = stage_records.get(key, 0) + int(
-                        srm.get("Total Records Read", 0) or 0
-                    )
-    out: dict[str, int] = {}
-    for key, recs in stage_records.items():
-        group = stage_group.get(key, "?")
-        out[group] = out.get(group, 0) + recs
-    return out
-
-
 def _probes() -> dict[str, str]:
     """PROBES, optionally restricted to the comma-separated names in
     $SCALE_PROBES -- the second-decade (sf0.1 -> sf1) runs probe only
@@ -315,8 +238,10 @@ def _run_sweep(sf_dir: str) -> tuple[dict[str, int], dict[str, float]]:
     from groove_to_helpscout_migration_tool_spark import catalog
     from groove_to_helpscout_migration_tool_spark.operators import cache
 
-    event_dir = tempfile.mkdtemp(prefix="scale_events_")
-    spark = _build_session(event_dir)
+    # Heap: get_session's 32g default ($SPARK_GRAFT_DRIVER_MEM). Records do
+    # not depend on it, but llm_neardup_pagerank's sf10 plan OOMs SOLO at
+    # 16g (its unrolled-round broadcasts), with nothing accumulated.
+    spark, log = eventlog.session("scale-records", {"spark.sql.shuffle.partitions": "16"})
     sc = spark.sparkContext
     from pyspark.sql import functions as F
 
@@ -339,21 +264,6 @@ def _run_sweep(sf_dir: str) -> tuple[dict[str, int], dict[str, float]]:
         spec = catalog.QUERIES.get(name)
         if spec is None:
             continue
-        # Force FULL materialization: .count() lets Catalyst prune
-        # columns, no-op joins, and aggregate expressions out of
-        # map-shaped plans (a per-doc op collapsed to "which docs
-        # exist" under count, hiding its gram/feature shuffles). A
-        # checksum over every output column keeps the whole plan live
-        # while still reducing to one driver row.
-        def run_once() -> None:
-            out = spec.fn(spark, sf_dir)
-            out.agg(
-                # mod keeps the ANSI-mode sum far from int64 overflow
-                F.sum(
-                    F.xxhash64(F.struct(*[F.col(c) for c in out.columns]))
-                    % F.lit(1_000_000_007)
-                )
-            ).collect()
 
         def reset() -> None:
             cache.unpersist_artifacts()
@@ -376,18 +286,18 @@ def _run_sweep(sf_dir: str) -> tuple[dict[str, int], dict[str, float]]:
         # SCALE_NO_WARM=1 skips it (quick iteration).
         if not os.environ.get("SCALE_NO_WARM"):
             sc.setJobGroup("warmup", "warmup")
-            run_once()
+            eventlog.fold(spec.fn(spark, sf_dir))
             reset()
         sc.setJobGroup(name, name)
         t0 = time.monotonic()
-        run_once()
+        eventlog.fold(spec.fn(spark, sf_dir))
         walls[name] = round(time.monotonic() - t0, 2)
         # self-contained per query: the next one rebuilds its artifacts,
         # so each query's records include its own build at BOTH scales
         reset()
         sc.setJobGroup("idle", "idle")
     spark.stop()  # flush the event log
-    return _group_records(event_dir), walls
+    return {name: g.shuffle_records for name, g in eventlog.parse(log).items()}, walls
 
 
 def _input_rows(sf_dir: str, tables: list[str]) -> int:

@@ -35,9 +35,10 @@ import json
 import os
 import statistics
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import eventlog
 
 SALT_BOUND = 3.0     # salted join: max/median shuffle-read records per task
 CAP_BOUND = 4.0      # capped dedup candidate joins
@@ -52,33 +53,6 @@ PAIR_CAP_SELF = PAIR_CAP * (PAIR_CAP - 1) // 2  # 28
 
 def _cap_ceiling(width: int) -> int:
     return PAIR_CAP_SELF + max(width - PAIR_CAP, 0)
-
-
-def _build_session(event_dir: str):
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("skew-stress")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        # at sf0.01 AQE coalesces every shuffle to ~1 task, which hides
-        # the per-task distribution this harness exists to measure; at
-        # scale partitions sit at the advisory size and never collapse
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # the at-scale emulation: dims too big to broadcast
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", event_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
 
 
 def _hot_docs(spark, sf_dir: str):
@@ -231,67 +205,18 @@ def _pair_probe(spark, sf_dir: str) -> tuple[dict, list[str]]:
     return probe, violations
 
 
-def _parse_event_log(event_dir: str) -> dict[str, dict]:
-    """event log -> {job_group: {(stage_id, attempt): [per-task records]}}.
-
-    Attribution is per STAGE ATTEMPT via its own SparkListenerStageSubmitted
-    event (whose Properties carry the submitting job's group), not via the
-    first JobStart that happens to list the stage: a JobStart lists stages
-    it may later SKIP (their shuffle output already exists from an earlier
-    scenario), which would blend one scenario's task records into another's
-    ratio, and a retried stage would merge records across attempts. Skipped
-    stages never emit a StageSubmitted, so their (absent) tasks can't be
-    claimed; each retry attempt is its own key."""
-    stage_group: dict[tuple[int, int], str] = {}
-    stage_tasks: dict[tuple[int, int], list[int]] = {}
-    # Spark 4 writes a rolling event-log DIRECTORY (eventlog_v2_<app>/
-    # events_*) rather than a single file; walk whatever shape appears
-    paths = []
-    for root, _dirs, files in os.walk(event_dir):
-        paths.extend(
-            os.path.join(root, f)
-            for f in files
-            if not f.startswith(".") and "appstatus" not in f
-        )
-    for path in paths:
-        with open(path) as fh:
-            for line in fh:
-                try:
-                    ev = json.loads(line)
-                except ValueError:
-                    continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerStageSubmitted":
-                    si = ev.get("Stage Info") or {}
-                    key = (si.get("Stage ID"), si.get("Stage Attempt ID", 0))
-                    stage_group[key] = (ev.get("Properties") or {}).get(
-                        "spark.jobGroup.id", ""
-                    )
-                elif kind == "SparkListenerTaskEnd":
-                    key = (ev.get("Stage ID"), ev.get("Stage Attempt ID", 0))
-                    metrics = ev.get("Task Metrics") or {}
-                    srm = metrics.get("Shuffle Read Metrics") or {}
-                    records = srm.get("Total Records Read", 0)
-                    stage_tasks.setdefault(key, []).append(int(records or 0))
-    out: dict[str, dict] = {}
-    for key, recs in stage_tasks.items():
-        group = stage_group.get(key, "?")
-        out.setdefault(group, {})[key] = recs
-    return out
-
-
-def _worst_stage(stages: dict[tuple[int, int], list[int]]) -> dict | None:
+def _worst_stage(stages: list[eventlog.Stage]) -> dict | None:
     """The scenario's dominant shuffle stage: most records read in total.
     max/median over its per-task record counts is the straggler ratio."""
     best = None
-    for (sid, _attempt), recs in stages.items():
-        live = [r for r in recs if r > 0]
+    for stage in stages:
+        live = [r for r in stage.records if r > 0]
         if len(live) < MIN_TASKS:
             continue
         total = sum(live)
         if best is None or total > best["records_total"]:
             best = {
-                "stage_id": sid,
+                "stage_id": stage.stage_id,
                 "n_tasks": len(live),
                 "records_total": total,
                 "records_max": max(live),
@@ -307,8 +232,15 @@ def _worst_stage(stages: dict[tuple[int, int], list[int]]) -> dict | None:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
-    event_dir = tempfile.mkdtemp(prefix="skew_events_")
-    spark = _build_session(event_dir)
+    spark, log = eventlog.session("skew-stress", {
+        "spark.sql.shuffle.partitions": "16",
+        # at sf0.01 AQE coalesces every shuffle to ~1 task, which hides
+        # the per-task distribution this harness exists to measure; at
+        # scale partitions sit at the advisory size and never collapse
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        # the at-scale emulation: dims too big to broadcast
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    })
     sc = spark.sparkContext
     from groove_to_helpscout_migration_tool_spark.operators import cache
 
@@ -320,10 +252,10 @@ def main() -> None:
     pair_probe, pair_violations = _pair_probe(spark, sf_dir)
     spark.stop()  # flush + finalize the event log
 
-    groups = _parse_event_log(event_dir)
+    groups = eventlog.parse(log)
     report: dict[str, dict] = {}
     for name in ("join_salted", "join_unsalted", "minhash_capped", "simhash_capped"):
-        worst = _worst_stage(groups.get(name, {}))
+        worst = _worst_stage(groups.get(name, eventlog.Group()).stages)
         report[name] = worst or {"error": "no shuffle stage recorded"}
 
     violations = []
