@@ -209,7 +209,7 @@ _CHANGED = {
     "llm_cluster_balanced_sample": 13,
     "llm_embedding_outlier": 13,
     # round 13 (optimization, session 4): the scan-census follow-up to
-    # the AQE finding (tools/scan_census.py counts per-relation scans
+    # the AQE finding (tools/census.py counts per-relation scans
     # in every headline query's executed plan). dataset_card held the
     # worst leftover -- THREE full tokenize+md5 documents scans (base
     # referenced by two branches, lang_cnt itself referenced twice);
@@ -242,6 +242,22 @@ _CHANGED = {
     "q11_important_stock": 15,  # overrides the round-13 entry above
     "ref_pipeline_sync_customers": 15,
     "ref_pipeline_sync_tickets": 15,
+    # round 15: the ANN family became (qid, nid) candidate generators
+    # plus one exact re-rank (similarity._rerank: the salted
+    # two_phase_topk), with one IVF cell probe (cell_probe) and one
+    # label codebook (label_centroids). Values identical (sorted-row
+    # sha256 unchanged at sf0.01 and sf0.1); plans changed.
+    "llm_ann_lsh_topk": 15,  # window top-k -> _rerank
+    "llm_ann_ivf_topk": 15,  # window top-k -> _rerank; probe -> cell_probe
+    "llm_ann_ivf_kmeans_topk": 15,  # as ivf_topk; refinement via assign_cells
+    "llm_ann_quantized_topk": 15,  # bounded re-rank tail -> _rerank
+    "llm_ann_ivf_hybrid_topk": 15,  # IVF leg -> cell_probe; tail -> _rerank
+    "llm_ann_incremental_ivf": 15,  # delta probe -> cell_probe; window -> _rerank
+    "llm_ann_incremental_hybrid": 15,  # cell_probe leg; int8 leg self-filter; _rerank
+    "llm_hard_negatives_ivf": 15,  # probe -> cell_probe (assignment now persisted)
+    "llm_cluster_kmeans_assign": 15,  # codebook -> label_centroids + assign_cells
+    "llm_semantic_dedup_clusters": 15,  # shares _kmeans_assigned with the above
+    "llm_cluster_balanced_sample": 15,  # samples llm_cluster_kmeans_assign's cells
 }
 
 # Queries measured >= 2s in the full sf0.01 oracle sweep (Spark + DuckDB

@@ -637,22 +637,9 @@ def _kmeans_assigned(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     oracles share llm_ops._ivf_ctes the same way)."""
     t = load_tables(spark, sf_dir, ["embeddings"])
     emb = SIM.prepared(t.embeddings)
-    reps = t.embeddings.groupBy("label").agg(F.min("vec_id").alias("rep_id"))
-    cents = emb.join(
-        F.broadcast(reps.select(F.col("rep_id").alias("vec_id"))), "vec_id"
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    cents = SIM.refined_centroids(emb, cents, 1)
-    best = F.element_at(F.col("_csims"), 1)
-    assigned = SIM._with_cell_ranking(emb, SIM._codebook(cents)).select(
-        "vec_id",
-        (-best["ncid"]).alias("cell"),
-        best["csim"].alias("centroid_cosine"),
-    )
-    return assigned, emb
+    cents = SIM.refined_centroids(emb, SIM.label_centroids(t.embeddings, emb), 1)
+    assigned = SIM.assign_cells(emb, SIM.codebook(cents))
+    return assigned.withColumnRenamed("csim", "centroid_cosine"), emb
 
 
 @register(
@@ -953,32 +940,11 @@ def llm_hard_negatives_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["embeddings"])
     emb = SIM.prepared(t.embeddings)
     labels = t.embeddings.select("vec_id", "label")
-    reps = t.embeddings.groupBy("label").agg(F.min("vec_id").alias("rep_id"))
-    cents = emb.join(
-        F.broadcast(reps.select(F.col("rep_id").alias("vec_id"))), "vec_id"
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    book = SIM._codebook(cents)
-    assigned = SIM._with_cell_ranking(emb, book).select(
-        "vec_id",
-        (-F.element_at(F.col("_csims"), 1)["ncid"]).alias("cell"),
-    )
-    probes = (
-        SIM._with_cell_ranking(emb.filter(F.col("vec_id") < HN_QUERIES), book)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.explode(F.slice(F.col("_csims"), 1, HN_IVF_NPROBE)).alias("_s"),
-        )
-        .select("qid", (-F.col("_s")["ncid"]).alias("cell"))
-    )
-    cand = (
-        probes.join(assigned, ["cell"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", F.col("vec_id").alias("nid"))
-        .distinct()
+    cand = SIM.cell_probe(
+        emb,
+        emb.filter(F.col("vec_id") < HN_QUERIES),
+        SIM.label_centroids(t.embeddings, emb),
+        HN_IVF_NPROBE,
     )
     ql = labels.select(F.col("vec_id").alias("qid"), F.col("label").alias("qlabel"))
     nl = labels.select(F.col("vec_id").alias("nid"), F.col("label").alias("nlabel"))

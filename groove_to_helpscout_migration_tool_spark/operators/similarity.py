@@ -1,15 +1,23 @@
 """Similarity search over embedding columns.
 
-Three paths:
-  - brute_force: exact cosine top-k of a (small, broadcast) query set
-    against the corpus -- the baseline every approximate variant is
-    validated against (catalog: llm_ann_topk_cosine).
-  - hyperplane LSH: sign-random-projection bucketing. The hyperplanes
-    are +-1 vectors derived from md5 bits at BUILD time (in Python's
-    hashlib, which matches SQL md5 byte-for-byte), inlined as literals
-    into both the Spark plan and the DuckDB oracle -- fully
-    deterministic, no engine RNG anywhere.
-  - IVF coarse quantization: nearest-centroid cells, probe nprobe cells.
+Every ANN top-k is a candidate generator plus ONE exact re-rank:
+  - a generator emits (qid, nid) id pairs only:
+      lsh_topk        -- query multiprobe keys x the LSH inverted lists;
+      ivf_topk        -- cell_probe over label_centroids (optionally
+                         Lloyd-refined by refined_centroids);
+      ivf_probe_delta -- cell_probe of a delta batch against the base
+                         corpus's sub-seed codebook;
+      sq8_topk        -- the int8 pool cut (_sq8_pool_candidates);
+      ivf_sq8_hybrid_topk / ivf_sq8_hybrid_delta -- a cell_probe leg
+                         UNION the int8 pool (the exact safety net).
+  - _rerank re-joins vectors for the surviving pairs and ranks them by
+    exact rounded cosine through the salted two_phase_topk.
+The brute-force baseline (catalog: llm_ann_topk_cosine) scores a
+bounded query matrix against the whole corpus (scores_vs_query_matrix)
+and ranks through the same two_phase_topk. The LSH hyperplanes are +-1
+vectors derived from md5 bits at BUILD time (in Python's hashlib, which
+matches SQL md5 byte-for-byte), inlined as literals into both the Spark
+plan and the DuckDB oracle -- fully deterministic, no engine RNG.
 
 Scale/perf design shared by all of them:
   - bucket/cell keys are tiny; the candidate self-join and its distinct
@@ -35,7 +43,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -323,20 +330,6 @@ def sql_hyperplane_literal(k: int) -> str:
     return "[" + ", ".join(f"{float(s):.1f}" for s in HYPERPLANES[k]) + "]"
 
 
-def _topk(scored: DataFrame, k: int) -> DataFrame:
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
-    )
-
-
 def lsh_index(emb: DataFrame) -> DataFrame:
     """Persisted inverted-list index (vec_id, bkey) over the prepared
     corpus. Like prepared(), this is a build-once artifact: at 100 TB it
@@ -376,13 +369,13 @@ def lsh_topk(embeddings: DataFrame, k: int = 5, query_max_id: int = 10) -> DataF
         .select("qid", "nid")
         .distinct()
     )
-    return _topk(_rejoin_cosine(cand, emb, "qid", "nid", "qv", "nv"), k)
+    return _rerank(cand, emb, k)
 
 
 QUANT_SCALE = 1_000_000.0  # fixed-point scale for deterministic centroid means
 
 
-def _codebook(cents: DataFrame) -> list[tuple[int, list[float], float]]:
+def codebook(cents: DataFrame) -> list[tuple[int, list[float], float]]:
     """Collect the centroid set driver-side, sorted by cid -- the IVF
     CODEBOOK. Bounded by construction: C = the number of cells (tens to
     low thousands at any corpus size, a tuning constant independent of
@@ -451,7 +444,7 @@ def scores_vs_query_matrix(
     """Score every corpus row against a BOUNDED query set without a
     per-pair join: collect the query frame driver-side (a codebook-style
     fetch -- the anchor/probe set is tens of rows by contract, exactly
-    the bounded-collect class as _codebook), compute each corpus row's
+    the bounded-collect class as codebook()), compute each corpus row's
     dots against the whole query matrix in ONE Arrow stage
     (_centroid_dots_udf: dimension-axis left-to-right accumulation,
     bit-identical to the interpreted F.aggregate/zip_with fold and to
@@ -535,12 +528,12 @@ def two_phase_topk(
     cosine must be PRE-ROUNDED so engine float noise cannot flip the
     order. Returns (qid, rank bigint, nid, cosine[, label_col]).
 
-    The ONE implementation of the salted brute top-k -- the mining ops
-    (hard negatives, kNN vote, IVF negatives) and the brute ANN baseline
-    all rank through here, so a tie-break or salt fix reaches every
-    consumer at once.
+    The ONE implementation of the salted top-k -- the mining ops (hard
+    negatives, kNN vote, IVF negatives), the brute ANN baseline, the
+    sq8 pool cut and every ANN re-rank (_rerank) all rank through here,
+    so a tie-break or salt fix reaches every consumer at once.
 
-    ``bounded_input=True`` (r13) skips the salted phase 1 and runs the
+    ``bounded_input=True`` skips the salted phase 1 and runs the
     phase-2 merge directly: ONLY for inputs whose per-``qid`` row count
     is already bounded by a CONSTANT upstream (e.g. sq8_topk's final
     re-rank reads the <= pool rows/query its own pool cut just
@@ -593,10 +586,34 @@ def two_phase_topk(
     ).select(*out)
 
 
+def _rerank(
+    cand: DataFrame, emb: DataFrame, k: int, *, bounded_input: bool = False
+) -> DataFrame:
+    """(qid, nid) candidates -> (query_id, neighbor_id, cosine, rank
+    int): the ONE exact re-rank every ANN top-k ends in. Vectors and
+    norms re-join for the candidate ids alone (_rejoin_cosine, cosine
+    pre-rounded to 6) and the salted two_phase_topk ranks by (cosine
+    DESC, nid ASC) -- a total order, so the plan needs no per-query
+    window. ``bounded_input`` is two_phase_topk's flag, passed through:
+    only for candidates already cut to a constant count per qid."""
+    ranked = two_phase_topk(
+        _rejoin_cosine(cand, emb, "qid", "nid", "qv", "nv"),
+        "qid",
+        k,
+        SQ8_SALT,
+        bounded_input=bounded_input,
+    )
+    return ranked.select(
+        F.col("qid").alias("query_id"),
+        F.col("nid").alias("neighbor_id"),
+        "cosine",
+        F.col("rank").cast("int").alias("rank"),
+    )
+
+
 def _with_cell_ranking(rows: DataFrame, book) -> DataFrame:
     """rows + `_csims`: per-row array of (csim, -cid) structs sorted
-    best-first -- (desc cosine, asc cid), the same total order the old
-    N x C row_number window produced, WITHOUT the N x C exchange: the
+    best-first -- (desc cosine, asc cid), WITHOUT an N x C exchange: the
     dots arrive from one Arrow stage against the in-closure codebook
     and the C-way rank is a per-row sort_array, all map-side. csim
     keeps the exact expression shape of the oracle (round to 9 of
@@ -632,13 +649,71 @@ def _with_cell_ranking(rows: DataFrame, book) -> DataFrame:
     return rows.withColumn("_csims", ranked).drop("_cd")
 
 
-def _assign_cells(emb: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, cell): nearest-centroid assignment, argmax cosine with
-    deterministic rounding + cid tie-break. cents: (cid, cv, cnrm)."""
-    ranked = _with_cell_ranking(emb, _codebook(cents))
-    return ranked.select(
-        "vec_id",
-        (-F.element_at(F.col("_csims"), 1)["ncid"]).alias("cell"),
+def assign_cells(emb: DataFrame, book) -> DataFrame:
+    """(vec_id, cell, csim): nearest-centroid assignment against a
+    codebook (see codebook()), argmax cosine with deterministic rounding
+    + cid tie-break; csim is the winning centroid's rounded cosine."""
+    best = F.element_at(F.col("_csims"), 1)
+    return _with_cell_ranking(emb, book).select(
+        "vec_id", (-best["ncid"]).alias("cell"), best["csim"].alias("csim")
+    )
+
+
+def _rep_centroids(emb: DataFrame, reps: DataFrame) -> DataFrame:
+    """(cid, cv, cnrm): the prepared vectors of the representative ids
+    ``reps.rep_id`` -- a codebook-sized broadcast join."""
+    return emb.join(
+        F.broadcast(reps.select(F.col("rep_id").alias("vec_id"))), "vec_id"
+    ).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
+    )
+
+
+def label_centroids(embeddings: DataFrame, emb: DataFrame) -> DataFrame:
+    """(cid, cv, cnrm): the deterministic IVF coarse quantizer over the
+    raw ``embeddings`` and their prepared() frame ``emb`` -- one
+    representative vector per corpus cluster (min vec_id per ``label``,
+    the stand-in for an offline-trained k-means codebook, which is how
+    IVF centroids are produced in production; vec_id % IVF_STRIDE == 0
+    when no label column exists). Deterministic selection lets the
+    DuckDB oracles mirror the quantizer exactly."""
+    if "label" not in embeddings.columns:
+        return emb.filter(F.col("vec_id") % IVF_STRIDE == 0).select(
+            F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
+        )
+    reps = embeddings.groupBy("label").agg(F.min("vec_id").alias("rep_id"))
+    return _rep_centroids(emb, reps)
+
+
+def cell_probe(
+    base: DataFrame, queries: DataFrame, cents: DataFrame, nprobe: int
+) -> DataFrame:
+    """(qid, nid) IVF candidates: each ``queries`` row probes its
+    ``nprobe`` nearest cells of the ``cents`` codebook and takes every
+    other ``base`` vector assigned there (both frames prepared()).
+
+    The codebook is fetched once and ranks both sides map-side (one
+    Arrow dots stage + a per-row C-way sort, NO N x C crossJoin and NO
+    per-vec_id window exchange). The base assignment runs ONCE and is
+    persisted -- the build-once cell assignment, at 100 TB a
+    bucketed-by-cell table written per corpus snapshot -- so a query
+    batch costs cell occupancy, not corpus size. Candidates travel as
+    ids only; vectors re-join at scoring time."""
+    book = codebook(cents)
+    assigned = persist_artifact(assign_cells(base, book))
+    probes = (
+        _with_cell_ranking(queries, book)
+        .select(
+            F.col("vec_id").alias("qid"),
+            F.explode(F.slice(F.col("_csims"), 1, nprobe)).alias("_s"),
+        )
+        .select("qid", (-F.col("_s")["ncid"]).alias("cell"))
+    )
+    return (
+        probes.join(assigned, ["cell"])
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", F.col("vec_id").alias("nid"))
+        .distinct()
     )
 
 
@@ -652,7 +727,7 @@ def refined_centroids(emb: DataFrame, cents: DataFrame, n_iter: int) -> DataFram
     are not re-normalized (spherical k-means without the projection).
     Cells that lose every member disappear (join semantics both sides)."""
     for _ in range(n_iter):
-        assigned = _assign_cells(emb, cents)
+        assigned = assign_cells(emb, codebook(cents))
         members = emb.join(assigned, "vec_id")
         sums = (
             members.select("cell", F.posexplode(F.col("v")).alias("i0", "x"))
@@ -687,21 +762,14 @@ def ivf_topk(
     kmeans_iters: int = 0,
 ) -> DataFrame:
     """ANN top-k via IVF (inverted-file) coarse quantization: every corpus
-    vector is assigned to its nearest centroid cell; a query probes only
-    its ``nprobe`` nearest cells and exact-re-ranks the candidates.
-
-    The coarse quantizer is deterministic: one representative vector per
-    corpus cluster (min vec_id per ``label`` -- the stand-in for an
-    offline-trained k-means codebook, which is how IVF centroids are
-    produced in production; falls back to vec_id % IVF_STRIDE when no
-    label column exists). Deterministic selection lets the DuckDB oracle
-    mirror the quantizer exactly. At 100 TB the assignment is one
-    broadcast-centroids map stage writing a cell-partitioned (bucketed)
-    table; queries touch nprobe cells -- cost scales with cell
+    vector is assigned to its nearest centroid cell (label_centroids,
+    optionally refined by ``kmeans_iters`` Lloyd rounds); a query probes
+    only its ``nprobe`` nearest cells (cell_probe) and exact-re-ranks
+    the candidates. Queries touch nprobe cells -- cost scales with cell
     occupancy, not corpus size."""
     emb = prepared(embeddings)
     cand = _ivf_candidates(embeddings, emb, query_max_id, nprobe, kmeans_iters)
-    return _topk(_rejoin_cosine(cand, emb, "qid", "nid", "qv", "nv"), k)
+    return _rerank(cand, emb, k)
 
 
 def _ivf_candidates(
@@ -711,49 +779,13 @@ def _ivf_candidates(
     nprobe: int,
     kmeans_iters: int = 0,
 ) -> DataFrame:
-    """(qid, nid) candidate pairs from the IVF probe -- the candidate
-    generation of ivf_topk, extracted verbatim (r13) so the hybrid can
-    union it with the int8 safety net; ivf_topk's plan is unchanged."""
-    if "label" in embeddings.columns:
-        reps = embeddings.groupBy("label").agg(F.min("vec_id").alias("rep_id"))
-        cent_ids = reps.select(F.col("rep_id").alias("vec_id"))
-        cents = emb.join(F.broadcast(cent_ids), "vec_id").select(
-            F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
-        )
-    else:
-        cents = emb.filter(F.col("vec_id") % IVF_STRIDE == 0).select(
-            F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm")
-        )
+    """(qid, nid) candidates of ivf_topk's probe for the fixed query
+    panel vec_id < query_max_id (also the hybrid's IVF leg)."""
+    cents = label_centroids(embeddings, emb)
     if kmeans_iters > 0:
         cents = persist_artifact(refined_centroids(emb, cents, kmeans_iters))
-    # assignment: fetch the (tiny) codebook, argmax cosine per row --
-    # one Arrow dots stage + a per-row C-way sort, NO N x C crossJoin
-    # and NO per-vec_id window exchange (the old shape shuffled N x C
-    # rows to rank cells; the rank is now map-side). Carried through as
-    # ids only -- vectors re-joined at scoring time. The corpus-side
-    # assignment runs ONCE and is persisted (the build-once cell
-    # assignment -- at 100 TB, a bucketed-by-cell table written per
-    # corpus snapshot); the probe side ranks only the query rows.
-    book = _codebook(cents)
-    assigned = persist_artifact(
-        _with_cell_ranking(emb, book).select(
-            "vec_id",
-            (-F.element_at(F.col("_csims"), 1)["ncid"]).alias("cell"),
-        )
-    )
-    probes = (
-        _with_cell_ranking(emb.filter(F.col("vec_id") < query_max_id), book)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.explode(F.slice(F.col("_csims"), 1, nprobe)).alias("_s"),
-        )
-        .select("qid", (-F.col("_s")["ncid"]).alias("cell"))
-    )
-    return (
-        probes.join(assigned, ["cell"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", F.col("vec_id").alias("nid"))
-        .distinct()
+    return cell_probe(
+        emb, emb.filter(F.col("vec_id") < query_max_id), cents, nprobe
     )
 
 
@@ -814,32 +846,13 @@ def sq8_topk(
     At 100 TB the approximate pass reads 1/4 the bytes of a float scan
     and the exact pass touches only pool * n_queries vectors."""
     emb = prepared(embeddings)
-    cand = _sq8_pool_candidates(emb, pool, query_max_id)
-    # Exact re-rank of the <= pool * Q survivors, also via the shared
-    # two-phase path (cosine pre-rounded to 6 by _rejoin_cosine), so the
-    # whole sq8 plan is Window-free -- tools/explain_audit.py forbids
-    # Window for this query. Same (cosine DESC, nid ASC) order and int
-    # rank as the _topk window it replaces. bounded_input: the pool cut
-    # directly above emits <= SQ8_POOL rows per qid BY CONSTRUCTION, so
-    # the re-rank's merge aggregate is already constant-bounded and the
-    # salted phase 1 would only add an exchange (r13: reclaims part of
-    # the two-phase re-plan's constant stage overhead; the hybrids keep
-    # the salted form because their IVF candidate legs are cell-sized,
-    # not constant-bounded).
-    ranked = two_phase_topk(
-        _rejoin_cosine(cand, emb, "qid", "nid", "qv", "nv").select(
-            "qid", "nid", "cosine"
-        ),
-        "qid",
-        k,
-        SQ8_SALT,
-        bounded_input=True,
-    )
-    return ranked.select(
-        F.col("qid").alias("query_id"),
-        F.col("nid").alias("neighbor_id"),
-        "cosine",
-        F.col("rank").cast("int").alias("rank"),
+    # bounded_input: the pool cut emits <= pool rows per qid BY
+    # CONSTRUCTION, so the re-rank's merge aggregate is already
+    # constant-bounded and the salted phase 1 would only add an
+    # exchange (the hybrids keep the salted form: their IVF legs are
+    # cell-sized, not constant-bounded)
+    return _rerank(
+        _sq8_pool_candidates(emb, pool, query_max_id), emb, k, bounded_input=True
     )
 
 
@@ -850,16 +863,13 @@ def _sq8_pool_candidates(
     *,
     query_cond=None,
     corpus_cond=None,
-    self_exclude: bool = True,
 ) -> DataFrame:
-    """(qid, nid) candidate pairs from the int8 approximate pass -- the
-    pool cut of sq8_topk, extracted (r13) so the IVF hybrids can union
-    it as their exact safety net; sq8_topk's plan is unchanged. The
-    query side is either ``vec_id < query_max_id`` (the fixed-panel
-    form) or an arbitrary ``query_cond`` (the delta form), and
-    ``corpus_cond`` restricts the scanned side (e.g. the base corpus in
-    the incremental path, where ``self_exclude`` is redundant because
-    the sides are disjoint by construction)."""
+    """(qid, nid) candidate pairs from the int8 approximate pass: the
+    pool cut of sq8_topk and the exact safety net the IVF hybrids union
+    in. The query side is either ``vec_id < query_max_id`` (the
+    fixed-panel form) or an arbitrary ``query_cond`` (the delta form),
+    and ``corpus_cond`` restricts the scanned side (e.g. the base
+    corpus in the incremental path)."""
     qc = sq8_corpus(emb)
     if query_cond is None:
         query_cond = F.col("vec_id") < query_max_id
@@ -876,11 +886,8 @@ def _sq8_pool_candidates(
     scored = (
         corpus.join(nrms, ["vec_id"])
         .crossJoin(F.broadcast(q.join(qn, ["qid"])))
-    )
-    if self_exclude:
-        scored = scored.filter(F.col("vec_id") != F.col("qid"))
-    scored = (
-        scored.select(
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select(
             "qid",
             F.col("vec_id").alias("nid"),
             (
@@ -889,18 +896,14 @@ def _sq8_pool_candidates(
             ).alias("acos"),
         )
     )
-    # Pool cut through the shared salted two-phase top-k (r12 weak-grade
-    # fix): the old row_number().over(partitionBy("qid")) hash-exchanged
-    # all N x Q scored rows into exactly Q partitions and sorted the
-    # whole corpus inside each query's single task -- parallelism capped
-    # at the panel width no matter the cluster size. two_phase_topk
-    # bounds every (qid, salt) group map-side and merges <= SQ8_SALT *
-    # pool rows per query. acos needs no pre-rounding here: the int8 dot
-    # is exact and order-free and the scale division is one fixed
-    # per-row expression, so every row's acos is bit-stable under any
-    # partitioning; struct(acos DESC, nid ASC) == the old window's
-    # (acos DESC, nid ASC) order, making the pool set -- and therefore
-    # the output -- bit-identical to the r10-certified values.
+    # Pool cut through the shared salted two-phase top-k: a per-qid
+    # window would hash-exchange all N x Q scored rows into exactly Q
+    # partitions and sort the whole corpus inside each query's single
+    # task. two_phase_topk bounds every (qid, salt) group map-side and
+    # merges <= SQ8_SALT * pool rows per query. acos needs no
+    # pre-rounding here: the int8 dot is exact and order-free and the
+    # scale division is one fixed per-row expression, so every row's
+    # acos is bit-stable under any partitioning.
     return two_phase_topk(
         scored.select("qid", "nid", F.col("acos").alias("cosine")),
         "qid",
@@ -950,21 +953,7 @@ def ivf_sq8_hybrid_topk(
         .unionByName(_sq8_pool_candidates(emb, pool, query_max_id))
         .distinct()
     )
-    ranked = two_phase_topk(
-        _rejoin_cosine(cand, emb, "qid", "nid", "qv", "nv").select(
-            "qid", "nid", "cosine"
-        ),
-        "qid",
-        k,
-        SQ8_SALT,
-    )
-    return ranked.select(
-        F.col("qid").alias("query_id"),
-        F.col("nid").alias("neighbor_id"),
-        "cosine",
-        F.col("rank").cast("int").alias("rank"),
-    )
-
+    return _rerank(cand, emb, k)
 
 
 def ivf_probe_delta(
@@ -991,16 +980,16 @@ def ivf_probe_delta(
     run of the PINNED quantizer measured the alternative: width grows
     with N, 10k deltas x 20k-wide cells = a 400M-row candidate sort
     that spilled past local disk). n_base comes from one pruned-scan
-    count -- an index-BUILD action, same offline class as the
-    _codebook collect. Delta vectors rank cells map-side against the
-    in-closure codebook (same zero-N-x-C shape as ivf_topk), probe
-    nprobe cells, and exact-re-rank the candidates. No self-hit filter
-    is needed: the delta is disjoint from the base by construction.
-    The oracle mirrors the quantizer exactly (GROUP BY label, vec_id %
-    S with S from the same count)."""
+    count -- an index-BUILD action, same offline class as the codebook
+    collect. Delta vectors probe the base's cells through cell_probe
+    (same zero-N-x-C shape as ivf_topk) and exact-re-rank the
+    candidates; its self-hit filter never drops a row here, since the
+    delta is disjoint from the base by construction. The oracle mirrors
+    the quantizer exactly (GROUP BY label, vec_id % S with S from the
+    same count)."""
     emb = prepared(embeddings)
     cand = _ivf_delta_candidates(embeddings, emb, delta_mod, nprobe, cell_target)
-    return _topk(_rejoin_cosine(cand, emb, "qid", "nid", "qv", "nv"), k)
+    return _rerank(cand, emb, k)
 
 
 def _ivf_delta_candidates(
@@ -1011,11 +1000,9 @@ def _ivf_delta_candidates(
     cell_target: int,
     query_cap: int | None = None,
 ) -> DataFrame:
-    """(qid, nid) candidate pairs of the incremental IVF probe -- the
-    candidate generation of ivf_probe_delta, extracted verbatim (r13)
-    so the incremental hybrid can union it with the int8 net;
-    ivf_probe_delta's plan is unchanged. ``query_cap`` additionally
-    bounds the delta query panel (vec_id < cap) for certification-cost
+    """(qid, nid) candidates of ivf_probe_delta's probe (also the
+    incremental hybrid's IVF leg). ``query_cap`` additionally bounds
+    the delta query panel (vec_id < cap) for certification-cost
     reasons -- the RAG_QUERY_CAP precedent; None = the full delta."""
     is_delta = F.col("vec_id") % delta_mod == 0
     base = emb.filter(~is_delta)
@@ -1029,33 +1016,7 @@ def _ivf_delta_candidates(
         raw_base.groupBy("label", F.pmod(F.col("vec_id"), F.lit(sub)).alias("_sg"))
         .agg(F.min("vec_id").alias("rep_id"))
     )
-    cents = base.join(
-        F.broadcast(reps.select(F.col("rep_id").alias("vec_id"))), "vec_id"
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    book = _codebook(cents)
-    assigned = persist_artifact(
-        _with_cell_ranking(base, book).select(
-            "vec_id",
-            (-F.element_at(F.col("_csims"), 1)["ncid"]).alias("cell"),
-        )
-    )
-    probes = (
-        _with_cell_ranking(dq, book)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.explode(F.slice(F.col("_csims"), 1, nprobe)).alias("_s"),
-        )
-        .select("qid", (-F.col("_s")["ncid"]).alias("cell"))
-    )
-    return (
-        probes.join(assigned, ["cell"])
-        .select("qid", F.col("vec_id").alias("nid"))
-        .distinct()
-    )
+    return cell_probe(base, dq, _rep_centroids(base, reps), nprobe)
 
 
 def ivf_sq8_hybrid_delta(
@@ -1072,9 +1033,9 @@ def ivf_sq8_hybrid_delta(
     delta_mod == 0, the corpus_ops DELTA_MOD convention) probes the
     standing IVF index exactly as ivf_probe_delta does, UNIONED with
     the int8 two-phase pool of the same delta queries against the BASE
-    corpus (the exact safety net), one shared exact re-rank. No
-    self-hit handling is needed anywhere: delta and base are disjoint
-    by construction.
+    corpus (the exact safety net), one shared exact re-rank. The
+    legs' self-hit filters never drop a row here: delta and base are
+    disjoint by construction.
 
     The net is what the probe path cannot give: a per-query min-recall
     guarantee. IVFROUTE_r13.json showed the quantizer-resolution-bound
@@ -1102,26 +1063,9 @@ def ivf_sq8_hybrid_delta(
         )
         .unionByName(
             _sq8_pool_candidates(
-                emb,
-                pool,
-                query_cond=qcond,
-                corpus_cond=~is_delta,
-                self_exclude=False,
+                emb, pool, query_cond=qcond, corpus_cond=~is_delta
             )
         )
         .distinct()
     )
-    ranked = two_phase_topk(
-        _rejoin_cosine(cand, emb, "qid", "nid", "qv", "nv").select(
-            "qid", "nid", "cosine"
-        ),
-        "qid",
-        k,
-        SQ8_SALT,
-    )
-    return ranked.select(
-        F.col("qid").alias("query_id"),
-        F.col("nid").alias("neighbor_id"),
-        "cosine",
-        F.col("rank").cast("int").alias("rank"),
-    )
+    return _rerank(cand, emb, k)

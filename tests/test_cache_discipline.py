@@ -112,6 +112,13 @@ class TestUnpersistDiscipline:
             spark, similarity.sq8_topk(_load_emb(spark), k=5, query_max_id=5)
         )
 
+    def test_ivf_sq8_hybrid_delta_release(self, spark):
+        from groove_to_helpscout_migration_tool_spark.operators import similarity
+
+        self._assert_released(
+            spark, similarity.ivf_sq8_hybrid_delta(_load_emb(spark), k=5)
+        )
+
     def test_bloom_decontaminate_release(self, spark):
         from groove_to_helpscout_migration_tool_spark.catalog import curation_ops
 

@@ -24,6 +24,15 @@ SAMPLE = [
     "llm_dedup_clusters",
     "llm_ann_ivf_topk",
     "llm_multimodal_decode",
+    "llm_ann_lsh_topk",
+    "llm_ann_ivf_kmeans_topk",
+    "llm_ann_quantized_topk",
+    "llm_ann_ivf_hybrid_topk",
+    "llm_ann_incremental_ivf",
+    "llm_ann_incremental_hybrid",
+    "llm_hard_negatives_ivf",
+    "llm_cluster_kmeans_assign",
+    "llm_semantic_dedup_clusters",
 ]
 
 

@@ -73,10 +73,15 @@ AUDIT = {
     "q_distinct_users_approx": (["approx_count_distinct"], ["Expand", "count\\(distinct"]),
     # IVF (r5): cell assignment is codebook-closure + per-row rank; the
     # old N x C crossJoin/BroadcastNestedLoop and the per-vec_id window
-    # exchange must never reappear
-    # (the surviving Window is the per-QUERY top-k; a window partitioned
-    # by vec_id would be the old N x C corpus-wide assignment rank)
-    "llm_ann_ivf_topk": (["ArrowEvalPython|EvalPython"], ["CartesianProduct", "BroadcastNestedLoopJoin", "Window \\[[^\\]]*vec_id"]),
+    # exchange must never reappear. Every ANN top-k re-ranks through the
+    # salted two-phase aggregate (similarity._rerank), so the plan has
+    # no Window at all -- neither a per-query top-k nor a corpus-wide
+    # assignment rank
+    "llm_ann_ivf_topk": (["ArrowEvalPython|EvalPython"], ["CartesianProduct", "BroadcastNestedLoopJoin", "Window"]),
+    "llm_ann_ivf_kmeans_topk": (["ArrowEvalPython|EvalPython"], ["Window", "CartesianProduct"]),
+    # LSH ANN: Arrow-batched hyperplane dots and pair scoring, bucket
+    # equi-join candidates, the same window-free re-rank
+    "llm_ann_lsh_topk": (["ArrowEvalPython|EvalPython"], ["Window", "CartesianProduct"]),
     # brute-force ANN baseline (re-planned r9): corpus streams once
     # through the Arrow query-matrix stage; top-k is the salted
     # two-phase aggregate -- never a corpus-sized window partition per
@@ -284,10 +289,10 @@ AUDIT = {
     # never shuffle, window, or real-cartesian
     "llm_embedding_outlier": (["BroadcastNestedLoopJoin", "HashAggregate"], ["Window", "CartesianProduct", "SortMergeJoin"]),
     # r7 incremental IVF: delta ranks cells map-side against the
-    # in-closure codebook -- the N x C crossJoin and a per-corpus-vector
-    # window must never appear (same contract as llm_ann_ivf_topk; the
-    # surviving Window is the per-delta-query top-k)
-    "llm_ann_incremental_ivf": (["ArrowEvalPython|EvalPython"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
+    # in-closure codebook -- the N x C crossJoin and any window must
+    # never appear (same contract as llm_ann_ivf_topk: the per-delta-
+    # query top-k is the window-free re-rank)
+    "llm_ann_incremental_ivf": (["ArrowEvalPython|EvalPython"], ["CartesianProduct", "BroadcastNestedLoopJoin", "Window"]),
     # r7 full-outer reconciliation: both sides aggregate BEFORE the
     # join (agg-then-join); FullOuter on the day partials, no window
     "s04_full_outer_ship_reconciliation": (["FullOuter", "HashAggregate"], ["Window", "CartesianProduct", "Exchange rangepartitioning"]),
