@@ -240,8 +240,14 @@ _CHANGED = {
     # local checkpoint and hash attachments before the message join;
     # values identical (hash-green at sf0.01), plans changed.
     "q11_important_stock": 15,  # overrides the round-13 entry above
-    "ref_pipeline_sync_customers": 15,
-    "ref_pipeline_sync_tickets": 15,
+    # round 15 (continued): the pipelines' error side-channel runs through
+    # operators/errors.py (with_error + split_errors for skipped records,
+    # warning_rows for warnings); sorted customers, warnings,
+    # conversations and errors identical on the fixtures, plans changed.
+    "ref_pipeline_sync_customers": 15,  # checkpointed input; five warning branches -> warning_rows
+    "ref_pipeline_sync_tickets": 15,  # checkpointed inputs; error strings -> with_error/split_errors
+    "ref_a2_error_grouping": 15,  # hand-written groupBy -> group_error_report
+    "ref_k4_error_csv_export": 15,  # writes write_error_csv's (type, detail) rows, counts the read-back
     # round 15: the ANN family became (qid, nid) candidate generators
     # plus one exact re-rank (similarity._rerank: the salted
     # two_phase_topk), with one IVF cell probe (cell_probe) and one

@@ -29,6 +29,7 @@ from ..functions import (
     to_iso8601,
     truncate_with_flag,
 )
+from ..operators.errors import group_error_report
 from ..registry import register
 from ..session import load_tables
 
@@ -794,9 +795,8 @@ def ref_a2_error_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("error_type"),
         F.concat(F.lit("order-"), F.col("o_orderkey")).alias("detail"),
     )
-    return errors.groupBy("error_type").agg(
-        F.count(F.lit(1)).alias("n_occurrences"),
-        F.array_join(F.array_sort(F.collect_list("detail")), "|").alias("details_joined"),
+    return group_error_report(errors).select(
+        "error_type", "n_occurrences", F.array_join("details", "|").alias("details_joined")
     )
 
 

@@ -29,6 +29,7 @@ from ..functions import (
 )
 from ..multimodal.decode import sniff_mime
 from ..operators.cache import persist_artifact
+from ..operators.errors import write_error_csv
 from ..registry import register
 from ..session import load_tables
 
@@ -920,28 +921,24 @@ SELECT error_type, count(*) AS n FROM errors GROUP BY error_type
 )
 def ref_k4_error_csv_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["orders"])
-    errors = (
-        t.orders.filter(F.col("o_orderkey") % 23 == 0)
-        .select(
-            F.element_at(
-                F.array(
-                    F.lit("ValidationException"),
-                    F.lit("RateLimitException"),
-                    F.lit("CurlException"),
-                ),
-                (F.col("o_orderkey") % 3).cast("int") + 1,
-            ).alias("error_type"),
-            F.concat(F.lit("order-"), "o_orderkey").alias("detail"),
-        )
-        .groupBy("error_type")
-        .agg(F.count(F.lit(1)).alias("n"))
+    errors = t.orders.filter(F.col("o_orderkey") % 23 == 0).select(
+        F.element_at(
+            F.array(
+                F.lit("ValidationException"),
+                F.lit("RateLimitException"),
+                F.lit("CurlException"),
+            ),
+            (F.col("o_orderkey") % 3).cast("int") + 1,
+        ).alias("error_type"),
+        F.concat(F.lit("order-"), "o_orderkey").alias("detail"),
     )
     out = os.path.join("/tmp", "spark_graft_exports", "sync-errors-csv")
-    errors.coalesce(1).write.mode("overwrite").option("header", True).csv(out)
+    write_error_csv(errors, out)
     schema = T.StructType(
-        [T.StructField("error_type", T.StringType()), T.StructField("n", T.LongType())]
+        [T.StructField("error_type", T.StringType()), T.StructField("detail", T.StringType())]
     )
-    return errors.sparkSession.read.option("header", True).schema(schema).csv(out)
+    written = errors.sparkSession.read.option("header", True).schema(schema).csv(out)
+    return written.groupBy("error_type").agg(F.count(F.lit(1)).alias("n"))
 
 
 # ---------------------------------------------------------------------------

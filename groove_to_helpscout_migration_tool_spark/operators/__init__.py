@@ -1,18 +1,16 @@
-"""Engine operators: error side-channel, lookup joins, dedup, group-back,
-similarity. These are the composable building blocks the pipelines in
-plans/ assemble."""
+"""Engine operators: error side-channel, validation and dedup joins,
+dedup, group-back, similarity. These are the composable building blocks
+the pipelines in plans/ assemble."""
 
 from .cache import persist_artifact, unpersist_artifacts
 from .errors import (
-    ERROR_SCHEMA,
     with_error,
     split_errors,
+    warning_rows,
     group_error_report,
     write_error_csv,
 )
 from .joins import (
-    broadcast_lookup,
-    lookup_with_default,
     validation_anti_join,
     dedup_anti_join,
     run_validations,
@@ -22,13 +20,11 @@ from .joins import (
 __all__ = [
     "persist_artifact",
     "unpersist_artifacts",
-    "ERROR_SCHEMA",
     "with_error",
     "split_errors",
+    "warning_rows",
     "group_error_report",
     "write_error_csv",
-    "broadcast_lookup",
-    "lookup_with_default",
     "validation_anti_join",
     "dedup_anti_join",
     "run_validations",

@@ -1,15 +1,24 @@
 """Error side-channel convention (SURVEY.md T4, A2, K4).
 
 The reference never aborts on a bad record: each failure is captured as
-(error_type, detail), the record is skipped, and at the end errors are
-grouped by message and exported to CSV (TicketPublisher.php:56-90;
-APIHelper.php:241-261). Here the convention is a pair of DataFrames:
-the ok-rows flow on, the error-rows accumulate via unionByName -- never
-a Python-side try/except per row, so the hot path stays in codegen.
+(error_type, detail), and at the end errors are grouped by message and
+exported to CSV (TicketPublisher.php:56-90; APIHelper.php:241-261). Here
+both kinds of side-channel row are column expressions -- never a
+Python-side try/except per row, so the hot path stays in codegen:
 
-Scale: error rows are a tiny side output; the split is two passes over
-the same cached/filtered plan (Catalyst shares the scan), and the final
-grouping shuffles only (type, detail) strings.
+  * a record-skipping error: ``with_error`` tags the row with its first
+    failed check (the reference's first-failure-skips order) and one
+    ``split_errors`` splits the tagged frame into ok rows and error rows;
+  * a record-continuing warning: ``warning_rows`` emits one row per
+    condition that holds, several for one record if several hold.
+
+Scale: ``split_errors`` returns two filters over one tagged plan, and
+nothing is cached between them: the errors action and the publish each
+evaluate the plan above the inputs' own checkpoints. A lazy checkpoint of
+the tagged frame would let them share one pass, but it cuts the query
+there: the ticket plan's 7 broadcast hints vanish from the analyzed plan
+below it, and observations upstream of it (``tickets_in``) stop counting.
+The final grouping shuffles only (type, detail) strings.
 """
 
 from __future__ import annotations
@@ -21,29 +30,34 @@ ERROR_COL = "_error"
 ERROR_SCHEMA = "struct<error_type:string,detail:string>"
 
 
-def with_error(df: DataFrame, condition: Column, error_type: Column | str, detail: Column) -> DataFrame:
-    """Tag rows where ``condition`` holds with an error struct (idempotent:
-    an earlier tag wins, mirroring the reference's first-failure-skips)."""
-    if isinstance(error_type, str):
-        error_type = F.lit(error_type)
-    err = F.struct(error_type.alias("error_type"), detail.alias("detail"))
+def _entry(error_type: str, detail: Column) -> Column:
+    return F.struct(F.lit(error_type).alias("error_type"), detail.alias("detail"))
+
+
+def with_error(df: DataFrame, checks: list[tuple[Column, str, Column]]) -> DataFrame:
+    """Tag each row with the ``(error_type, detail)`` of the first
+    ``(condition, error_type, detail)`` check that holds on it, in one
+    projection. An earlier tag wins (a tag from a previous call, then the
+    list order), mirroring the reference's first-failure-skips."""
     existing = F.col(ERROR_COL) if ERROR_COL in df.columns else F.lit(None).cast(ERROR_SCHEMA)
-    return df.withColumn(ERROR_COL, F.coalesce(existing, F.when(condition, err)))
+    tags = [F.when(cond, _entry(etype, detail)) for cond, etype, detail in checks]
+    return df.withColumn(ERROR_COL, F.coalesce(existing, *tags))
 
 
 def split_errors(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """-> (ok_rows without the tag column, error_rows as (error_type, detail))."""
-    if ERROR_COL not in df.columns:
-        return df, df.sparkSession.createDataFrame([], "error_type string, detail string")
+    """``with_error``'s tagged frame -> (ok_rows without the tag column,
+    error_rows as (error_type, detail))."""
     ok = df.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
-    errs = (
-        df.filter(F.col(ERROR_COL).isNotNull())
-        .select(
-            F.col(f"{ERROR_COL}.error_type").alias("error_type"),
-            F.col(f"{ERROR_COL}.detail").alias("detail"),
-        )
-    )
+    errs = df.filter(F.col(ERROR_COL).isNotNull()).select(f"{ERROR_COL}.*")
     return ok, errs
+
+
+def warning_rows(df: DataFrame, warnings: list[tuple[Column, str, Column]]) -> DataFrame:
+    """-> (error_type, detail), one row per ``(condition, error_type,
+    detail)`` that holds on a row of ``df``; the record itself carries on.
+    One pass: each row's entries are filtered and exploded together."""
+    entries = F.array(*[F.when(cond, _entry(etype, detail)) for cond, etype, detail in warnings])
+    return df.select(F.inline(F.filter(entries, lambda e: e.isNotNull())))
 
 
 def group_error_report(errors: DataFrame) -> DataFrame:
@@ -54,7 +68,7 @@ def group_error_report(errors: DataFrame) -> DataFrame:
     )
 
 
-def write_error_csv(errors: DataFrame, path: str, job_name: str = "sync") -> None:
+def write_error_csv(errors: DataFrame, path: str) -> None:
     """K4: flatten the grouped report back to (type, detail) rows and write
     CSV (the reference stamps sync-tickets-YmdHis; the caller passes the
     stamped path so results stay deterministic/testable)."""

@@ -66,13 +66,6 @@ HYPERPLANES: list[list[int]] = [
 ]
 
 
-def _plane_dot(v, plane: list[int]):
-    signs = F.array(*[F.lit(float(s)) for s in plane])
-    return F.aggregate(
-        F.zip_with(v, signs, lambda x, s: x * s), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
 _PLANES_NP = None  # lazy; built after HYPERPLANES below
 
 

@@ -11,8 +11,8 @@ tickets) stalls the stage. Mitigations, in preference order:
      the skew is too extreme for AQE's split granularity: append a salt
      in [0, n) to the fact side, replicate the other side n times, join
      on (key, salt). The hot key now spreads over n tasks; the cost is
-     n-fold replication of the non-fact side, so salt ONLY hot keys when
-     the hot set is known (hybrid below).
+     n-fold replication of the non-fact side, so when the hot set is
+     known, salt only the hot slice and join the long tail unsalted.
 
 The salt here is DETERMINISTIC (pmod of a caller-chosen column), never
 rand(): results must be reproducible and oracle-checkable; randomness
@@ -41,23 +41,3 @@ def salted_join(
     facts_s = facts.withColumn("_salt", F.pmod(salt_src, F.lit(n_salts)).cast("int"))
     other_s = other.select("*", salts)
     return facts_s.join(other_s, [key, "_salt"], how).drop("_salt")
-
-
-def salted_hot_key_join(
-    facts: DataFrame,
-    other: DataFrame,
-    key: str,
-    hot_keys: list,
-    salt_src: Column,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Hybrid salting: only the known-hot keys are salted (n-fold
-    replication restricted to the hot slice of ``other``); the long tail
-    joins unsalted. This is the shape that survives 100 TB -- the
-    replication cost is |hot_keys| * n_salts rows, not |other| * n."""
-    is_hot = F.col(key).isin(hot_keys)
-    hot = salted_join(
-        facts.filter(is_hot), other.filter(is_hot), key, salt_src, n_salts
-    )
-    cold = facts.filter(~is_hot).join(other.filter(~is_hot), key)
-    return hot.unionByName(cold)

@@ -3,13 +3,14 @@ app/Console/Commands/SyncCustomers.php + Processors/CustomerProcessor.php).
 
 Groove customer -> HelpScout Customer struct (P1-P5) as one declarative
 select -- map-only ETL, zero shuffles, fully codegen'd. Warnings
-(truncations) go to the side-channel; nothing aborts a record.
+(truncations, unsplittable emails) go to the side-channel in one pass
+(operators/errors.warning_rows); nothing aborts a record.
 
 Scale: the acquire boundary. The input is read once: a lazy local
 checkpoint at the top of the plan is filled by the caller's first action
-(the warnings collect), and the five warning branches and the publish
-read its blocks, so no Groove page is fetched twice. Observations sit
-above it, so ``customers_in`` counts each input row once.
+(the warnings collect), and the publish reads its blocks, so no Groove
+page is fetched twice. Observations sit above it, so ``customers_in``
+counts each input row once.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions import split_and_validate_emails, split_full_name, truncate_with_flag
 from ..observability import PipelineMetrics
+from ..operators import warning_rows
 
 NAME_CAP = 40   # APIHelper.php:180-189
 ORG_CAP = 60    # CustomerProcessor.php:65-68
@@ -101,20 +103,14 @@ def transform_customers(
         "_w_org": "organization truncated to 60 chars",
         "_w_title": "job title truncated to 60 chars",
     }
-    warnings = None
-    for col, msg in warn_cols.items():
-        w = staged.filter(F.coalesce(F.col(col), F.lit(False))).select(
-            F.lit("TruncationWarning").alias("error_type"),
-            F.concat(F.lit(msg + " for "), F.col("source_email")).alias("detail"),
-        )
-        warnings = w if warnings is None else warnings.unionByName(w)
-    invalid = staged.filter(~F.col("_emails_valid")).select(
-        F.lit("InvalidEmailWarning").alias("error_type"),
-        F.concat(F.lit("unsplittable email kept verbatim: "), F.col("source_email")).alias("detail"),
-    )
-    warnings = warnings.unionByName(invalid)
+    warnings = warning_rows(staged, [
+        *[(F.col(c), "TruncationWarning", F.concat(F.lit(msg + " for "), F.col("source_email")))
+          for c, msg in warn_cols.items()],
+        (~F.col("_emails_valid"), "InvalidEmailWarning",
+         F.concat(F.lit("unsplittable email kept verbatim: "), F.col("source_email"))),
+    ])
 
-    out = staged.drop(*warn_cols.keys(), "_emails_valid")
+    out = staged.drop(*warn_cols, "_emails_valid")
     if metrics is not None:
         out = metrics.track(out, "customers_out")
         warnings = metrics.track(warnings, "warnings_out")

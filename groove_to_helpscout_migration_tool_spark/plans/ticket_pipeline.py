@@ -45,7 +45,14 @@ from ..functions import (
     to_iso8601,
 )
 from ..observability import PipelineMetrics
-from ..operators import dedup_anti_join, run_validations, validation_anti_join
+from ..operators import (
+    dedup_anti_join,
+    run_validations,
+    split_errors,
+    validation_anti_join,
+    warning_rows,
+    with_error,
+)
 
 ATTACH_SIZE_CAP = 10_485_760  # TicketProcessor.php:301
 ATTACH_MSG_RE = r"attachments\?message=(.*)$"
@@ -201,26 +208,18 @@ def build_conversations(
         )
     )
 
-    # per-record conversation errors (T4: record skipped, pipeline continues)
-    conv_error = (
-        F.when(F.col("links.customer.href").isNull(),
-               F.lit("ValidationException: ticket has no customer link"))
-        .when(F.col("customer_ref").isNull(),
-              F.lit("ValidationException: customer could not be resolved"))
-        .when(F.col("status").isNull(),
-              F.lit("ValidationException: unknown ticket state"))
-        .when(F.col("mailbox_id").isNull(),
-              F.lit("ValidationException: no mailbox and no default"))
-    )
-    base = base.withColumn("_conv_error", conv_error)
-    conv_errors = base.filter(F.col("_conv_error").isNotNull()).select(
-        F.split(F.col("_conv_error"), ": ")[0].alias("error_type"),
-        F.concat(
-            F.split(F.col("_conv_error"), ": ")[1],
-            F.lit(" [ticket "), F.col("number"), F.lit(": "), F.col("summary"), F.lit("]"),
-        ).alias("detail"),
-    )
-    good = base.filter(F.col("_conv_error").isNull())
+    # per-record conversation errors (T4: record skipped, pipeline
+    # continues); the first failing check names the error
+    ticket = F.concat(F.lit(" [ticket "), F.col("number"), F.lit(": "), F.col("summary"), F.lit("]"))
+    good, conv_errors = split_errors(with_error(base, [
+        (failed, "ValidationException", F.concat(F.lit(msg), ticket))
+        for failed, msg in [
+            (F.col("links.customer.href").isNull(), "ticket has no customer link"),
+            (F.col("customer_ref").isNull(), "customer could not be resolved"),
+            (F.col("status").isNull(), "unknown ticket state"),
+            (F.col("mailbox_id").isNull(), "no mailbox and no default"),
+        ]
+    ]))
 
     # ---- Phase 4: threads (S5 fan-out already materialized as messages) ----
     msgs = groove.messages.withColumn(
@@ -305,22 +304,16 @@ def build_conversations(
         ),
     )
 
-    # thread-level error: agent author with no HS user (J3 miss)
-    msgs = msgs.withColumn(
-        "_thread_error",
-        F.when(
-            (F.col("author_kind") == "agent") & F.col("u_id").isNull(),
-            F.concat(F.lit("ValidationException: no HelpScout user for author of message "), F.col("message_id")),
-        ).when(
-            F.col("author_kind") == "error",
-            F.concat(F.lit("ValidationException: unparseable author href on message "), F.col("message_id")),
-        ),
-    )
-    thread_errors = msgs.filter(F.col("_thread_error").isNotNull()).select(
-        F.lit("ValidationException").alias("error_type"),
-        F.regexp_replace(F.col("_thread_error"), "^ValidationException: ", "").alias("detail"),
-    )
-    good_msgs = msgs.filter(F.col("_thread_error").isNull())
+    # thread-level errors: agent author with no HS user (J3 miss), or an
+    # author href that parses to no known kind
+    good_msgs, thread_errors = split_errors(with_error(msgs, [
+        (failed, "ValidationException", F.concat(F.lit(msg), F.col("message_id")))
+        for failed, msg in [
+            ((F.col("author_kind") == "agent") & F.col("u_id").isNull(),
+             "no HelpScout user for author of message "),
+            (F.col("author_kind") == "error", "unparseable author href on message "),
+        ]
+    ]))
 
     # ---- Phase 5: attachments (S6/S13/K3/P13/P14/P15) ----
     att_msgs = good_msgs.withColumn(
@@ -331,14 +324,14 @@ def build_conversations(
         "ticket_number", "message_id", "att_msg_id", "conv_status"
     ).join(atts, F.col("att_msg_id") == F.col("att_src_msg_id"), "inner")
 
-    # P14 size warnings (side output, record continues)
-    size_warnings = sniffed.filter(F.col("size") > ATTACH_SIZE_CAP).select(
-        F.lit("AttachmentSizeWarning").alias("error_type"),
-        F.concat(
-            F.col("filename"), F.lit(" is "), F.col("size"),
-            F.lit(" bytes (cap "), F.lit(ATTACH_SIZE_CAP), F.lit(")"),
-        ).alias("detail"),
-    )
+    # P14 oversize and P15 failed download: side output, record continues
+    attach_warnings = warning_rows(sniffed, [
+        (F.col("size") > ATTACH_SIZE_CAP, "AttachmentSizeWarning",
+         F.concat(F.col("filename"), F.lit(" is "), F.col("size"),
+                  F.lit(" bytes (cap "), F.lit(ATTACH_SIZE_CAP), F.lit(")"))),
+        (F.col("content_hash").isNull(), "AttachmentMigrationFailure",
+         F.concat(F.lit("failed to download "), F.col("url"))),
+    ])
 
     ok_atts = sniffed.filter(F.col("content_hash").isNotNull()).select(
         F.col("ticket_number").alias("a_ticket"),
@@ -377,10 +370,6 @@ def build_conversations(
             "array<struct<fileName:string,mimeType:string,size:bigint,hash:string>>"
         ).alias("attachments"),
         F.lit(1).alias("seq_group"),  # synthetic notes sort after real threads
-    )
-    attach_failures = failed.select(
-        F.lit("AttachmentMigrationFailure").alias("error_type"),
-        F.concat(F.lit("failed to download "), F.col("url")).alias("detail"),
     )
 
     # ---- Phase 6: group-back (collect_list of thread structs, ordered) ----
@@ -451,11 +440,7 @@ def build_conversations(
         )
     )
 
-    errors = (
-        conv_errors.unionByName(thread_errors)
-        .unionByName(size_warnings)
-        .unionByName(attach_failures)
-    )
+    errors = conv_errors.unionByName(thread_errors).unionByName(attach_warnings)
     return _track(conversations, "conversations_out"), _track(errors, "errors_out")
 
 

@@ -33,6 +33,10 @@ SAMPLE = [
     "llm_hard_negatives_ivf",
     "llm_cluster_kmeans_assign",
     "llm_semantic_dedup_clusters",
+    "ref_a2_error_grouping",
+    "ref_k4_error_csv_export",
+    "ref_pipeline_sync_customers",
+    "ref_pipeline_sync_tickets",
 ]
 
 

@@ -84,6 +84,16 @@ class TestCustomerPipeline:
         assert r["firstName"] == "+1"
         assert r["lastName"] == "555 0102"
 
+    def test_warnings_row_for_row(self, result):
+        _, warnings = result
+        # carol's one record yields three warnings; the record itself stays
+        assert sorted(map(tuple, warnings)) == [
+            ("InvalidEmailWarning", "unsplittable email kept verbatim: carol@ex.com invalid-email"),
+            ("TruncationWarning", "job title truncated to 60 chars for carol@ex.com invalid-email"),
+            ("TruncationWarning", "last name truncated to 40 chars for dave@ex.com"),
+            ("TruncationWarning", "organization truncated to 60 chars for carol@ex.com invalid-email"),
+        ]
+
 
 class TestTicketPipeline:
     @pytest.fixture(scope="class")
@@ -196,6 +206,61 @@ class TestTicketPipeline:
     def test_oversize_attachment_warns(self, groove, hs):
         _, errors = build_conversations(groove, hs, check_duplicates=False)
         assert any(e["error_type"] == "AttachmentSizeWarning" for e in errors.collect())
+
+    def test_errors_row_for_row(self, result, groove, hs):
+        _, errors = result
+        skipped = [
+            ("ValidationException", "customer could not be resolved [ticket 2: charge twice]"),
+            ("ValidationException", "ticket has no customer link [ticket 6: orphan]"),
+            ("ValidationException", "unknown ticket state [ticket 5: ???]"),
+        ]
+        assert sorted(map(tuple, errors)) == skipped
+        # without the dedup, ticket 3's attachments warn and the record continues
+        _, errors = build_conversations(groove, hs, check_duplicates=False)
+        assert sorted(map(tuple, errors.collect())) == [
+            ("AttachmentMigrationFailure", "failed to download https://files.ex/unreachable.pdf"),
+            ("AttachmentSizeWarning", "huge.bin is 20000000 bytes (cap 10485760)"),
+            *skipped,
+        ]
+
+    def test_first_failed_check_names_the_error(self, spark, groove, hs):
+        from types import SimpleNamespace
+
+        from groove_to_helpscout_migration_tool_spark import schemas
+
+        api = "https://api.groovehq.com/v1/"
+        # ticket 7 fails all four conversation checks (no customer link, so
+        # no customer either; bogus state; unknown mailbox with no default)
+        tickets = spark.createDataFrame([
+            (7, "Everything wrong", "all bad", "bogus", "Nowhere", None,
+             "2016-02-07 09:00:00", ((None,), (None,)), 1),
+        ], schemas.GROOVE_TICKET)
+        # on ticket 1: an agent with no HelpScout user, and an author href
+        # that names neither a customer nor an agent
+        messages = spark.createDataFrame([
+            (1, "m8", False, True, "from a ghost", "2016-02-01 10:07:00", api + "messages/m8",
+             ((api + "agents/agent-9",), (None,), (None,)), 1),
+            (1, "m9", False, False, "from nowhere", "2016-02-01 10:08:00", api + "messages/m9",
+             ((api + "widgets/w1",), (None,), (None,)), 1),
+        ], schemas.GROOVE_MESSAGE)
+        g = SimpleNamespace(**{
+            **vars(groove),
+            "tickets": groove.tickets.unionByName(tickets),
+            "messages": groove.messages.unionByName(messages),
+        })
+        convs, errors = build_conversations(g, hs, default_mailbox_id=None)
+        assert sorted(map(tuple, errors.collect())) == [
+            ("ValidationException", "customer could not be resolved [ticket 2: charge twice]"),
+            ("ValidationException", "no HelpScout user for author of message m8"),
+            ("ValidationException", "no mailbox and no default [ticket 4: buy now]"),
+            ("ValidationException", "ticket has no customer link [ticket 6: orphan]"),
+            ("ValidationException", "ticket has no customer link [ticket 7: all bad]"),
+            ("ValidationException", "unknown ticket state [ticket 5: ???]"),
+            ("ValidationException", "unparseable author href on message m9"),
+        ]
+        # the failed threads are skipped; their conversation is not
+        convs = {r["groove_ticket_number"]: r for r in convs.collect()}
+        assert list(convs) == [1] and len(convs[1]["threads"]) == 3
 
     def test_error_grouping_report(self, result, spark):
         _, errors = result

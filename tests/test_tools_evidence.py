@@ -171,3 +171,30 @@ def test_every_tool_compiles_and_its_imports_resolve():
                 elif importlib.util.find_spec(module) is None:
                     problems.append(f"{path}: {module}")
     assert problems == []
+
+
+def test_no_tool_puts_a_fixed_absolute_path_on_sys_path():
+    """A tool imports the package of its own checkout: a literal absolute
+    path put on ``sys.path`` would make a copy of the tools, run from
+    another checkout, import and audit the first checkout's code."""
+    import ast
+    import glob
+
+    problems = []
+    for path in sorted(glob.glob(os.path.join(REPO, "tools", "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("insert", "append")
+                and ast.unparse(node.func.value) == "sys.path"
+            ):
+                continue
+            for arg in node.args:
+                for const in ast.walk(arg):
+                    if isinstance(const, ast.Constant) and isinstance(const.value, str) \
+                            and os.path.isabs(const.value):
+                        problems.append(f"{os.path.basename(path)}:{node.lineno}: {const.value}")
+    assert problems == []

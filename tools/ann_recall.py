@@ -60,8 +60,8 @@ non-reproducible across sessions -- r11's single-pass stamp happened to
 catch a warm index and read 79.5s where a cold session reads ~230s.
 
 Usage: python tools/ann_recall.py [sf_dir ...]
-       (default: /root/testdata/sf0.1 /root/repo/testdata_sf1
-                 /root/repo/testdata_sf10)
+       (default: the sf0.1 testdata snapshot and this checkout's
+                 testdata_sf1 and testdata_sf10)
 Env:   ANN_RECALL_JSON=<path>  write the artifact (default RECALL_r13.json)
        ANN_RECALL_QUERIES=<n>  panel size (default 200)
        ANN_RECALL_K=<k>        k (default 5)
@@ -87,7 +87,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -160,12 +161,12 @@ def p10(values: list[float]) -> float:
 def main() -> None:
     dirs = sys.argv[1:] or [
         "/root/testdata/sf0.1",
-        "/root/repo/testdata_sf1",
-        "/root/repo/testdata_sf10",
+        os.path.join(ROOT, "testdata_sf1"),
+        os.path.join(ROOT, "testdata_sf10"),
     ]
     n_queries = int(os.environ.get("ANN_RECALL_QUERIES", "200"))
     k = int(os.environ.get("ANN_RECALL_K", "5"))
-    out_path = os.environ.get("ANN_RECALL_JSON", "/root/repo/RECALL_r13.json")
+    out_path = os.environ.get("ANN_RECALL_JSON", os.path.join(ROOT, "RECALL_r13.json"))
     spark = get_session()
     snapshots: dict[str, dict] = {}
     violations: list[str] = []

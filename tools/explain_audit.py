@@ -16,10 +16,12 @@ Usage: python tools/explain_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from groove_to_helpscout_migration_tool_spark import catalog, get_session
 
@@ -328,12 +330,12 @@ AUDIT = {
 #   name -> {sf_dir: {"smj": n, "total": n (BHJ+SMJ)}}
 SCALE_REGIME_AUDIT = {
     "llm_hard_negatives_ivf": {
-        "/root/repo/testdata_sf1": {"smj": 0, "total": 6},
-        "/root/repo/testdata_sf10": {"smj": 1, "total": 6},
+        os.path.join(ROOT, "testdata_sf1"): {"smj": 0, "total": 6},
+        os.path.join(ROOT, "testdata_sf10"): {"smj": 1, "total": 6},
     },
     "llm_ann_lsh_topk": {
-        "/root/repo/testdata_sf1": {"smj": 0, "total": 3},
-        "/root/repo/testdata_sf10": {"smj": 1, "total": 3},
+        os.path.join(ROOT, "testdata_sf1"): {"smj": 0, "total": 3},
+        os.path.join(ROOT, "testdata_sf10"): {"smj": 1, "total": 3},
     },
 }
 
@@ -498,7 +500,6 @@ def main() -> None:
         lines.append(row)
         if not ok:
             failures.append(name)
-    import os
 
     # The scale-regime rows execute the two audited queries at the
     # (gitignored) sf1/sf10 snapshots -- minutes of runtime that a quick
@@ -560,7 +561,7 @@ def main() -> None:
         body = body.split("+- == Final Plan ==")[-1]
         lines += [ln[:160] for ln in body.splitlines()[:60]]
         lines += ["```"]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(l for l in lines if l.startswith("|")))
     if failures:

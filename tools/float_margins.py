@@ -84,7 +84,8 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 FAIL_REL = 1.8e-15   # ~8 ulps: inside the procedure-disagreement window
 TRANS_REL = 1e-9     # transcendental band: libm may drift a few ulps

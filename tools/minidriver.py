@@ -20,7 +20,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from groove_to_helpscout_migration_tool_spark import catalog, get_session
 from groove_to_helpscout_migration_tool_spark.session import TABLES
