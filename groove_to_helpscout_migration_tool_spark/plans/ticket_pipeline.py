@@ -38,12 +38,13 @@ from pyspark.sql import functions as F
 from types import SimpleNamespace
 
 from ..functions import (
+    classify_thread,
     groove_state_to_helpscout_status,
-    is_valid_email,
     link_kind,
     extract_link_id,
     to_iso8601,
 )
+from ..multimodal import sniff_mime
 from ..observability import PipelineMetrics
 from ..operators import (
     dedup_anti_join,
@@ -61,10 +62,6 @@ ATTACH_MSG_RE = r"attachments\?message=(.*)$"
 def _resolve_customer(base: DataFrame, hs_customers: DataFrame, groove_customers: DataFrame) -> DataFrame:
     """P6/P11 + J4 enrichment cascade for the ticket's customer link."""
     base = base.withColumn("cust_link_id", extract_link_id(F.col("links.customer.href")))
-    base = base.withColumn(
-        "cust_is_email",
-        F.col("links.customer.href").isNotNull() & is_valid_email(F.col("cust_link_id")),
-    )
     hs = hs_customers.select(
         F.lower(F.col("email")).alias("hs_email"), F.col("id").alias("hs_customer_id")
     )
@@ -133,22 +130,13 @@ def build_conversations(
         return metrics.track(df, step) if metrics is not None else df
 
     # ---- Acquire -> Process boundary: every input is read once ----
-    # P13 MIME sniff from magic bytes (JVM-side hex prefix, no UDF);
+    # P13 MIME sniff from magic bytes (JVM-side, no UDF);
     # K3 content hash then DROP the binary (T6 memory hygiene). Both
     # depend on the attachment row alone, so they run before the message
     # join and the materialized attachments never hold a binary.
-    hex_prefix = F.upper(F.hex(F.substring(F.col("data"), 1, 4)))
     atts = (
         groove.attachments.withColumnRenamed("message_id", "att_src_msg_id")
-        .withColumn(
-            "mime",
-            F.when(F.col("data").isNull(), F.lit(None).cast("string"))
-            .when(hex_prefix.startswith("89504E47"), "image/png")
-            .when(hex_prefix.startswith("FFD8"), "image/jpeg")
-            .when(hex_prefix.startswith("25504446"), "application/pdf")
-            .when(hex_prefix.startswith("47494638"), "image/gif")
-            .otherwise("application/octet-stream"),
-        )
+        .withColumn("mime", sniff_mime(F.col("data")))
         .withColumn("content_hash", F.md5(F.col("data")))
         .drop("data")
         .localCheckpoint(eager=False)
@@ -242,15 +230,12 @@ def build_conversations(
     )
     msgs = msgs.withColumn(
         "thread_type",
-        F.when(
-            F.col("note")
-            & (F.col("author_kind") == "customer")
-            & (F.lower(F.col("author_id")) == F.col("t_cust_email")),
-            "customer",
-        )
-        .when(F.col("note"), "note")
-        .when(F.col("agent_response"), "message")
-        .otherwise("customer"),
+        classify_thread(
+            F.col("note"),
+            F.col("agent_response"),
+            F.when(F.col("author_kind") == "customer", F.col("author_id")),
+            F.array(F.col("t_cust_email")),
+        ),
     )
 
     # P9/J3: author PersonRef. Agent authors resolve agent_id -> email

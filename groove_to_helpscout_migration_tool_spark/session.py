@@ -68,6 +68,13 @@ JIT_POLICY = (
 )
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 32g: the heap must leave
+    room for the Python workers and for a second session on the host."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(32 * 1024, host_mb // 2)}m"
+
+
 def get_session(
     app_name: str = "groove2hs-spark-engine",
     master: str | None = None,
@@ -91,7 +98,7 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # Python Data Source pushdown (sources/pyds.py page pruning)

@@ -96,14 +96,7 @@ def paginated_source(
             bucket.acquire()  # every ATTEMPT consumes budget, retries too
             return fetch_page(page, per_page)
 
-        paced = (
-            with_retries(
-                fetch_once, max_attempts=retry_attempts,
-                backoff_base=retry_backoff,
-            )
-            if retry_attempts > 1
-            else fetch_once
-        )
+        paced = with_retries(fetch_once, max_attempts=retry_attempts, backoff_base=retry_backoff)
         names = [f.name for f in schema.fields]
         for pdf in batches:
             for page in pdf["page"]:

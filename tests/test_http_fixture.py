@@ -84,10 +84,9 @@ class TestEndToEnd:
         total = client.probe_total()
         assert total == 123
 
-        fetch = with_retries(client.fetch_page, max_attempts=3, backoff_base=0.0)
         df = paginated_source(
-            spark, fetch, total_count=total, schema=SCHEMA, per_page=20,
-            requests_per_minute=600,
+            spark, client.fetch_page, total_count=total, schema=SCHEMA, per_page=20,
+            requests_per_minute=600, retry_attempts=3, retry_backoff=0.0,
         )
         out = df.select(
             "rec_id", F.upper("payload").alias("payload"), "page"
@@ -107,10 +106,9 @@ class TestEndToEnd:
     def test_unrecoverable_page_fails_the_job(self, spark):
         script = paged_script(TICKETS, per_page=20, flaky={2: [500] * 10})
         client = FixtureHttpClient(RecordedTransport(script))
-        fetch = with_retries(client.fetch_page, max_attempts=2, backoff_base=0.0)
         df = paginated_source(
-            spark, fetch, total_count=123, schema=SCHEMA, per_page=20,
-            requests_per_minute=600,
+            spark, client.fetch_page, total_count=123, schema=SCHEMA, per_page=20,
+            requests_per_minute=600, retry_attempts=2, retry_backoff=0.0,
         )
         with pytest.raises(Exception, match="500"):
             df.collect()

@@ -238,9 +238,10 @@ def _run_sweep(sf_dir: str) -> tuple[dict[str, int], dict[str, float]]:
     from groove_to_helpscout_migration_tool_spark import catalog
     from groove_to_helpscout_migration_tool_spark.operators import cache
 
-    # Heap: get_session's 32g default ($SPARK_GRAFT_DRIVER_MEM). Records do
-    # not depend on it, but llm_neardup_pagerank's sf10 plan OOMs SOLO at
-    # 16g (its unrolled-round broadcasts), with nothing accumulated.
+    # Heap: get_session's default is half the host's memory, at most 32g
+    # ($SPARK_GRAFT_DRIVER_MEM overrides). Records do not depend on it, but
+    # llm_neardup_pagerank's sf10 plan OOMs SOLO at 16g (its unrolled-round
+    # broadcasts), with nothing accumulated: below a 64 GB host, set 32g.
     spark, log = eventlog.session("scale-records", {"spark.sql.shuffle.partitions": "16"})
     sc = spark.sparkContext
     from pyspark.sql import functions as F
