@@ -338,7 +338,8 @@ WHERE round(len(list_intersect(a.xs, b.xs))::DOUBLE
         " base band keys, candidates verify by exact shingle Jaccard >="
         " 0.5. This is the production shape for a LIVING corpus: the base"
         " band index is a persisted artifact built once per snapshot (here"
-        " it shares the in-session signature artifact), and each ingest"
+        " it is dedup.band_index, the same in-session cache entry the"
+        " MinHash near-dup queries read), and each ingest"
         " re-signatures ONLY the delta, so per-batch cost scales with the"
         " batch, never the corpus. The one-sided join also cannot go"
         " quadratic in a hot bucket the way the self-join can: a bucket"
@@ -350,27 +351,12 @@ WHERE round(len(list_intersect(a.xs, b.xs))::DOUBLE
 def llm_neardup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["documents"])
     docs = DD.shingled_docs(t.documents)
-    sigd = docs.select("doc_id", DD.minhash_signature(F.col("xs")).alias("sig"))
-    bands = persist_artifact(
-        sigd.select("doc_id", F.explode(DD.band_keys(F.col("sig"))).alias("band_key"))
-    )
+    bands = DD.band_index(docs)
     is_delta = F.col("doc_id") % DELTA_MOD == 0
     delta = bands.filter(is_delta).select(F.col("doc_id").alias("i"), "band_key")
     base = bands.filter(~is_delta).select(F.col("doc_id").alias("j"), "band_key")
     cand = delta.join(base, ["band_key"]).select("i", "j").distinct()
-    xs_map = docs.select("doc_id", "xs")
-    pairs = (
-        cand.join(xs_map.select(F.col("doc_id").alias("i"), F.col("xs").alias("xs_i")), "i")
-        .join(xs_map.select(F.col("doc_id").alias("j"), F.col("xs").alias("xs_j")), "j")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("xs_i", "xs_j"))
-                / F.size(F.array_union("xs_i", "xs_j")),
-                6,
-            ),
-        )
-    )
+    pairs = DD.with_shingles(cand, docs).withColumn("jaccard", DD.jaccard())
     return pairs.filter(F.col("jaccard") >= 0.5).select(
         F.col("i").alias("new_doc_id"), F.col("j").alias("base_doc_id"), "jaccard"
     )

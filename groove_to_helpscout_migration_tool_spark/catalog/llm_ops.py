@@ -869,11 +869,14 @@ SELECT DISTINCT doc_i, doc_j, jaccard FROM pairs WHERE jaccard >= 0.4
         "n-gram Jaccard near-dup: candidates share their MINIMUM 3-gram "
         "shingle hash (bottom-1 sketch: P(candidate) = true Jaccard), then "
         "exact set Jaccard verifies. Cheaper candidate stage than the banded "
-        "MinHash variant; shuffle carries (anchor, doc_id) only. "
+        "MinHash variant: no signature, one anchor key per doc. This "
+        "uncapped path shuffles (anchor, doc_id, xs) through its one "
+        "anchor join; the capped path's candidate stage shuffles "
+        "(anchor, doc_id) only and re-joins xs per candidate. "
         "UNCAPPED ORACLE/BASELINE, not the production path: a hot anchor "
         "(a very common minimum shingle) makes the candidate join "
         "quadratic in that anchor's width. At scale pass anchor_cap "
-        "(dedup.ngram_jaccard_pairs threads it through cap_bucket + "
+        "(dedup.ngram_jaccard_pairs threads it to bucket_pairs: cap_bucket + "
         "star_pairs, the same guard the capped LSH twins use); keep "
         "this entry for recall certification on bounded samples."
     ),

@@ -94,15 +94,6 @@ def _zip_dot(a: str, b: str) -> F.Column:
     )
 
 
-def _two_phase_topk(scored: DataFrame, qid: str, k: int, salt_mod: int) -> DataFrame:
-    """The mining-ops entry to the ONE shared salted two-phase top-k
-    (operators/similarity.two_phase_topk) with the label column these
-    operators all carry. Returns (qid, rank, nid, cosine, nlabel)."""
-    from ..operators.similarity import two_phase_topk
-
-    return two_phase_topk(scored, qid, k, salt_mod, label_col="nlabel")
-
-
 _HN_PAIR_CTES = f"""
 e AS (
   SELECT vec_id, label, embedding,
@@ -171,7 +162,7 @@ def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cosine",
         )
     )
-    top = _two_phase_topk(scored, "qid", HN_K, _HN_SALT)
+    top = SIM.two_phase_topk(scored, "qid", HN_K, _HN_SALT, label_col="nlabel")
     qlab = q.select("qid", "qlabel")
     return top.join(F.broadcast(qlab), ["qid"]).select(
         F.col("qid").alias("query_id"),
@@ -271,7 +262,7 @@ def llm_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("nlabel"),
         "cosine",
     )
-    knn = _two_phase_topk(scored, "qid", KNN_K, _HN_SALT)
+    knn = SIM.two_phase_topk(scored, "qid", KNN_K, _HN_SALT, label_col="nlabel")
     votes = knn.groupBy("qid", "nlabel").agg(F.count(F.lit(1)).alias("cnt"))
     # Runtime pack guard (ADVICE r6): the packed argmax is only a valid
     # (votes DESC, label ASC) order while 0 <= label < _VOTE_PACK -- an
@@ -956,8 +947,9 @@ def llm_hard_negatives_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = SIM._rejoin_cosine(
         cand.select("qid", "nid", "nlabel"), emb, "qid", "nid", "qv", "nv"
     )
-    top = _two_phase_topk(
-        scored.select("qid", "nid", "nlabel", "cosine"), "qid", HN_K, _HN_SALT
+    top = SIM.two_phase_topk(
+        scored.select("qid", "nid", "nlabel", "cosine"),
+        "qid", HN_K, _HN_SALT, label_col="nlabel",
     )
     return top.join(F.broadcast(ql), ["qid"]).select(
         F.col("qid").alias("query_id"),

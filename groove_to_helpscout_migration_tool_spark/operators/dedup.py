@@ -10,10 +10,10 @@ goes through the md5-prefix scheme shared with the DuckDB oracles):
     block on 15-bit chunks and verify Hamming distance.
 
 Scale notes (the whole point of these over pairwise compare):
-  - candidate generation is always a self-equi-join on a BUCKET key --
-    shuffle moves (key, doc_id) pairs, never text; the quadratic blowup
-    is bounded per-bucket (skewed buckets = near-identical boilerplate;
-    at 100 TB you'd salt or cap bucket width).
+  - candidate generation is always a self-equi-join on a BUCKET key
+    (bucket_pairs) -- shuffle moves (key, doc_id) pairs, never text; the
+    quadratic blowup is bounded per-bucket (skewed buckets =
+    near-identical boilerplate; bucket_pairs' cap + star bounds it).
   - signatures are fixed-width (16 longs / 1 long), so the shuffle
     width is constant regardless of document size.
   - verification joins fetch shingle-hash arrays only for the candidate
@@ -189,9 +189,11 @@ def cap_bucket(df: DataFrame, key: str, id_col: str, cap: int) -> DataFrame:
     lands in is hot -- the worst case is exactly the motivating one:
     identical boilerplate docs have identical minhash signatures, so all
     their bands collapse into the SAME hot bucket and no other band can
-    reconnect the members the cap dropped. Production candidate builds
-    therefore pair cap_bucket with star_pairs (below), which keeps one
-    linear edge per member into the bucket's anchor."""
+    reconnect the members the cap dropped. bucket_pairs therefore pairs
+    cap_bucket with star_pairs (below), which keeps one linear edge per
+    member into the bucket's anchor. simhash_neardup_pairs is the one
+    exception: it caps WITHOUT the star, so its beyond-cap members can be
+    orphaned."""
     w = W.partitionBy(key).orderBy(id_col)
     return (
         df.withColumn("_bucket_rk", F.row_number().over(w))
@@ -207,7 +209,8 @@ def star_pairs(df: DataFrame, key: str, id_col: str) -> DataFrame:
     blowup at cap*(cap-1)/2, and this star adds width-1 anchor edges so
     beyond-cap members still reach the bucket's cluster core -- total
     per-bucket candidates cap*(cap-1)/2 + (width - cap), LINEAR in
-    width. The same assign-to-min shape simhash_dedup_assign uses. The
+    width. The same assign-to-min shape simhash_dedup_assign uses;
+    similarity.semantic_dedup_assign reads its candidates from here. The
     groupBy min and the join both shuffle on ``key``, which the capped
     self-join shuffles on anyway; ``df`` should be the payload-free
     (key, id) frame so neither stage moves document payloads."""
@@ -216,6 +219,67 @@ def star_pairs(df: DataFrame, key: str, id_col: str) -> DataFrame:
         df.join(anchors, key)
         .filter(F.col(id_col) > F.col("i"))
         .select("i", F.col(id_col).alias("j"))
+    )
+
+
+def band_index(docs: DataFrame) -> DataFrame:
+    """-> (doc_id, band_key): the persisted MinHash band index over
+    shingled_docs output, one row per (doc, band). Persisted because
+    every consumer reads it twice (both sides of a bucket join, or a
+    bucket join plus the star) -- without it the k=16 minhash stage runs
+    once per read. The one build of this frame, so every near-dup query
+    in a session reads the same cache entry."""
+    sigd = docs.select("doc_id", minhash_signature(F.col("xs")).alias("sig"))
+    return persist_artifact(
+        sigd.select("doc_id", F.explode(band_keys(F.col("sig"))).alias("band_key"))
+    )
+
+
+def bucket_pairs(
+    ex: DataFrame, key: str, id_col: str, cap: int | None = None
+) -> DataFrame:
+    """-> (i, j), i < j, distinct: every pair of ``id_col`` values that
+    share a ``key`` bucket of ``ex`` -- the candidate self-join of the
+    bucketed near-dup family (MinHash bands, bottom-1 anchors, embedding
+    LSH buckets). ``ex`` should be the payload-free (key, id) frame.
+
+    With ``cap``, the self-join reads the bucket's ``cap`` lowest ids
+    (cap_bucket, persisted so both sides share one window) and the
+    UNCAPPED frame adds a star link from every member to the bucket's
+    min id (star_pairs): cap*(cap-1)/2 + (width - cap) candidates per
+    bucket, linear in width, no beyond-cap member orphaned."""
+    joinable = ex
+    if cap is not None:
+        joinable = persist_artifact(cap_bucket(ex, key, id_col, cap))
+    cand = (
+        joinable.select(F.col(id_col).alias("i"), key)
+        .join(joinable.select(F.col(id_col).alias("j"), key), [key])
+        .filter(F.col("i") < F.col("j"))
+        .select("i", "j")
+    )
+    if cap is not None:
+        cand = cand.unionByName(star_pairs(ex, key, id_col))
+    return cand.distinct()
+
+
+def with_shingles(cand: DataFrame, docs: DataFrame) -> DataFrame:
+    """-> cand + (xs_i, xs_j): the shingle arrays of an (i, j) candidate
+    frame, joined back from shingled_docs output once per candidate."""
+    xs_map = docs.select("doc_id", "xs")
+    return cand.join(
+        xs_map.select(F.col("doc_id").alias("i"), F.col("xs").alias("xs_i")), "i"
+    ).join(
+        xs_map.select(F.col("doc_id").alias("j"), F.col("xs").alias("xs_j")), "j"
+    )
+
+
+def jaccard() -> "F.Column":
+    """Exact shingle-set Jaccard of the bound ``xs_i``/``xs_j`` columns,
+    rounded to 6 so Spark/DuckDB float noise cannot flip a threshold."""
+    return F.round(
+        F.size(F.array_intersect("xs_i", "xs_j"))
+        / F.size(F.array_union("xs_i", "xs_j")),
+        6,
     )
 
 
@@ -236,47 +300,8 @@ def minhash_lsh_pairs(
     targets) collapse all bands into ONE hot bucket and beyond-cap
     members would lose every edge."""
     docs = shingled_docs(documents)
-    sigd = docs.withColumn("sig", minhash_signature(F.col("xs")))
-    # persisted: both sides of the bucket self-join read the band keys --
-    # without this the k=16 minhash stage is computed twice
-    exploded = persist_artifact(
-        sigd.select(
-            "doc_id", F.explode(band_keys(F.col("sig"))).alias("band_key")
-        )
-    )
-    joinable = exploded
-    if bucket_cap is not None:
-        # persisted separately from the uncapped frame: both self-join
-        # sides read the capped result, and the star below reads the
-        # UNCAPPED frame -- without this the cap window runs twice
-        joinable = persist_artifact(
-            cap_bucket(exploded, "band_key", "doc_id", bucket_cap)
-        )
-    left = joinable.select(F.col("doc_id").alias("i"), "band_key")
-    right = joinable.select(F.col("doc_id").alias("j"), "band_key")
-    cand = (
-        left.join(right, ["band_key"])
-        .filter(F.col("i") < F.col("j"))
-        .select("i", "j")
-    )
-    if bucket_cap is not None:
-        # anchor star over the UNCAPPED frame: beyond-cap members keep
-        # one verified edge into the bucket's min doc_id
-        cand = cand.unionByName(star_pairs(exploded, "band_key", "doc_id"))
-    cand = cand.distinct()
-    xs_map = docs.select(F.col("doc_id"), F.col("xs"))
-    pairs = (
-        cand.join(xs_map.select(F.col("doc_id").alias("i"), F.col("xs").alias("xs_i")), "i")
-        .join(xs_map.select(F.col("doc_id").alias("j"), F.col("xs").alias("xs_j")), "j")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("xs_i", "xs_j"))
-                / F.size(F.array_union("xs_i", "xs_j")),
-                6,
-            ),
-        )
-    )
+    cand = bucket_pairs(band_index(docs), "band_key", "doc_id", bucket_cap)
+    pairs = with_shingles(cand, docs).withColumn("jaccard", jaccard())
     return (
         pairs.filter(F.col("jaccard") >= jaccard_threshold)
         .select(F.col("i").alias("doc_i"), F.col("j").alias("doc_j"), "jaccard")
@@ -453,36 +478,16 @@ def neardup_clusters(
 
 def capped_anchor_candidates(docs: DataFrame, anchor_cap: int) -> DataFrame:
     """-> (i, j, xs_i, xs_j): candidate pairs sharing their bottom-1
-    shingle anchor (min shingle hash), with every anchor bucket capped
-    at its ``anchor_cap`` lowest doc_ids for the all-pairs self-join
-    PLUS a star link from every bucket member to the bucket's min
-    doc_id (star_pairs) -- cap*(cap-1)/2 + (width-cap) candidates per
-    bucket, linear in width, no beyond-cap member orphaned. Shingle
-    arrays join back once per surviving candidate; the cap window and
-    the groupBy both run on the payload-free (anchor, doc_id) frame.
+    shingle anchor (min shingle hash), built by the capped bucket_pairs
+    (cap self-join + star) over the payload-free (doc_id, anchor) frame,
+    with shingle arrays joined back once per candidate.
 
     The ONE implementation of the capped bottom-1-anchor candidate
     build -- ngram_jaccard_pairs (Jaccard verify) and the asymmetric
     containment detector (directional-ratio verify) both read their
     pairs from here, so a cap/star fix reaches both."""
     ids = persist_artifact(docs.select("doc_id", F.array_min("xs").alias("anchor")))
-    # both self-join sides read the capped frame -- persist it so the
-    # cap window runs once (ids stays persisted for the star)
-    keep = persist_artifact(cap_bucket(ids, "anchor", "doc_id", anchor_cap))
-    cand = (
-        keep.select(F.col("doc_id").alias("i"), "anchor")
-        .join(keep.select(F.col("doc_id").alias("j"), "anchor"), ["anchor"])
-        .filter(F.col("i") < F.col("j"))
-        .select("i", "j")
-        .unionByName(star_pairs(ids, "anchor", "doc_id"))
-        .distinct()
-    )
-    xs_map = docs.select("doc_id", "xs")
-    return cand.join(
-        xs_map.select(F.col("doc_id").alias("i"), F.col("xs").alias("xs_i")), "i"
-    ).join(
-        xs_map.select(F.col("doc_id").alias("j"), F.col("xs").alias("xs_j")), "j"
-    )
+    return with_shingles(bucket_pairs(ids, "anchor", "doc_id", anchor_cap), docs)
 
 
 def ngram_jaccard_pairs(
@@ -502,10 +507,12 @@ def ngram_jaccard_pairs(
     verify, with a star_pairs anchor link so beyond-cap members of a
     hot anchor bucket keep one verified edge (linear per bucket)."""
     docs = shingled_docs(documents)
-    anchored = docs.withColumn("anchor", F.array_min("xs"))
     if anchor_cap is not None:
         pairs = capped_anchor_candidates(docs, anchor_cap)
     else:
+        # xs rides through the one anchor join: bucket_pairs plus
+        # with_shingles re-joins it (sf0.01: 7 -> 11 jobs, 67 -> 131 tasks)
+        anchored = docs.withColumn("anchor", F.array_min("xs"))
         left = anchored.select(
             F.col("doc_id").alias("i"), F.col("xs").alias("xs_i"), "anchor"
         )
@@ -513,14 +520,7 @@ def ngram_jaccard_pairs(
             F.col("doc_id").alias("j"), F.col("xs").alias("xs_j"), "anchor"
         )
         pairs = left.join(right, ["anchor"]).filter(F.col("i") < F.col("j"))
-    pairs = pairs.withColumn(
-        "jaccard",
-        F.round(
-            F.size(F.array_intersect("xs_i", "xs_j"))
-            / F.size(F.array_union("xs_i", "xs_j")),
-            6,
-        ),
-    )
+    pairs = pairs.withColumn("jaccard", jaccard())
     return (
         pairs.filter(F.col("jaccard") >= jaccard_threshold)
         .select(F.col("i").alias("doc_i"), F.col("j").alias("doc_j"), "jaccard")
@@ -606,11 +606,14 @@ def simhash_neardup_pairs(
     signature chunk, verified by Hamming distance <= max_hamming.
 
     ``bucket_cap`` bounds each chunk bucket to its cap lowest doc_ids
-    before the self-join (cap_bucket), exactly as minhash_lsh_pairs
-    does -- the production guard for boilerplate-heavy corpora where
-    one shared chunk value makes the self-join quadratic in that
-    bucket's width (the round-2 scale hole: 1.6M pairs at sf0.1).
-    Uncapped remains the oracle-exact form."""
+    before the self-join (cap_bucket) -- the guard for boilerplate-heavy
+    corpora where one shared chunk value makes the self-join quadratic
+    in that bucket's width (the round-2 scale hole: 1.6M pairs at
+    sf0.1). Unlike bucket_pairs it adds NO star_pairs link, so a doc
+    beyond the cap in every chunk bucket it lands in loses all its
+    pairs. Uncapped remains the oracle-exact form. The self-join stays
+    inline because it carries the signature through the join and
+    verifies Hamming before the distinct."""
     # persisted: the candidate join references the signatures twice
     sig = persist_artifact(simhash_signature(documents))
     ex = sig.select("doc_id", "simhash", F.explode(_chunk_keys()).alias("chunk"))

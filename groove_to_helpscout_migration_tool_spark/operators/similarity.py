@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from .cache import persist_artifact
+from .dedup import bucket_pairs, star_pairs
 
 DIM = 64
 N_PLANES = 12          # 2 bands x 6 hyperplanes
@@ -255,28 +256,14 @@ def _rejoin_cosine(cand: DataFrame, emb: DataFrame, left_id: str, right_id: str,
     )
 
 
-def lsh_neardup_pairs(
-    embeddings: DataFrame, threshold: float = 0.35, bucket_cap: int | None = None
-) -> DataFrame:
+def lsh_neardup_pairs(embeddings: DataFrame, threshold: float = 0.35) -> DataFrame:
     """-> (vec_i, vec_j, cosine): pairs sharing an LSH band bucket with
-    exact cosine >= threshold. ``bucket_cap`` keeps only the cap lowest
-    vec_ids per bucket before the self-join (hot-bucket guard: a dense
-    embedding region otherwise makes one bucket quadratic)."""
+    exact cosine >= threshold. Candidates come from the uncapped
+    dedup.bucket_pairs self-join over the bucket index."""
     emb = prepared(embeddings)
     # the persisted inverted-list index: without it the hyperplane-dot
     # UDF would run once per side of the self-join below
-    ex = lsh_index(emb)
-    if bucket_cap is not None:
-        from .dedup import cap_bucket
-
-        ex = cap_bucket(ex, "bkey", "vec_id", bucket_cap)
-    cand = (
-        ex.select(F.col("vec_id").alias("i"), "bkey")
-        .join(ex.select(F.col("vec_id").alias("j"), "bkey"), ["bkey"])
-        .filter(F.col("i") < F.col("j"))
-        .select("i", "j")
-        .distinct()
-    )
+    cand = bucket_pairs(lsh_index(emb), "bkey", "vec_id")
     return (
         _rejoin_cosine(cand, emb, "i", "j", "v_i", "v_j")
         .filter(F.col("cosine") >= threshold)
@@ -289,8 +276,8 @@ def semantic_dedup_assign(
 ) -> DataFrame:
     """-> (vec_id, rep_id, cosine): star-shaped SEMANTIC dedup assignment
     -- each vector is tested against one anchor per LSH band bucket (the
-    bucket's minimum vec_id) and assigned to its smallest verified
-    anchor.
+    bucket's minimum vec_id, dedup.star_pairs) and assigned to its
+    smallest verified anchor.
 
     The embedding twin of dedup.simhash_dedup_assign, and the scale path
     next to lsh_neardup_pairs: pair enumeration on a clustered corpus is
@@ -301,12 +288,9 @@ def semantic_dedup_assign(
     emb = prepared(embeddings)
     # the persisted inverted-list index: referenced twice (anchor agg +
     # candidate join) -- without it the hyperplane-dot UDF runs twice
-    ex = lsh_index(emb)
-    anchors = ex.groupBy("bkey").agg(F.min("vec_id").alias("anchor"))
     cand = (
-        ex.join(anchors, ["bkey"])
-        .filter(F.col("vec_id") > F.col("anchor"))
-        .select("vec_id", "anchor")
+        star_pairs(lsh_index(emb), "bkey", "vec_id")
+        .select(F.col("j").alias("vec_id"), F.col("i").alias("anchor"))
         .distinct()
     )
     scored = _rejoin_cosine(cand, emb, "vec_id", "anchor", "qv", "av").filter(

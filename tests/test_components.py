@@ -117,28 +117,17 @@ class TestBucketCap:
         # cold buckets untouched
         assert all(n == 3 for k, n in per_bucket.items() if k != "hot")
 
-    def test_minhash_capped_is_subset_and_bounded(self, spark):
-        from groove_to_helpscout_migration_tool_spark.operators.dedup import (
-            minhash_lsh_pairs,
-        )
-
-        # 40 near-identical docs: one pathological LSH bucket
+    def _hot_bucket_docs(self, spark):
+        # 40 identical docs: one pathological bucket (every band / the
+        # one anchor collapses onto it) + one cold identical pair
         base = "the quick brown fox jumps over the lazy dog again and again"
         rows = [(i, base) for i in range(40)] + [
             (100, "something completely different entirely unrelated text here"),
             (101, "something completely different entirely unrelated text here"),
         ]
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        full = {
-            (r["doc_i"], r["doc_j"])
-            for r in minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect()
-        }
-        capped = {
-            (r["doc_i"], r["doc_j"])
-            for r in minhash_lsh_pairs(
-                docs, jaccard_threshold=0.5, bucket_cap=8
-            ).collect()
-        }
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def _assert_capped_hot_bucket(self, full, capped):
         assert capped <= full
         # the identical-doc bucket is bounded at C(8,2) self-join pairs
         # plus 40-8 anchor star edges (dedup.star_pairs keeps beyond-cap
@@ -153,6 +142,42 @@ class TestBucketCap:
         assert all(p[0] == 0 for p in hot_capped if p[1] >= 8)
         # cold pair survives the cap
         assert (100, 101) in capped
+
+    def test_minhash_capped_is_subset_and_bounded(self, spark):
+        from groove_to_helpscout_migration_tool_spark.operators.dedup import (
+            minhash_lsh_pairs,
+        )
+
+        docs = self._hot_bucket_docs(spark)
+        full = {
+            (r["doc_i"], r["doc_j"])
+            for r in minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect()
+        }
+        capped = {
+            (r["doc_i"], r["doc_j"])
+            for r in minhash_lsh_pairs(
+                docs, jaccard_threshold=0.5, bucket_cap=8
+            ).collect()
+        }
+        self._assert_capped_hot_bucket(full, capped)
+
+    def test_ngram_anchor_capped_is_subset_and_bounded(self, spark):
+        from groove_to_helpscout_migration_tool_spark.operators.dedup import (
+            ngram_jaccard_pairs,
+        )
+
+        docs = self._hot_bucket_docs(spark)
+        full = {
+            (r["doc_i"], r["doc_j"])
+            for r in ngram_jaccard_pairs(docs, jaccard_threshold=0.4).collect()
+        }
+        capped = {
+            (r["doc_i"], r["doc_j"])
+            for r in ngram_jaccard_pairs(
+                docs, jaccard_threshold=0.4, anchor_cap=8
+            ).collect()
+        }
+        self._assert_capped_hot_bucket(full, capped)
 
     def test_unpersist_artifacts_releases_cached_blocks(self, spark):
         from groove_to_helpscout_migration_tool_spark.operators import cache

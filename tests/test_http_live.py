@@ -42,14 +42,10 @@ from groove_to_helpscout_migration_tool_spark.sources.api import (
 from groove_to_helpscout_migration_tool_spark.sources.http_fixture import (
     ApiError,
     FixtureHttpClient,
-    RecordedTransport,
     paged_script,
 )
 from groove_to_helpscout_migration_tool_spark.sources.http_live import (
-    LIVE_HTTP_ENV,
-    TOKEN_ENV,
     LiveHttpTransport,
-    make_transport,
 )
 from groove_to_helpscout_migration_tool_spark.sources.retry import (
     TransientApiError,
@@ -496,19 +492,6 @@ class TestSyncTicketsResumeLive:
         assert sorted(set(final) - set(run1)) == sorted(
             set(range(123)) - set(run1)
         )
-
-
-class TestFlag:
-    def test_cassette_is_the_default(self, monkeypatch):
-        monkeypatch.delenv(LIVE_HTTP_ENV, raising=False)
-        assert isinstance(make_transport({}), RecordedTransport)
-
-    def test_flag_selects_live_with_env_token(self, monkeypatch):
-        monkeypatch.setenv(LIVE_HTTP_ENV, "1")
-        monkeypatch.setenv(TOKEN_ENV, "tok")
-        t = make_transport({})
-        assert isinstance(t, LiveHttpTransport)
-        assert t.token == "tok"
 
 
 class TestGovernorUnderConcurrency:

@@ -432,20 +432,22 @@ class TestNearDupInvariants:
     def test_capped_pairs_subset_of_uncapped(self, spark, texts):
         from groove_to_helpscout_migration_tool_spark.operators.dedup import (
             minhash_lsh_pairs,
+            ngram_jaccard_pairs,
             simhash_neardup_pairs,
         )
 
         docs = _docs_df(spark, texts)
-        for fn, kw in (
-            (minhash_lsh_pairs, dict(jaccard_threshold=0.5)),
-            (simhash_neardup_pairs, dict(max_hamming=8)),
+        for fn, kw, cap in (
+            (minhash_lsh_pairs, dict(jaccard_threshold=0.5), "bucket_cap"),
+            (simhash_neardup_pairs, dict(max_hamming=8), "bucket_cap"),
+            (ngram_jaccard_pairs, dict(jaccard_threshold=0.4), "anchor_cap"),
         ):
             full = {
                 (r["doc_i"], r["doc_j"]) for r in fn(docs, **kw).collect()
             }
             capped = {
                 (r["doc_i"], r["doc_j"])
-                for r in fn(docs, bucket_cap=2, **kw).collect()
+                for r in fn(docs, **{cap: 2}, **kw).collect()
             }
             assert capped <= full, (fn.__name__, capped - full)
 
@@ -606,7 +608,7 @@ class TestJpegCodecProperty:
 
 
 class TestTwoPhaseTopKProperty:
-    """The salted two-phase top-k (catalog/mining_ops._two_phase_topk,
+    """The salted two-phase top-k (operators/similarity.two_phase_topk,
     also the shape inside llm_rag_retrieve_sparse) must equal a naive
     global window ranking for ANY scored relation -- including ties on
     the score (broken by id) and groups smaller than k."""
@@ -627,8 +629,8 @@ class TestTwoPhaseTopKProperty:
     def test_equals_global_window(self, spark, rows):
         from pyspark.sql import Window as W
 
-        from groove_to_helpscout_migration_tool_spark.catalog.mining_ops import (
-            _two_phase_topk,
+        from groove_to_helpscout_migration_tool_spark.operators.similarity import (
+            two_phase_topk,
         )
 
         # dedupe nid within qid (the operator's inputs are keyed pairs)
@@ -642,7 +644,7 @@ class TestTwoPhaseTopKProperty:
         df = spark.createDataFrame(uniq, ["qid", "nid", "cosine", "nlabel"])
         k = 3
         got = (
-            _two_phase_topk(df, "qid", k, salt_mod=4)
+            two_phase_topk(df, "qid", k, salt_mod=4, label_col="nlabel")
             .select("qid", "rank", "nid")
             .collect()
         )
