@@ -3,8 +3,11 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is fully materialized via a count-style action (collect on the
-already-small outputs) so the measurement includes the whole plan.
+Each run of a query collects ``tools/eventlog.fold_frame`` over its
+frame: a row count and an ``xxhash64`` sum over every column of every
+output row, so Catalyst cannot prune the columns or operators that a
+``count()`` would leave out. ``time_query`` is the one per-query routine;
+``tools/qbench.py`` calls it for subset A/B runs.
 """
 
 from __future__ import annotations
@@ -16,8 +19,11 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "tools"))
 
+from eventlog import fold_frame
 from groove_to_helpscout_migration_tool_spark import catalog, get_session
 from groove_to_helpscout_migration_tool_spark.operators import cache
 
@@ -37,46 +43,16 @@ MANIFEST = _load_manifest()
 HEADLINE = list(MANIFEST["headline"])
 
 
-# Operators whose first run materializes a persisted build artifact
-# (signature table, inverted-list index, cell assignment, shingle cache).
-# Their steady state is the warm run; the build cost is reported
-# separately so build-once-query-many economics are visible.
-BUILD_SPLIT = {
-    "llm_ann_lsh_topk",
-    "llm_ann_ivf_topk",
-    "llm_ann_topk_cosine",
-    "llm_simhash_dedup_assign",
-    "llm_dedup_clusters",
-    "llm_semantic_dedup_assign",
-    "llm_semantic_dedup_clusters",  # shares prepared/cell artifacts
-    "llm_neardup_minhash_lsh_capped",
-    "llm_dedup_incremental",
-    "llm_decontaminate",
-    "llm_decontaminate_bloom",
-    "llm_ann_quantized_topk",
-    "llm_neardup_incremental_lsh",  # shares the shingle/signature artifact
-    "llm_rag_retrieve_sparse",      # persists the sparse nz vectors
-    "llm_importance_weights_dsir",  # persists the hashed feature stream
-    "llm_substring_dedup_spans",    # persists the sliding gram table
-    "llm_bigram_lm_score",          # persists the positioned bigram stream
-    "llm_bpe_train_merges",         # persists the per-round word tables
-    # r14 (VERDICT r13 task 2): the headline queries that gained persisted
-    # slim artifacts in r13 report their one-time materialization in the
-    # build column like every other artifact query -- the warm median
-    # alone would silently exclude the expensive pass.
-    "llm_dataset_card",             # persists the slim tokenized projection
-    "llm_segment_dedup",            # persists the slim segment-hash stream
-    "llm_boilerplate_strip",        # same slim segment-hash stream (+source)
-}
-
 # Measurement shape (r6): an explicit BUILD run, then N_WARM timed warm
 # runs, extended adaptively while the steady-state spread stays above
 # SPREAD_TARGET. r5's median-of-5 folded the build run into the median
 # pool: on a loaded box the capped-minhash median read 1.75s (all-runs
 # noise) while its true warm runs sit ~0.8s, and its "build" column
 # showed 0.0 exactly when the median absorbed the build cost. Separating
-# the phases makes the build column honest for EVERY build-split query
-# and keeps GC/compile noise of the first run out of the median.
+# the phases makes the build column honest for every query whose runs
+# registered a persisted artifact (the set time_query derives from
+# cache.unpersist_artifacts()) and keeps GC/compile noise of the first
+# run out of the median.
 def _warm_runs() -> int:
     """Parse SPARK_GRAFT_WARM_RUNS, clamped >= 2 (the spread metric
     needs two samples). A malformed value must not abort a multi-hour
@@ -320,91 +296,102 @@ def _scale_metrics() -> dict | None:
         return {"error": f"{type(exc).__name__}: {exc}"}
 
 
+def session(app_name: str, sf_dir: str):
+    """The timing session: JDK-default JIT, since this harness times warm
+    repeats (session.py notes), with the JVM and parquet footers warmed
+    once so timings measure the queries."""
+    spark = get_session(app_name=app_name, jit_policy=False)
+    catalog.QUERIES["q06_forecast_revenue"].fn(spark, sf_dir).collect()
+    return spark
+
+
+def _gc(spark) -> None:
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except Exception:
+        pass
+
+
+def time_query(spark, sf_dir: str, name: str, n_warm: int = N_WARM) -> dict:
+    """Time one catalog query: a BUILD run, then ``n_warm`` warm runs
+    (more while the spread stays high), then release what it persisted.
+    Each run is a fresh ``fn()`` (a fresh logical plan, so every shuffle
+    re-executes) collected through the full-output fold.
+
+    -> {"build": the build run's seconds, "median"/"spread"/"runs": the
+    warm runs, "artifacts": how many persisted or checkpointed artifacts
+    the runs registered; with none, the build run is only warm-up}.
+    """
+    # runs[0] is the BUILD run: after the caches were cleared it pays the
+    # one-time artifact materialization (signature tables, inverted
+    # lists, shingle caches) plus codegen/compile warmup, so it stays out
+    # of the median -- r5 derived build as run1 - median over a mixed
+    # pool, which collapsed to 0.0 whenever noise pushed the median up
+    # to the build run. WARM runs reuse the persisted artifacts via
+    # CacheManager plan-matching -- the operator's intended steady state.
+    # Adaptive extension: queries whose steady-state spread exceeds
+    # SPREAD_TARGET get up to MAX_EXTRA more samples; the median over
+    # more runs is what tells drift from regression.
+    runs = []
+    while True:
+        t0 = time.time()
+        fold_frame(catalog.QUERIES[name].fn(spark, sf_dir)).collect()
+        runs.append(time.time() - t0)
+        # drain garbage BETWEEN runs (untimed): letting the JVM pick its
+        # own moment means a full collection lands inside a random timed
+        # run -- measured as the difference between an 16% and a 2%
+        # two-fastest spread on the ANN family
+        _gc(spark)
+        warm = runs[1:]
+        if len(warm) < n_warm:
+            continue
+        med = statistics.median(warm)
+        # steady-state repeatability: spread of the TWO fastest runs
+        # (same definition as r4/r5 so rounds compare)
+        fast = sorted(warm)[:2]
+        spread = (fast[-1] - fast[0]) / max(med, 1e-9) * 100
+        if spread <= SPREAD_TARGET or len(warm) >= n_warm + MAX_EXTRA:
+            break
+    # Release this query's artifacts before the next one. Across 40+
+    # queries they would accumulate in the one JVM, and the memory
+    # pressure / GC inflates later queries severalfold vs an isolated
+    # run (the r2 bench-vs-reality gap). The explicit GC drains the
+    # freed blocks NOW instead of inside whichever query comes next.
+    artifacts = cache.unpersist_artifacts()
+    spark.catalog.clearCache()
+    _gc(spark)
+    return {"build": round(runs[0], 3), "median": round(med, 3), "spread": round(spread, 1),
+            "runs": [round(r, 3) for r in warm], "artifacts": artifacts}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    # JDK-default JIT: this harness times warm repeats (session.py notes)
-    spark = get_session(app_name="bench", jit_policy=False)
+    spark = session("bench", sf_dir)
     timings: dict[str, float] = {}
     build: dict[str, float] = {}
     spreads: dict[str, float] = {}
     cc_stats: dict = {}
-    # warm the JVM + parquet footers once so timings measure the queries
-    catalog.QUERIES["q06_forecast_revenue"].fn(spark, sf_dir).collect()
-    def _gc() -> None:
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
     calib_pre = _calibration_runs(spark)
     calib_arrow_pre = _calibration_runs_arrow(spark)
-    _gc()
+    _gc(spark)
 
     for name in HEADLINE:
-        spec = catalog.QUERIES.get(name)
-        if spec is None:
+        if name not in catalog.QUERIES:
             continue
-        # BUILD run: first execution after the caches were cleared pays
-        # the one-time artifact materialization (signature tables,
-        # inverted lists, shingle caches) plus codegen/compile warmup.
-        # Timed separately so the build-once-query-many economics are
-        # visible for every BUILD_SPLIT query -- r5 derived build as
-        # run1 - median over a mixed pool, which collapsed to 0.0
-        # whenever noise pushed the median up to the build run.
-        t0 = time.time()
-        spec.fn(spark, sf_dir).count()
-        build_run = time.time() - t0
-        # drain the build run's garbage NOW so the collection lands
-        # between phases, not inside a timed warm run
-        _gc()
-        # WARM runs: fresh fn() per run (a fresh logical plan, so every
-        # shuffle re-executes) with the persisted artifacts reused via
-        # CacheManager plan-matching -- the operator's intended steady
-        # state. Adaptive extension: queries whose steady-state spread
-        # exceeds SPREAD_TARGET get up to MAX_EXTRA more samples; the
-        # median over more runs is what tells drift from regression.
-        runs = []
-        while True:
-            t0 = time.time()
-            spec.fn(spark, sf_dir).count()
-            runs.append(time.time() - t0)
-            # drain garbage BETWEEN warm runs (untimed): letting the JVM
-            # pick its own moment means a full collection lands inside a
-            # random timed run -- measured as the difference between an
-            # 16% and a 2% two-fastest spread on the ANN family
-            _gc()
-            if len(runs) < N_WARM:
-                continue
-            med = statistics.median(runs)
-            # steady-state repeatability: spread of the TWO fastest
-            # runs (same definition as r4/r5 so rounds compare)
-            fast = sorted(runs)[:2]
-            spread = (fast[1] - fast[0]) / max(med, 1e-9) * 100
-            if spread <= SPREAD_TARGET or len(runs) >= N_WARM + MAX_EXTRA:
-                break
-        timings[name] = round(med, 3)
-        spreads[name] = round(spread, 1)
+        t = time_query(spark, sf_dir, name)
+        timings[name] = t["median"]
+        spreads[name] = t["spread"]
+        # build-once-query-many economics: the one-time cost over the
+        # steady state, for exactly the queries that built an artifact
+        if t["artifacts"]:
+            build[name] = round(max(t["build"] - t["median"], 0.0), 3)
         if name == "llm_dedup_clusters":
             # convergence telemetry: a rounds regression shows up here
             # before it shows up as wall time
             from groove_to_helpscout_migration_tool_spark.operators.dedup import CC_LAST
 
             cc_stats = dict(CC_LAST)
-        if name in BUILD_SPLIT:
-            build[name] = round(max(build_run - med, 0.0), 3)
-        # Release this query's persisted build artifacts before moving
-        # on. Within a query's runs the CacheManager reuses them (that
-        # is the measured steady state); across 40+ queries they would
-        # accumulate in the one JVM and the resulting memory pressure /
-        # GC inflates later queries severalfold vs an isolated run --
-        # the r2 bench-vs-reality gap. Each query's build cost stays
-        # honest: nothing leaks in from earlier entries. The explicit
-        # System.gc() drains the freed blocks NOW, between measurements,
-        # instead of letting a full collection land inside whichever
-        # query the JVM picks later (the per-run wandering outliers).
-        cache.unpersist_artifacts()
-        spark.catalog.clearCache()
-        _gc()
     calib_post = _calibration_runs(spark)
     calib_arrow_post = _calibration_runs_arrow(spark)
     # the bench session's 32 threads are idle but its JVM still holds

@@ -336,15 +336,16 @@ WHERE round(len(list_intersect(a.xs, b.xs))::DOUBLE
         f" doc_id %% {DELTA_MOD} == 0 play the delta) is probed against the"
         " standing corpus's MinHash band index -- delta band keys equi-join"
         " base band keys, candidates verify by exact shingle Jaccard >="
-        " 0.5. This is the production shape for a LIVING corpus: the base"
-        " band index is a persisted artifact built once per snapshot (here"
-        " it is dedup.band_index, the same in-session cache entry the"
-        " MinHash near-dup queries read), and each ingest"
-        " re-signatures ONLY the delta, so per-batch cost scales with the"
-        " batch, never the corpus. The one-sided join also cannot go"
-        " quadratic in a hot bucket the way the self-join can: a bucket"
-        " with d delta and b base members emits d*b pairs, bounded by the"
-        " delta's width. Complements llm_dedup_incremental (exact-hash"
+        " 0.5. The band index is dedup.band_index over the WHOLE corpus,"
+        " the same persisted in-session cache entry the MinHash near-dup"
+        " queries read: the delta/base split filters it after signing."
+        " Run cold, this query signs every document, so its cost grows"
+        " with the corpus; only once that entry is cached (e.g. after"
+        " llm_neardup_minhash_lsh has run in the session) does a batch"
+        " pay just its probe join and verify. The one-sided join also"
+        " cannot go quadratic in a hot bucket the way the self-join can:"
+        " a bucket with d delta and b base members emits d*b pairs,"
+        " bounded by the delta's width. Complements llm_dedup_incremental (exact-hash"
         " form) with the near-dup semantics of llm_neardup_minhash_lsh."
     ),
 )

@@ -129,7 +129,7 @@ def llm_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference; the bitmap itself is THE build-once prefilter the
     # docstring describes -- rebuilding its two-exchange aggregation on
     # every query batch priced the steady state as build work. Same
-    # BUILD_SPLIT semantics as the signature/index artifacts: at 100 TB
+    # build-once semantics as the signature/index artifacts: at 100 TB
     # these are written once per eval-set snapshot.
     eval_grams = persist_artifact(
         docs.filter(F.col("doc_id") < 50)

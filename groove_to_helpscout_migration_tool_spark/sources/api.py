@@ -73,7 +73,7 @@ def paginated_source(
     construction under failure injection, not just on the happy path.
     """
     total_pages = math.ceil(total_count / per_page)
-    stop = min(stop_page or total_pages, total_pages)
+    stop = total_pages if stop_page is None else min(stop_page, total_pages)
     if start_page > stop:
         # empty range still carries the OUTPUT schema (records + page)
         return spark.createDataFrame(

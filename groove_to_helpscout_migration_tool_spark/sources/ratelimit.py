@@ -30,8 +30,8 @@ class TokenBucket:
     _window_start: float = field(default=0.0, init=False)
     slept: float = field(default=0.0, init=False)  # telemetry
 
-    def acquire(self, now: float | None = None) -> None:
-        now = time.monotonic() if now is None else now
+    def acquire(self) -> None:
+        now = time.monotonic()
         if self._window_start == 0.0:
             self._window_start = now
         elapsed = now - self._window_start

@@ -27,18 +27,19 @@ class TransientApiError(Exception):
     """A retryable failure: rate-limit (429) or server-side (5xx) analog."""
 
 
+BACKOFF_FACTOR = 2.0  # each retry waits twice as long as the one before
+
+
 def with_retries(
     fn: Callable[..., R],
     max_attempts: int = 3,
     backoff_base: float = 0.5,
-    backoff_factor: float = 2.0,
-    retryable: tuple[type[BaseException], ...] = (TransientApiError,),
     sleep: Callable[[float], Any] = time.sleep,
 ) -> Callable[..., R]:
-    """Wrap ``fn`` with bounded exponential backoff on retryable errors.
+    """Wrap ``fn`` with bounded exponential backoff on ``TransientApiError``.
 
-    Non-retryable exceptions propagate immediately (they are data errors
-    for the side-channel, not infrastructure weather). The last retryable
+    Any other exception propagates immediately (it is a data error for
+    the side-channel, not infrastructure weather). The last transient
     failure is re-raised unchanged once the attempt budget is exhausted,
     so callers see the true cause. Wraps per-call fetchers used inside
     mapInPandas tasks: state is per-call, nothing is shared across tasks.
@@ -51,11 +52,11 @@ def with_retries(
         for attempt in range(1, max_attempts + 1):
             try:
                 return fn(*args, **kwargs)
-            except retryable:
+            except TransientApiError:
                 if attempt == max_attempts:
                     raise
                 sleep(delay)
-                delay *= backoff_factor
+                delay *= BACKOFF_FACTOR
         raise AssertionError("unreachable")
 
     return wrapped

@@ -309,7 +309,6 @@ class TestBenchContract:
 
         missing = [n for n in bench.HEADLINE if n not in catalog.QUERIES]
         assert missing == []
-        assert bench.BUILD_SPLIT <= set(bench.HEADLINE)
 
     def test_manifest_changelog_accounts_for_membership(self):
         """Replaying the manifest changelog (adds minus drops, in order)
@@ -408,6 +407,31 @@ class TestBenchContract:
         omitted = parsed.get("queries_omitted", 0)
         assert len(parsed["queries"]) + omitted == len(bench.HEADLINE)
         assert set(detail["queries"]) == set(bench.HEADLINE)
+
+    def test_timed_frame_prunes_no_scan_the_query_reads(self, spark, sf_dir):
+        """The frame bench.py collects must read what the query's own
+        plan reads: a ``count()`` prunes 7 headline queries' scans down
+        to no column at all (``ReadSchema: struct<>``), so their regex,
+        hashing and classifier work never runs. Plans only, no action.
+        A query whose own plan has a column-less scan (a plain row
+        count of a table) may keep it."""
+        import bench
+        from groove_to_helpscout_migration_tool_spark.operators import cache
+
+        def columnless(df) -> int:
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
+            return plan.count("ReadSchema: struct<>")
+
+        pruned = {}
+        for name in bench.HEADLINE:
+            df = catalog.QUERIES[name].fn(spark, sf_dir)
+            own, timed = columnless(df), columnless(bench.fold_frame(df))
+            if timed > own:
+                pruned[name] = (own, timed)
+            cache.unpersist_artifacts()
+            spark.catalog.clearCache()
+        assert pruned == {}
 
 
 class TestTrainingAssemblyPartitionInvariance:

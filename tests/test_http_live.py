@@ -276,10 +276,9 @@ class TestEndToEndLive:
         total = client.probe_total()
         assert total == 123
 
-        fetch = with_retries(client.fetch_page, max_attempts=3, backoff_base=0.0)
         df = paginated_source(
-            spark, fetch, total_count=total, schema=SCHEMA, per_page=20,
-            requests_per_minute=600,
+            spark, client.fetch_page, total_count=total, schema=SCHEMA, per_page=20,
+            requests_per_minute=600, retry_attempts=3, retry_backoff=0.0,
         )
         out = df.select(
             "rec_id", F.upper("payload").alias("payload"), "page"
@@ -296,10 +295,9 @@ class TestEndToEndLive:
         script = paged_script(TICKETS, per_page=20, flaky={2: [500] * 10})
         s = serve(_paths(script, "https://api.example.test/v1"))
         client = FixtureHttpClient(LiveHttpTransport(), base_url=s.base_url)
-        fetch = with_retries(client.fetch_page, max_attempts=2, backoff_base=0.0)
         df = paginated_source(
-            spark, fetch, total_count=123, schema=SCHEMA, per_page=20,
-            requests_per_minute=600,
+            spark, client.fetch_page, total_count=123, schema=SCHEMA, per_page=20,
+            requests_per_minute=600, retry_attempts=2, retry_backoff=0.0,
         )
         with pytest.raises(Exception, match="500"):
             df.collect()
@@ -437,12 +435,12 @@ class TestSyncTicketsResumeLive:
         client = FixtureHttpClient(LiveHttpTransport(), base_url=s.base_url)
 
         total = client.probe_total()
-        fetch = with_retries(client.fetch_page, max_attempts=3, backoff_base=0.0)
 
         def load():
             df = paginated_source(
-                spark, fetch, total_count=total, schema=SCHEMA, per_page=20,
-                requests_per_minute=6000,
+                spark, client.fetch_page, total_count=total, schema=SCHEMA,
+                per_page=20, requests_per_minute=6000, retry_attempts=3,
+                retry_backoff=0.0,
             )
             return df.select(
                 "rec_id", F.upper(F.col("payload")).alias("payload")

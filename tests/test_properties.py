@@ -122,9 +122,10 @@ class TestResumeEquivalence:
         part2 = paginated_source(
             spark, fetch, total, schema, per_page=per_page, start_page=k + 1
         )
-        want = {r["id"] for r in full.collect()}
-        have = {r["id"] for r in part1.unionByName(part2).collect()}
-        assert have == want and len(want) == total
+        # sorted lists, not sets: a page fetched twice must show
+        want = sorted(r["id"] for r in full.collect())
+        have = sorted(r["id"] for r in part1.unionByName(part2).collect())
+        assert have == want == list(range(total))
 
 
 class TestByteParserRoundtrips:

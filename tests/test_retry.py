@@ -88,30 +88,25 @@ def make_scripted_flaky_fetch(fail_pages: dict[int, int]):
 class TestRetryThroughSource:
     def test_flaky_pages_recover_to_identical_scan(self, spark):
         clean = make_scripted_flaky_fetch({})
-        flaky = with_retries(
-            make_scripted_flaky_fetch({1: 2, 3: 1}),
-            max_attempts=3,
-            backoff_base=0.0,
-        )
+        flaky = make_scripted_flaky_fetch({1: 2, 3: 1})
         kw = dict(total_count=120, schema=PAGE_SCHEMA, per_page=50,
                   requests_per_minute=600)
         want = sorted(
             r["rec_id"] for r in paginated_source(spark, clean, **kw).collect()
         )
         got = sorted(
-            r["rec_id"] for r in paginated_source(spark, flaky, **kw).collect()
+            r["rec_id"]
+            for r in paginated_source(
+                spark, flaky, retry_attempts=3, retry_backoff=0.0, **kw
+            ).collect()
         )
         assert got == want == list(range(120))
 
     def test_exhausted_page_fails_the_task(self, spark):
-        doomed = with_retries(
-            make_scripted_flaky_fetch({2: 99}),
-            max_attempts=2,
-            backoff_base=0.0,
-        )
+        doomed = make_scripted_flaky_fetch({2: 99})
         df = paginated_source(
             spark, doomed, total_count=120, schema=PAGE_SCHEMA, per_page=50,
-            requests_per_minute=600,
+            requests_per_minute=600, retry_attempts=2, retry_backoff=0.0,
         )
         with pytest.raises(Exception, match="429 on page 2"):
             df.collect()

@@ -87,6 +87,21 @@ class TestPaginatedSource:
         )
         assert df.count() == 0
 
+    def test_stop_page_zero_fetches_nothing(self, spark, tmp_path):
+        # stop_page=0 is a resume point before page 1, not "no limit"
+        calls = tmp_path / "calls"
+
+        def fetch_page(page: int, per_page: int) -> list[dict]:
+            with open(calls, "a") as fh:
+                fh.write(f"{page}\n")
+            return fake_fetch_page(page, per_page)
+
+        df = paginated_source(
+            spark, fetch_page, 237, PAGE_SCHEMA, 50, 600, stop_page=0,
+        )
+        assert df.count() == 0
+        assert not calls.exists()
+
     def test_point_lookup(self, spark):
         def fetch_by_id(i):
             return {"rec_id": int(i), "payload": f"rec-{i}"} if int(i) < 300 else None

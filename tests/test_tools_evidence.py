@@ -143,8 +143,9 @@ def _top_level_names(path: str) -> set[str]:
 def test_every_tool_compiles_and_its_imports_resolve():
     """Only a few tools run under Tier-1, so compile every tools/*.py and
     resolve, without running anything, each module it imports and each
-    name it imports from a sibling tool: a tool still importing a deleted
-    tool or helper fails here instead of mid-run."""
+    name it imports from a sibling tool or the repo-root ``bench``: a
+    tool still importing a deleted tool or helper fails here instead of
+    mid-run."""
     import ast
     import glob
     import importlib.util
@@ -152,6 +153,7 @@ def test_every_tool_compiles_and_its_imports_resolve():
 
     paths = sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
     tools = {os.path.basename(p)[:-3]: p for p in paths}
+    tools["bench"] = os.path.join(REPO, "bench.py")
     problems = []
     for path in paths:
         py_compile.compile(path, doraise=True)

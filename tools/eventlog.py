@@ -117,18 +117,24 @@ def parse(path: str) -> dict[str, Group]:
     return groups
 
 
-def fold(df) -> tuple[int, str]:
-    """Read every column of every output row in one action: a row count
-    and a sum of per-row ``xxhash64``. ``count()`` would let Catalyst
-    prune columns and whole operators, and it runs a QueryExecution of
-    its own, leaving the frame's plan unexecuted. Returns the row count
-    and the formatted plan of the fold that ran (``isFinalPlan=true``)."""
+def fold_frame(df):
+    """The one-row aggregate over ``df`` that reads every column of every
+    output row: a row count and a sum of per-row ``xxhash64``. ``count()``
+    would let Catalyst prune columns and whole operators."""
     from pyspark.sql import functions as F
 
-    out = df.agg(
+    return df.agg(
         F.count(F.lit(1)),
         # mod keeps the ANSI-mode sum far from int64 overflow
         F.sum(F.xxhash64(F.struct(*[F.col(c) for c in df.columns])) % F.lit(1_000_000_007)),
     )
+
+
+def fold(df) -> tuple[int, str]:
+    """Collect ``fold_frame(df)`` -> (row count, the formatted plan of the
+    fold that ran, ``isFinalPlan=true``). Explain this frame, not ``df``:
+    an action runs a QueryExecution of its own and leaves ``df``'s plan
+    unexecuted."""
+    out = fold_frame(df)
     rows = out.collect()[0][0]
     return rows, out._sc._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "formatted")
