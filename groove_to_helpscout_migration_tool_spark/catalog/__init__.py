@@ -84,7 +84,7 @@ _HEAVY = {
     # r7 iterative ops: multi-round driver loops + unrolled-CTE oracles
     "llm_embedding_pca_power",        # ~12s: 4-round HUGEINT oracle replay
     "llm_bpe_train_merges",           # ~6s: 6-round window-merge oracle
-    "llm_bpe_tokenize_apply",         # ~13s: full chain replay + doc join
+    "llm_bpe_tokenize_apply",         # ~13s: both engines run the 6 rounds + doc join
     # r7 audit family: gram-keyed source-set aggregation + HOF pair
     # expansion (the Spark side; the DuckDB oracle self-join is 0.2s)
     "llm_cross_source_overlap",       # ~8s

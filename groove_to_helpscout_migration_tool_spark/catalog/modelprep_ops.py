@@ -360,41 +360,11 @@ def llm_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_MEMO: dict[tuple, tuple[list, DataFrame]] = {}
-
-
-def _dataset_fingerprint(path: str) -> tuple:
-    """(size, mtime_ns) over the file -- or every file under a parquet
-    directory -- so the BPE memo invalidates when the data under sf_dir
-    is REWRITTEN inside one Spark application (fixture regeneration,
-    notebook reruns): without this the memo silently returns the model
-    trained on the old bytes (ADVICE r7). Remote URIs (s3://, hdfs://)
-    can't be stat'd from the driver; they fall back to the path string,
-    keeping the pre-fix behavior for at-scale immutable snapshots."""
-    import os
-
-    if "://" in path and not path.startswith("file://"):
-        return (path,)
-    local = path[len("file://"):] if path.startswith("file://") else path
-    try:
-        if os.path.isdir(local):
-            parts = []
-            for root, _, files in sorted(os.walk(local)):
-                for f in sorted(files):
-                    st = os.stat(os.path.join(root, f))
-                    parts.append((f, st.st_size, st.st_mtime_ns))
-            return tuple(parts)
-        st = os.stat(local)
-        return (st.st_size, st.st_mtime_ns)
-    except OSError:
-        return (path,)
-
-
 def clear_bpe_memo() -> None:
-    """Drop every memoized BPE model -- the explicit invalidation hook,
-    for callers who clear Spark caches and want retraining regardless of
-    the fingerprint check."""
-    _BPE_MEMO.clear()
+    """No-op. BPE keeps no result cache: each call runs the merge loop,
+    and the word tables it persists are released, like every other
+    build artifact, by ``cache.unpersist_artifacts()``. Kept only for
+    ``perfbench/catalog_mix.py::reset``, which still calls it."""
 
 
 def _bpe_loop(
@@ -402,22 +372,12 @@ def _bpe_loop(
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Run the merge loop; return (merge table rows, final word table
     (word, cnt, syms)) -- the trained model AND the tokenized
-    vocabulary, shared by the train and apply operators. Memoized per
-    (Spark application, sf_dir, dataset fingerprint): training runs once
-    per session and the apply operator reuses the word table instead of
-    re-training (the final words DataFrame stays valid after a cache
-    clear -- its plan simply recomputes); rewriting the parquet under
-    sf_dir changes the fingerprint and forces retraining."""
-    import os
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _dataset_fingerprint(os.path.join(sf_dir, "documents.parquet")),
-    )
-    hit = _BPE_MEMO.get(key)
-    if hit is not None:
-        return hit
+    vocabulary, shared by the train and apply operators. Every call
+    runs all rounds: each round's word table goes through
+    ``cache.persist_artifact``, so a second call in the same session
+    reads the earlier call's tables through CacheManager plan matching
+    (one argmax job per round over cached rows), and after
+    ``unpersist_artifacts()`` it trains from the parquet again."""
     t = load_tables(spark, sf_dir, ["documents"])
     words = (
         t.documents.select(F.explode(TX.tokens(F.col("text"))).alias("word"))
@@ -459,19 +419,7 @@ def _bpe_loop(
                 "word", "cnt", _bpe_merge_fold("syms", la, ra).alias("syms")
             )
         )
-    _memo_put(key, (merges, words))
     return merges, words
-
-
-def _memo_put(key: tuple, value) -> None:
-    """Store a trained model, evicting superseded fingerprints for the
-    same (application, sf_dir): each fixture rewrite would otherwise add
-    a new entry while the stale one keeps pinning its rows list and
-    DataFrame for the application's lifetime (unbounded across
-    regeneration loops)."""
-    for k in [k for k in _BPE_MEMO if k[:2] == key[:2] and k[2] != key[2]]:
-        del _BPE_MEMO[k]
-    _BPE_MEMO[key] = value
 
 
 def _bpe_merge_fold(syms_col: str, la: str, ra: str) -> F.Column:
@@ -522,7 +470,9 @@ GROUP BY d.doc_id
         " accounting every budget/packing stage downstream consumes)."
         " The key scalability idea is WORD-LEVEL tokenization: merges"
         " apply once per DISTINCT word (the |vocab|-sized table the"
-        " trainer already materialized), and documents join word ->"
+        " merge loop materializes; this call runs the loop itself, over"
+        " the train call's persisted word tables while they are still"
+        " cached), and documents join word ->"
         " subword-count instead of re-merging every token occurrence --"
         " at 100 TB that turns tokenization from O(corpus tokens x"
         " rounds) fold work into O(vocab x rounds) + one broadcast-"

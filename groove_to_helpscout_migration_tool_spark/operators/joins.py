@@ -21,8 +21,10 @@ def validation_anti_join(
     The caller raises if the result is non-empty (fail-fast,
     SyncTickets.php:70-115) unless bypass_validation is set."""
     # project the dim key to a private alias so same-named columns on both
-    # sides never collide (the dim_key Column resolves in dim's context)
-    keyed_dim = dim.select(F.lower(dim_key).alias("__vkey")).distinct()
+    # sides never collide (the dim_key Column resolves in dim's context);
+    # duplicate keys are harmless: a left-anti join keeps the same rows
+    # whatever duplicates its right side holds
+    keyed_dim = dim.select(F.lower(dim_key).alias("__vkey"))
     misses = facts.join(
         F.broadcast(keyed_dim), F.lower(fact_key) == F.col("__vkey"), "left_anti"
     )

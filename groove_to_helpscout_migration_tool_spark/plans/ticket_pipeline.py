@@ -170,7 +170,7 @@ def build_conversations(
         existing = hs.conversations.select(
             F.col("modifiedAt").alias("e_modified"),
             F.lower(F.col("subject")).alias("e_subject"),
-        ).distinct()
+        )
         tickets = dedup_anti_join(
             tickets, existing,
             [(F.col("created_at"), F.col("e_modified")),

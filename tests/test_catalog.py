@@ -433,6 +433,60 @@ class TestBenchContract:
             spark.catalog.clearCache()
         assert pruned == {}
 
+    def test_timed_frame_keeps_the_query_operators(self, spark, sf_dir):
+        """Every exchange, join, aggregate, Window, Generate and
+        Python-evaluation node of the query's own physical plan appears
+        at least as often under the fold bench.py collects. ``count()``
+        passes the scan test above yet drops whole operators (a Window
+        whose output nobody reads, a join that only adds columns, a
+        ``collect_list``). The fold's own aggregates and exchange are
+        left out, and a global Sort under the fold may go with its
+        range exchange. Plans only, no action."""
+        import bench
+        from groove_to_helpscout_migration_tool_spark.operators import cache
+
+        lost = {}
+        for name in bench.HEADLINE:
+            df = catalog.QUERIES[name].fn(spark, sf_dir)
+            own = _plan_operators(df)
+            timed = _plan_operators(bench.fold_frame(df), under_fold=True)
+            dropped_sorts = own.pop("global Sort", 0) - timed.pop("global Sort", 0)
+            timed["Exchange rangepartitioning"] += max(dropped_sorts, 0)
+            missing = {k: (n, timed[k]) for k, n in own.items() if timed[k] < n}
+            if missing:
+                lost[name] = missing
+            cache.unpersist_artifacts()
+            spark.catalog.clearCache()
+        assert lost == {}
+
+
+def _plan_operators(df, under_fold: bool = False):
+    """Counter of the exchange, join, aggregate, Window, Generate and
+    Python nodes (plus global Sorts) in ``df``'s physical plan, before
+    any action; exchanges are keyed by their partitioning. With
+    ``under_fold``, ``df`` is a one-row aggregate over a query and its
+    own nodes -- every line down to its partial aggregate, the first in
+    the tree's pre-order -- are skipped."""
+    import re
+    from collections import Counter
+
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+    lines = plan.splitlines()
+    if under_fold:
+        lines = lines[next(i for i, ln in enumerate(lines) if "functions=[partial_" in ln) + 1:]
+    ops = Counter()
+    for line in lines:
+        node = re.sub(r"^[\s:|+-]*(\*\(\d+\)\s*)?", "", line)
+        name = re.match(r"\w*", node).group()
+        if name == "Exchange":
+            ops["Exchange " + re.match(r"Exchange (\w+)", node).group(1)] += 1
+        elif name == "Sort" and re.search(r"\], true, \d+$", node):
+            ops["global Sort"] += 1
+        elif re.fullmatch(r"\w*(Join|CartesianProduct|Aggregate|EvalPython|InPandas|InArrow)"
+                          r"|BroadcastExchange|Window|Generate", name):
+            ops[name] += 1
+    return ops
+
 
 class TestTrainingAssemblyPartitionInvariance:
     """The core determinism claim of the training-assembly family: every

@@ -154,28 +154,32 @@ def test_bpe_merge_table_matches_pure_python_reference(spark, sf_dir):
         assert (r["left_sym"], r["right_sym"], r["pair_count"]) == (la, ra, c)
 
 
-def test_bpe_memo_evicts_superseded_fingerprints():
-    """A fixture rewrite changes the dataset fingerprint; the memo must
-    drop the stale (appId, sf_dir) entry instead of accumulating one
-    pinned model per regeneration (ADVICE r8). Entries for OTHER
-    applications / sf_dirs are untouched."""
-    from groove_to_helpscout_migration_tool_spark.catalog import modelprep_ops as MP
+def test_bpe_retrains_after_artifacts_are_released(spark, sf_dir):
+    """BPE keeps no result cache: once ``unpersist_artifacts()`` and
+    ``clearCache()`` have released the word tables, a second call in the
+    same session runs the merge loop again -- at least one argmax job
+    per round -- and trains the same merges."""
+    from groove_to_helpscout_migration_tool_spark.operators.cache import (
+        unpersist_artifacts,
+    )
 
-    MP.clear_bpe_memo()
+    sc = spark.sparkContext
+
+    def merges():
+        fn = catalog.QUERIES["llm_bpe_train_merges"].fn
+        return sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+
+    first = merges()
+    unpersist_artifacts()
+    spark.catalog.clearCache()
+    sc.setJobGroup("bpe_retrain", "bpe_retrain")
     try:
-        MP._memo_put(("app1", "sfA", "fp1"), "m1")
-        MP._memo_put(("app1", "sfB", "fp1"), "m2")
-        MP._memo_put(("app2", "sfA", "fp1"), "m3")
-        MP._memo_put(("app1", "sfA", "fp2"), "m4")  # sfA rewritten
-        assert ("app1", "sfA", "fp1") not in MP._BPE_MEMO
-        assert MP._BPE_MEMO[("app1", "sfA", "fp2")] == "m4"
-        assert MP._BPE_MEMO[("app1", "sfB", "fp1")] == "m2"
-        assert MP._BPE_MEMO[("app2", "sfA", "fp1")] == "m3"
-        MP._memo_put(("app1", "sfA", "fp2"), "m5")  # same fp: overwrite
-        assert MP._BPE_MEMO[("app1", "sfA", "fp2")] == "m5"
-        assert len(MP._BPE_MEMO) == 3
+        second = merges()
     finally:
-        MP.clear_bpe_memo()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        unpersist_artifacts()
+    assert len(sc.statusTracker().getJobIdsForGroup("bpe_retrain")) >= BPE_ROUNDS
+    assert second == first and len(first) == BPE_ROUNDS
 
 
 def test_bpe_fold_handles_overlapping_runs(spark):

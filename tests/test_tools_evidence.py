@@ -200,3 +200,25 @@ def test_no_tool_puts_a_fixed_absolute_path_on_sys_path():
                             and os.path.isabs(const.value):
                         problems.append(f"{os.path.basename(path)}:{node.lineno}: {const.value}")
     assert problems == []
+
+
+def test_no_tool_names_a_fixed_checkout():
+    """A tool's default inputs and outputs inside the repo derive from its
+    own ``ROOT``: an absolute path literal would make a copy of the tools,
+    run from another checkout, read or overwrite the first checkout's
+    files. Code, docstrings and comments are all scanned; the only
+    absolute paths allowed are the shared, read-only test data."""
+    import glob
+    import re
+
+    from conftest import SF_SMOKE
+
+    data_root = os.path.dirname(SF_SMOKE) + os.sep
+    problems = []
+    for path in sorted(glob.glob(os.path.join(REPO, "tools", "*.py"))):
+        with open(path) as fh:
+            for lineno, line in enumerate(fh, 1):
+                for p in re.findall(r"(?<![\w.:/~\-\])])/[A-Za-z_][\w.-]*(?:/[\w.*{}-]+)+", line):
+                    if not p.startswith(data_root):
+                        problems.append(f"{os.path.basename(path)}:{lineno}: {p}")
+    assert problems == []

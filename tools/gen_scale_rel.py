@@ -39,7 +39,7 @@ so rerunning reproduces the snapshot bit-for-bit and the parquet stays
 out of git (testdata_sf1/ is gitignored).
 
 Usage: python tools/gen_scale_rel.py [out_dir]   (default
-/root/repo/testdata_sf1, alongside the gen_scale.py tables)
+this checkout's testdata_sf1, alongside the gen_scale.py tables)
 """
 
 from __future__ import annotations
@@ -48,6 +48,8 @@ import os
 import sys
 
 import duckdb
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SRC = "/root/testdata/sf0.1"
 REPLICAS = 10
@@ -104,7 +106,7 @@ _SPEC = {
 
 def main() -> None:
     global REPLICAS
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/testdata_sf1"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "testdata_sf1")
     # Optional replica-count override (r9 decade-3): `gen_scale_rel.py
     # out 100` tiles 100 replicas of sf0.1 (sf10: 60M lineitem rows).
     # Replica-block scaling composes across decades unchanged -- the

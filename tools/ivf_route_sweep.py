@@ -36,7 +36,9 @@ EVERY query -- similarity.ivf_sq8_hybrid_topk does exactly that with
 the int8 two-phase pool as the net (1 byte/dim scan bandwidth).
 
 Usage: python tools/ivf_route_sweep.py [sf_dir ...]
-Env:   IVF_ROUTE_JSON=<path> (default /root/repo/IVFROUTE_r13.json)
+       (default: sf0.1 of the shared test data, then this checkout's
+       testdata_sf1 and testdata_sf10)
+Env:   IVF_ROUTE_JSON=<path> (default: this checkout's IVFROUTE_r13.json)
 """
 
 from __future__ import annotations
@@ -47,6 +49,8 @@ import sys
 
 import duckdb
 import numpy as np
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 NPROBE = 5
 K = 5
@@ -88,10 +92,10 @@ def cell_ranking(V, nrm, vid, lab):
 def main() -> None:
     dirs = sys.argv[1:] or [
         "/root/testdata/sf0.1",
-        "/root/repo/testdata_sf1",
-        "/root/repo/testdata_sf10",
+        os.path.join(ROOT, "testdata_sf1"),
+        os.path.join(ROOT, "testdata_sf10"),
     ]
-    out_path = os.environ.get("IVF_ROUTE_JSON", "/root/repo/IVFROUTE_r13.json")
+    out_path = os.environ.get("IVF_ROUTE_JSON", os.path.join(ROOT, "IVFROUTE_r13.json"))
     snapshots: dict[str, dict] = {}
     for d in dirs:
         vid, lab, V = load(d)

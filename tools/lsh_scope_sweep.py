@@ -23,7 +23,7 @@ hp-{k}-{i} seed scheme changed; _plane_signs below mirrors it
 literally and the default probe set IS similarity.MARGIN_PATTERNS).
 
 Usage: python tools/lsh_scope_sweep.py [sf_dir ...]
-       (default: /root/repo/testdata_sf1)
+       (default: this checkout's testdata_sf1)
 Env:   LSH_SCOPE_JSON=<path>   write results as JSON
        LSH_SCOPE_PANEL=<n>     query panel (default 200, = ann_recall)
        LSH_SCOPE_K=<k>         k (default 5)
@@ -41,7 +41,8 @@ from collections import defaultdict
 import duckdb
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from groove_to_helpscout_migration_tool_spark.operators.similarity import (
     MARGIN_PATTERNS,
@@ -132,7 +133,7 @@ def sweep_config(V, nrm, cosq, nbands, bits, pats, panel, k):
 
 
 def main() -> None:
-    dirs = sys.argv[1:] or ["/root/repo/testdata_sf1"]
+    dirs = sys.argv[1:] or [os.path.join(ROOT, "testdata_sf1")]
     panel = int(os.environ.get("LSH_SCOPE_PANEL", "200"))
     k = int(os.environ.get("LSH_SCOPE_K", "5"))
     out: dict[str, dict] = {}
