@@ -50,9 +50,8 @@ HEADLINE = list(MANIFEST["headline"])
 # noise) while its true warm runs sit ~0.8s, and its "build" column
 # showed 0.0 exactly when the median absorbed the build cost. Separating
 # the phases makes the build column honest for every query whose runs
-# registered a persisted artifact (the set time_query derives from
-# cache.unpersist_artifacts()) and keeps GC/compile noise of the first
-# run out of the median.
+# registered a persisted artifact (the count time_query's artifact scope
+# released) and keeps GC/compile noise of the first run out of the median.
 def _warm_runs() -> int:
     """Parse SPARK_GRAFT_WARM_RUNS, clamped >= 2 (the spread metric
     needs two samples). A malformed value must not abort a multi-hour
@@ -313,16 +312,17 @@ def _gc(spark) -> None:
 
 
 def time_query(spark, sf_dir: str, name: str, n_warm: int = N_WARM) -> dict:
-    """Time one catalog query: a BUILD run, then ``n_warm`` warm runs
-    (more while the spread stays high), then release what it persisted.
-    Each run is a fresh ``fn()`` (a fresh logical plan, so every shuffle
-    re-executes) collected through the full-output fold.
+    """Time one catalog query in an artifact scope named after it: a BUILD
+    run, then ``n_warm`` warm runs (more while the spread stays high),
+    then release what it persisted. Each run is a fresh ``fn()`` (a fresh
+    logical plan, so every shuffle re-executes) collected through the
+    full-output fold.
 
     -> {"build": the build run's seconds, "median"/"spread"/"runs": the
     warm runs, "artifacts": how many persisted or checkpointed artifacts
     the runs registered; with none, the build run is only warm-up}.
     """
-    # runs[0] is the BUILD run: after the caches were cleared it pays the
+    # runs[0] is the BUILD run: with none of its artifacts cached it pays the
     # one-time artifact materialization (signature tables, inverted
     # lists, shingle caches) plus codegen/compile warmup, so it stays out
     # of the median -- r5 derived build as run1 - median over a mixed
@@ -333,35 +333,32 @@ def time_query(spark, sf_dir: str, name: str, n_warm: int = N_WARM) -> dict:
     # SPREAD_TARGET get up to MAX_EXTRA more samples; the median over
     # more runs is what tells drift from regression.
     runs = []
-    while True:
-        t0 = time.time()
-        fold_frame(catalog.QUERIES[name].fn(spark, sf_dir)).collect()
-        runs.append(time.time() - t0)
-        # drain garbage BETWEEN runs (untimed): letting the JVM pick its
-        # own moment means a full collection lands inside a random timed
-        # run -- measured as the difference between an 16% and a 2%
-        # two-fastest spread on the ANN family
-        _gc(spark)
-        warm = runs[1:]
-        if len(warm) < n_warm:
-            continue
-        med = statistics.median(warm)
-        # steady-state repeatability: spread of the TWO fastest runs
-        # (same definition as r4/r5 so rounds compare)
-        fast = sorted(warm)[:2]
-        spread = (fast[-1] - fast[0]) / max(med, 1e-9) * 100
-        if spread <= SPREAD_TARGET or len(warm) >= n_warm + MAX_EXTRA:
-            break
-    # Release this query's artifacts before the next one. Across 40+
-    # queries they would accumulate in the one JVM, and the memory
-    # pressure / GC inflates later queries severalfold vs an isolated
-    # run (the r2 bench-vs-reality gap). The explicit GC drains the
-    # freed blocks NOW instead of inside whichever query comes next.
-    artifacts = cache.unpersist_artifacts()
-    spark.catalog.clearCache()
+    with cache.artifact_scope(spark, name) as scope:
+        while True:
+            t0 = time.time()
+            fold_frame(catalog.QUERIES[name].fn(spark, sf_dir)).collect()
+            runs.append(time.time() - t0)
+            # drain garbage BETWEEN runs (untimed): letting the JVM pick its
+            # own moment means a full collection lands inside a random timed
+            # run -- measured as the difference between an 16% and a 2%
+            # two-fastest spread on the ANN family
+            _gc(spark)
+            warm = runs[1:]
+            if len(warm) < n_warm:
+                continue
+            med = statistics.median(warm)
+            # steady-state repeatability: spread of the TWO fastest runs
+            # (same definition as r4/r5 so rounds compare)
+            fast = sorted(warm)[:2]
+            spread = (fast[-1] - fast[0]) / max(med, 1e-9) * 100
+            if spread <= SPREAD_TARGET or len(warm) >= n_warm + MAX_EXTRA:
+                break
+    # The scope released this query's artifacts, which would otherwise pile
+    # up across 40+ queries and inflate later ones severalfold (the r2 gap);
+    # the explicit GC drains the freed blocks now, not inside the next query.
     _gc(spark)
     return {"build": round(runs[0], 3), "median": round(med, 3), "spread": round(spread, 1),
-            "runs": [round(r, 3) for r in warm], "artifacts": artifacts}
+            "runs": [round(r, 3) for r in warm], "artifacts": scope.artifacts}
 
 
 def main() -> None:

@@ -2,7 +2,7 @@
 dedup, group-back, similarity. These are the composable building blocks
 the pipelines in plans/ assemble."""
 
-from .cache import persist_artifact, unpersist_artifacts
+from .cache import artifact_scope, persist_artifact, unpersist_artifacts
 from .errors import (
     with_error,
     split_errors,
@@ -20,6 +20,7 @@ from .joins import (
 __all__ = [
     "persist_artifact",
     "unpersist_artifacts",
+    "artifact_scope",
     "with_error",
     "split_errors",
     "warning_rows",

@@ -7,6 +7,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from groove_to_helpscout_migration_tool_spark.operators.cache import artifact_scope  # noqa: E402
+
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
@@ -22,3 +24,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(autouse=True)
+def _artifact_scope(request):
+    """Each Spark test runs in an artifact scope named after it, so what
+    it persisted is released when it ends, pass or fail. RDDs it left
+    persistent outside the registry (the plans' lazy localCheckpoints)
+    go too: they would wait for a JVM GC, and a later test counting
+    cached blocks would see them or not by GC timing."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    spark = request.getfixturevalue("spark")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with artifact_scope(spark, request.node.name):
+        yield
+    left = jsc.getPersistentRDDs()
+    for key in set(left.keys()) - before:
+        left[key].unpersist(True)

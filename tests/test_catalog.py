@@ -7,6 +7,7 @@ import duckdb
 import pytest
 
 from groove_to_helpscout_migration_tool_spark import catalog
+from groove_to_helpscout_migration_tool_spark.operators.cache import artifact_scope
 from groove_to_helpscout_migration_tool_spark.session import TABLES
 
 SAMPLE = [
@@ -94,8 +95,11 @@ def test_entry_contract(spark):
 @pytest.mark.parametrize("name", SAMPLE)
 def test_oracle_equivalence_smoke(spark, sf_dir, duck, name):
     spec = catalog.QUERIES[name]
-    sdf = spec.fn(spark, sf_dir)
-    srows = {tuple(str(v) for v in r) for r in sdf.collect()}
+    with artifact_scope(spark, name):
+        sdf = spec.fn(spark, sf_dir)
+        srows = {tuple(str(v) for v in r) for r in sdf.collect()}
+    # the scope alone leaves the CacheManager empty
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     res = duck.execute(spec.oracle)
     ocols = [d[0] for d in res.description]
     # align oracle column order to spark's
@@ -265,13 +269,6 @@ def test_no_complex_output_columns_anywhere(spark, sf_dir):
         bad = complex_output_cols(schema)
         if bad:
             offenders[name] = bad
-    # the driver-loop ops (BPE, PCA) materialize persisted artifacts just
-    # from fn(); release them so they don't leak into the rest of the suite
-    from groove_to_helpscout_migration_tool_spark.operators.cache import (
-        unpersist_artifacts,
-    )
-
-    unpersist_artifacts()
     assert offenders == {}, f"complex-typed output columns: {offenders}"
 
 
@@ -416,7 +413,6 @@ class TestBenchContract:
         A query whose own plan has a column-less scan (a plain row
         count of a table) may keep it."""
         import bench
-        from groove_to_helpscout_migration_tool_spark.operators import cache
 
         def columnless(df) -> int:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -425,12 +421,11 @@ class TestBenchContract:
 
         pruned = {}
         for name in bench.HEADLINE:
-            df = catalog.QUERIES[name].fn(spark, sf_dir)
-            own, timed = columnless(df), columnless(bench.fold_frame(df))
+            with artifact_scope(spark, name):
+                df = catalog.QUERIES[name].fn(spark, sf_dir)
+                own, timed = columnless(df), columnless(bench.fold_frame(df))
             if timed > own:
                 pruned[name] = (own, timed)
-            cache.unpersist_artifacts()
-            spark.catalog.clearCache()
         assert pruned == {}
 
     def test_timed_frame_keeps_the_query_operators(self, spark, sf_dir):
@@ -443,20 +438,18 @@ class TestBenchContract:
         left out, and a global Sort under the fold may go with its
         range exchange. Plans only, no action."""
         import bench
-        from groove_to_helpscout_migration_tool_spark.operators import cache
 
         lost = {}
         for name in bench.HEADLINE:
-            df = catalog.QUERIES[name].fn(spark, sf_dir)
-            own = _plan_operators(df)
-            timed = _plan_operators(bench.fold_frame(df), under_fold=True)
+            with artifact_scope(spark, name):
+                df = catalog.QUERIES[name].fn(spark, sf_dir)
+                own = _plan_operators(df)
+                timed = _plan_operators(bench.fold_frame(df), under_fold=True)
             dropped_sorts = own.pop("global Sort", 0) - timed.pop("global Sort", 0)
             timed["Exchange rangepartitioning"] += max(dropped_sorts, 0)
             missing = {k: (n, timed[k]) for k, n in own.items() if timed[k] < n}
             if missing:
                 lost[name] = missing
-            cache.unpersist_artifacts()
-            spark.catalog.clearCache()
         assert lost == {}
 
 

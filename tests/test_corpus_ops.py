@@ -16,9 +16,6 @@ from groove_to_helpscout_migration_tool_spark.catalog.corpus_ops import (
     SEG_W,
 )
 from groove_to_helpscout_migration_tool_spark.functions import text as TX
-from groove_to_helpscout_migration_tool_spark.operators.cache import (
-    unpersist_artifacts,
-)
 from groove_to_helpscout_migration_tool_spark.session import load_tables
 
 
@@ -136,7 +133,6 @@ def test_substring_spans_match_pure_python(spark, sf_dir):
         .collect()
     }
     assert got == want
-    unpersist_artifacts()
 
 
 def test_incremental_lsh_agrees_with_full_selfjoin(spark, sf_dir):
@@ -157,7 +153,6 @@ def test_incremental_lsh_agrees_with_full_selfjoin(spark, sf_dir):
     }
     assert inc_pairs == full_cross
     assert inc_pairs  # the fixture must exercise the path
-    unpersist_artifacts()
 
 
 def test_substring_spans_cover_exact_duplicates(spark, sf_dir):
@@ -194,7 +189,6 @@ def test_substring_spans_cover_exact_duplicates(spark, sf_dir):
         (F.col("n_dup_tokens") > 0) & (F.col("n_dup_tokens") < F.col("n_tokens"))
     ).count()
     assert partial > 0
-    unpersist_artifacts()
 
 
 def test_bigram_lm_score_matches_pure_python(spark, sf_dir):
@@ -235,7 +229,6 @@ def test_bigram_lm_score_matches_pure_python(spark, sf_dir):
     assert got == want
     flagged = sum(1 for _, _, f in got.values() if f)
     assert 0 < flagged < len(got) / 2
-    unpersist_artifacts()
 
 
 def test_bpe_pair_counts_match_pure_python(spark, sf_dir):
@@ -284,7 +277,6 @@ def test_dsir_importance_separates_target_language(spark, sf_dir):
     assert bad == 0
     # weights are ratios of positive smoothed counts: scores are positive
     assert df.filter(F.col("score_raw") <= 0).count() == 0
-    unpersist_artifacts()
 
 
 class TestTwoPhaseTopKProperty:
@@ -375,4 +367,3 @@ def test_rag_two_phase_topk_equals_global_window(spark, sf_dir):
     naive_set = {(r["qid"], r["rn"], r["did"]) for r in naive}
     got_set = {(r["query_doc"], r["match_rank"], r["match_doc"]) for r in rows}
     assert got_set == naive_set
-    unpersist_artifacts()

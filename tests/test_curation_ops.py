@@ -8,9 +8,6 @@ from pyspark.sql import functions as F
 
 from groove_to_helpscout_migration_tool_spark import catalog
 from groove_to_helpscout_migration_tool_spark.operators import similarity as SIM
-from groove_to_helpscout_migration_tool_spark.operators.cache import (
-    unpersist_artifacts,
-)
 
 
 def _rows(df):
@@ -21,7 +18,6 @@ def test_bloom_decontaminate_equals_exact(spark, sf_dir):
     exact = catalog.QUERIES["llm_decontaminate"].fn(spark, sf_dir)
     bloom = catalog.QUERIES["llm_decontaminate_bloom"].fn(spark, sf_dir)
     assert _rows(bloom) == _rows(exact)
-    unpersist_artifacts()
 
 
 def test_bloom_prefilter_is_selective(spark, sf_dir):
@@ -55,14 +51,12 @@ def test_bloom_prefilter_is_selective(spark, sf_dir):
     # false positives exist but must be rare; false negatives must not
     assert n_true <= n_pass < n_train
     assert (n_pass - n_true) / max(n_train, 1) < 0.05  # fpp well under 5%
-    unpersist_artifacts()
 
 
 def test_sq8_topk_equals_brute(spark, sf_dir):
     brute = catalog.QUERIES["llm_ann_topk_cosine"].fn(spark, sf_dir)
     sq8 = catalog.QUERIES["llm_ann_quantized_topk"].fn(spark, sf_dir)
     assert _rows(sq8) == _rows(brute)
-    unpersist_artifacts()
 
 
 def test_ivf_hybrid_equals_brute_and_contains_ivf(spark, sf_dir):
@@ -80,7 +74,6 @@ def test_ivf_hybrid_equals_brute_and_contains_ivf(spark, sf_dir):
     hyc = {(r["query_id"], r["rank"]): r["cosine"] for r in hy.collect()}
     for r in ivf.collect():
         assert hyc[(r["query_id"], r["rank"])] >= r["cosine"], r
-    unpersist_artifacts()
 
 
 def test_incremental_hybrid_dominates_incremental_ivf(spark, sf_dir):
@@ -101,7 +94,6 @@ def test_incremental_hybrid_dominates_incremental_ivf(spark, sf_dir):
             continue  # outside the certification panel
         assert r["query_id"] in hq
         assert hyc[(r["query_id"], r["rank"])] >= r["cosine"], r
-    unpersist_artifacts()
 
 
 def test_sq8_pool_recall_has_margin(spark, sf_dir):
@@ -148,7 +140,6 @@ def test_sq8_pool_recall_has_margin(spark, sf_dir):
         .collect()[0]["w"]
     )
     assert worst is not None and worst <= SIM.SQ8_POOL // 2
-    unpersist_artifacts()
 
 
 def test_repetition_stats_invariants(spark, sf_dir):

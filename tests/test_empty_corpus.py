@@ -13,9 +13,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from groove_to_helpscout_migration_tool_spark import catalog
-from groove_to_helpscout_migration_tool_spark.operators.cache import (
-    unpersist_artifacts,
-)
 
 DOCS_SCHEMA = pa.schema(
     [
@@ -120,7 +117,6 @@ def test_empty_corpus_returns_empty(spark, empty_sf_dir, name, request):
     df = catalog.QUERIES[name].fn(spark, empty_sf_dir)
     rows = df.collect()
     assert rows == []
-    unpersist_artifacts()
 
 
 def test_release_layout_empty_corpus(spark, empty_sf_dir):
@@ -128,4 +124,3 @@ def test_release_layout_empty_corpus(spark, empty_sf_dir):
     in the written layout, an empty manifest, no raise."""
     df = catalog.QUERIES["q_release_layout"].fn(spark, empty_sf_dir)
     assert df.collect() == []
-    unpersist_artifacts()

@@ -11,11 +11,7 @@ as a failing one) the procedure-disagreement window.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from tools.float_margins import (  # noqa: E402
+from tools.float_margins import (
     audit_oracle,
     find_round_sites,
     final_select_pos,

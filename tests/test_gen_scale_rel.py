@@ -19,7 +19,7 @@ import duckdb
 import pytest
 
 SRC = "/root/testdata/sf0.1"
-OUT = "/root/repo/testdata_sf1"
+OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "testdata_sf1")
 REPLICAS = 10
 
 pytestmark = pytest.mark.skipif(

@@ -155,30 +155,21 @@ def test_bpe_merge_table_matches_pure_python_reference(spark, sf_dir):
 
 
 def test_bpe_retrains_after_artifacts_are_released(spark, sf_dir):
-    """BPE keeps no result cache: once ``unpersist_artifacts()`` and
-    ``clearCache()`` have released the word tables, a second call in the
-    same session runs the merge loop again -- at least one argmax job
-    per round -- and trains the same merges."""
-    from groove_to_helpscout_migration_tool_spark.operators.cache import (
-        unpersist_artifacts,
-    )
-
-    sc = spark.sparkContext
+    """BPE keeps no result cache: once an artifact scope has released
+    the word tables, a second call in the same session runs the merge
+    loop again -- at least one argmax job per round -- and trains the
+    same merges."""
+    from groove_to_helpscout_migration_tool_spark.operators.cache import artifact_scope
 
     def merges():
         fn = catalog.QUERIES["llm_bpe_train_merges"].fn
         return sorted(tuple(r) for r in fn(spark, sf_dir).collect())
 
-    first = merges()
-    unpersist_artifacts()
-    spark.catalog.clearCache()
-    sc.setJobGroup("bpe_retrain", "bpe_retrain")
-    try:
+    with artifact_scope(spark, "bpe_train"):
+        first = merges()
+    with artifact_scope(spark, "bpe_retrain"):
         second = merges()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        unpersist_artifacts()
-    assert len(sc.statusTracker().getJobIdsForGroup("bpe_retrain")) >= BPE_ROUNDS
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup("bpe_retrain")) >= BPE_ROUNDS
     assert second == first and len(first) == BPE_ROUNDS
 
 
@@ -307,23 +298,14 @@ def test_bpe_oracle_noop_rounds_on_pair_exhausted_corpus(spark, tmp_path):
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
     )
-    try:
-        for name in ("llm_bpe_train_merges", "llm_bpe_tokenize_apply"):
-            spec = catalog.QUERIES[name]
-            srows = sorted(
-                tuple(r) for r in spec.fn(spark, str(tmp_path)).collect()
-            )
-            orows = sorted(tuple(r) for r in con.execute(spec.oracle).fetchall())
-            assert srows == orows, (name, srows, orows)
-        # and the early break really happened: fewer merges than rounds
-        got = catalog.QUERIES["llm_bpe_train_merges"].fn(spark, str(tmp_path))
-        assert 0 < got.count() < BPE_ROUNDS
-    finally:
-        from groove_to_helpscout_migration_tool_spark.operators.cache import (
-            unpersist_artifacts,
-        )
-
-        unpersist_artifacts()
+    for name in ("llm_bpe_train_merges", "llm_bpe_tokenize_apply"):
+        spec = catalog.QUERIES[name]
+        srows = sorted(tuple(r) for r in spec.fn(spark, str(tmp_path)).collect())
+        orows = sorted(tuple(r) for r in con.execute(spec.oracle).fetchall())
+        assert srows == orows, (name, srows, orows)
+    # and the early break really happened: fewer merges than rounds
+    got = catalog.QUERIES["llm_bpe_train_merges"].fn(spark, str(tmp_path))
+    assert 0 < got.count() < BPE_ROUNDS
 
 
 def test_pca_oracle_empty_corpus_gate(tmp_path):

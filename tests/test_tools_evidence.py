@@ -203,22 +203,26 @@ def test_no_tool_puts_a_fixed_absolute_path_on_sys_path():
 
 
 def test_no_tool_names_a_fixed_checkout():
-    """A tool's default inputs and outputs inside the repo derive from its
-    own ``ROOT``: an absolute path literal would make a copy of the tools,
-    run from another checkout, read or overwrite the first checkout's
-    files. Code, docstrings and comments are all scanned; the only
-    absolute paths allowed are the shared, read-only test data."""
+    """A tool's or test's inputs and outputs inside the repo derive from its
+    own file: an absolute path literal would make a copy, run from another
+    checkout, read or overwrite the first checkout's files. Code,
+    docstrings and comments are all scanned; the only absolute paths
+    allowed are the shared, read-only test data (tests name fixture URL
+    paths, so they are scanned only for paths beside the test data)."""
     import glob
     import re
 
     from conftest import SF_SMOKE
 
     data_root = os.path.dirname(SF_SMOKE) + os.sep
+    home = os.path.dirname(os.path.dirname(SF_SMOKE)) + os.sep
+    heads = {"tools": r"(?<![\w.:/~\-\])])/[A-Za-z_][\w.-]*/", "tests": re.escape(home)}
     problems = []
-    for path in sorted(glob.glob(os.path.join(REPO, "tools", "*.py"))):
-        with open(path) as fh:
-            for lineno, line in enumerate(fh, 1):
-                for p in re.findall(r"(?<![\w.:/~\-\])])/[A-Za-z_][\w.-]*(?:/[\w.*{}-]+)+", line):
-                    if not p.startswith(data_root):
-                        problems.append(f"{os.path.basename(path)}:{lineno}: {p}")
+    for folder, head in heads.items():
+        for path in sorted(glob.glob(os.path.join(REPO, folder, "*.py"))):
+            with open(path) as fh:
+                for lineno, line in enumerate(fh, 1):
+                    for p in re.findall(head + r"[\w.*{}-]+(?:/[\w.*{}-]+)*", line):
+                        if not p.startswith(data_root):
+                            problems.append(f"{folder}/{os.path.basename(path)}:{lineno}: {p}")
     assert problems == []

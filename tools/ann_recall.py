@@ -93,7 +93,7 @@ sys.path.insert(0, ROOT)
 from pyspark.sql import functions as F
 
 from groove_to_helpscout_migration_tool_spark import get_session
-from groove_to_helpscout_migration_tool_spark.operators import similarity as SIM
+from groove_to_helpscout_migration_tool_spark.operators import cache, similarity as SIM
 from groove_to_helpscout_migration_tool_spark.session import load_tables
 
 FLOOR = 0.7            # per-family MEAN recall@k floor
@@ -172,78 +172,78 @@ def main() -> None:
     violations: list[str] = []
     sized: list[tuple[int, str]] = []
     for sf_dir in dirs:
-        t = load_tables(spark, sf_dir, ["embeddings"])
-        emb = t.embeddings
-        n_vec = emb.count()
-        sized.append((n_vec, sf_dir))
-        # ground truth once per snapshot; brute also gets the two-pass
-        # treatment (pass 1 builds/caches prepared(); pass 2 is the
-        # steady-state scan every approximate family is compared to)
-        t0 = time.time()
-        truth = pairs(normalize(brute_topk(emb, k, n_queries)))
-        builds = {"brute": round(time.time() - t0, 2)}
-        t0 = time.time()
-        truth = pairs(normalize(brute_topk(emb, k, n_queries)))
-        walls = {"brute": round(time.time() - t0, 2)}
-        fams = {
-            "lsh": lambda: SIM.lsh_topk(emb, k=k, query_max_id=n_queries),
-            # nprobe=5 == the catalog llm_ann_ivf_topk config
-            "ivf": lambda: SIM.ivf_topk(emb, k=k, query_max_id=n_queries, nprobe=5),
-            "sq8": lambda: SIM.sq8_topk(emb, k=k, query_max_id=n_queries),
-            # runs last ON PURPOSE: its legs reuse the cell assignment /
-            # int8 corpus persisted by the ivf+sq8 passes above -- the
-            # honest steady-state accounting, since both are build-once
-            # snapshot artifacts at 100 TB (its wall_build_s is
-            # therefore NOT a cold build; the cold costs are ivf's and
-            # sq8's own build stamps)
-            "hybrid": lambda: SIM.ivf_sq8_hybrid_topk(
-                emb, k=k, query_max_id=n_queries, nprobe=5
-            ),
-        }
-        recall: dict[str, float] = {}
-        p10_q: dict[str, float] = {}
-        min_q: dict[str, float] = {}
-        for fam, build in fams.items():
+        with cache.artifact_scope(spark, os.path.basename(sf_dir)):
+            t = load_tables(spark, sf_dir, ["embeddings"])
+            emb = t.embeddings
+            n_vec = emb.count()
+            sized.append((n_vec, sf_dir))
+            # ground truth once per snapshot; brute also gets the two-pass
+            # treatment (pass 1 builds/caches prepared(); pass 2 is the
+            # steady-state scan every approximate family is compared to)
             t0 = time.time()
-            got = pairs(normalize(build()))
-            builds[fam] = round(time.time() - t0, 2)
+            truth = pairs(normalize(brute_topk(emb, k, n_queries)))
+            builds = {"brute": round(time.time() - t0, 2)}
             t0 = time.time()
-            got = pairs(normalize(build()))
-            walls[fam] = round(time.time() - t0, 2)
-            per_q = [
-                len(got.get(qid, set()) & tset) / max(len(tset), 1)
-                for qid, tset in truth.items()
-            ]
-            recall[fam] = round(sum(per_q) / max(len(per_q), 1), 4)
-            p10_q[fam] = round(p10(per_q), 4)
-            min_q[fam] = round(min(per_q), 4) if per_q else 0.0
-            if recall[fam] < FLOOR:
-                violations.append(f"{sf_dir}:{fam}={recall[fam]}")
-            if p10_q[fam] < P10_FLOOR:
-                violations.append(f"{sf_dir}:{fam}:p10={p10_q[fam]}")
-            mfloor = MIN_FLOORS.get(fam)
-            if mfloor is not None and min_q[fam] < mfloor:
-                violations.append(f"{sf_dir}:{fam}:min={min_q[fam]}")
-            print(
-                f"{sf_dir} {fam}: recall@{k}={recall[fam]}"
-                f" p10={p10_q[fam]} min={min_q[fam]}"
-                f" build={builds[fam]}s steady={walls[fam]}s",
-                flush=True,
-            )
-        ratios = {
-            fam: round(walls[fam] / max(walls["brute"], 1e-9), 3)
-            for fam in fams
-        }
-        snapshots[sf_dir] = {
-            "n_vectors": n_vec,
-            "recall": recall,
-            "p10_query_recall": p10_q,
-            "min_query_recall": min_q,
-            "wall_build_s": builds,
-            "wall_s": walls,
-            "wall_ratio_vs_brute": ratios,
-        }
-        spark.catalog.clearCache()
+            truth = pairs(normalize(brute_topk(emb, k, n_queries)))
+            walls = {"brute": round(time.time() - t0, 2)}
+            fams = {
+                "lsh": lambda: SIM.lsh_topk(emb, k=k, query_max_id=n_queries),
+                # nprobe=5 == the catalog llm_ann_ivf_topk config
+                "ivf": lambda: SIM.ivf_topk(emb, k=k, query_max_id=n_queries, nprobe=5),
+                "sq8": lambda: SIM.sq8_topk(emb, k=k, query_max_id=n_queries),
+                # runs last ON PURPOSE: its legs reuse the cell assignment /
+                # int8 corpus persisted by the ivf+sq8 passes above -- the
+                # honest steady-state accounting, since both are build-once
+                # snapshot artifacts at 100 TB (its wall_build_s is
+                # therefore NOT a cold build; the cold costs are ivf's and
+                # sq8's own build stamps)
+                "hybrid": lambda: SIM.ivf_sq8_hybrid_topk(
+                    emb, k=k, query_max_id=n_queries, nprobe=5
+                ),
+            }
+            recall: dict[str, float] = {}
+            p10_q: dict[str, float] = {}
+            min_q: dict[str, float] = {}
+            for fam, build in fams.items():
+                t0 = time.time()
+                got = pairs(normalize(build()))
+                builds[fam] = round(time.time() - t0, 2)
+                t0 = time.time()
+                got = pairs(normalize(build()))
+                walls[fam] = round(time.time() - t0, 2)
+                per_q = [
+                    len(got.get(qid, set()) & tset) / max(len(tset), 1)
+                    for qid, tset in truth.items()
+                ]
+                recall[fam] = round(sum(per_q) / max(len(per_q), 1), 4)
+                p10_q[fam] = round(p10(per_q), 4)
+                min_q[fam] = round(min(per_q), 4) if per_q else 0.0
+                if recall[fam] < FLOOR:
+                    violations.append(f"{sf_dir}:{fam}={recall[fam]}")
+                if p10_q[fam] < P10_FLOOR:
+                    violations.append(f"{sf_dir}:{fam}:p10={p10_q[fam]}")
+                mfloor = MIN_FLOORS.get(fam)
+                if mfloor is not None and min_q[fam] < mfloor:
+                    violations.append(f"{sf_dir}:{fam}:min={min_q[fam]}")
+                print(
+                    f"{sf_dir} {fam}: recall@{k}={recall[fam]}"
+                    f" p10={p10_q[fam]} min={min_q[fam]}"
+                    f" build={builds[fam]}s steady={walls[fam]}s",
+                    flush=True,
+                )
+            ratios = {
+                fam: round(walls[fam] / max(walls["brute"], 1e-9), 3)
+                for fam in fams
+            }
+            snapshots[sf_dir] = {
+                "n_vectors": n_vec,
+                "recall": recall,
+                "p10_query_recall": p10_q,
+                "min_query_recall": min_q,
+                "wall_build_s": builds,
+                "wall_s": walls,
+                "wall_ratio_vs_brute": ratios,
+            }
     # scale-path pins: IVF must actually accelerate at the largest
     # scale, and the floor-carrying hybrid must beat the exact scan
     largest = max(sized)[1]

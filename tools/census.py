@@ -69,19 +69,16 @@ def main() -> None:
 
     sf_dir = sys.argv[1]
     spark, log = eventlog.session("census", {"spark.sql.shuffle.partitions": "16"})
-    sc = spark.sparkContext
     runs = []
     for name in query_names(sys.argv[2:]):
-        sc.setJobGroup(name, name)
         t0 = time.monotonic()
         try:
-            rows, plan = eventlog.fold(catalog.QUERIES[name].fn(spark, sf_dir))
-            runs.append((name, f"rows={rows}  wall={time.monotonic() - t0:.2f}s", plan))
+            with cache.artifact_scope(spark, name):
+                rows, plan = eventlog.fold(catalog.QUERIES[name].fn(spark, sf_dir))
+                head = f"rows={rows}  wall={time.monotonic() - t0:.2f}s"
+            runs.append((name, head, plan))
         except Exception as e:  # noqa: BLE001 - a census must not die mid-sweep
             runs.append((name, f"ERR {type(e).__name__}: {str(e)[:200]}", None))
-        cache.unpersist_artifacts()
-        spark.catalog.clearCache()
-        sc.setJobGroup("idle", "idle")
     spark.stop()  # flush the event log
     groups = eventlog.parse(log)
     for name, head, plan in runs:

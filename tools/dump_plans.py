@@ -35,19 +35,17 @@ def main() -> None:
     spark = get_session(app_name="dump-plans")
     final = os.environ.get("SPARK_GRAFT_PLAN_FINAL", "0") == "1"
     for name in names:
-        spec = catalog.QUERIES[name]
-        df = spec.fn(spark, sf_dir)
-        if final:
-            _rows, plan = eventlog.fold(df)
-        else:
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
+        with cache.artifact_scope(spark, name):
+            df = catalog.QUERIES[name].fn(spark, sf_dir)
+            if final:
+                _rows, plan = eventlog.fold(df)
+            else:
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({len(plan)} bytes)")
-        cache.unpersist_artifacts()
-        spark.catalog.clearCache()
 
 
 if __name__ == "__main__":

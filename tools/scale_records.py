@@ -254,49 +254,34 @@ def _run_sweep(sf_dir: str) -> tuple[dict[str, int], dict[str, float]]:
     # r10 task 5b). Covers the three cold paths: parquet scan, one
     # shuffle aggregation, one Arrow batch stage. Records attribute to
     # "warmup" and are never reported.
-    sc.setJobGroup("warmup", "warmup")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    docs.groupBy(F.length("text") % 7).count().collect()
-    warm = docs.limit(64).mapInPandas(lambda it: it, docs.schema)
-    warm.agg(F.count(F.lit(1))).collect()
+    with cache.artifact_scope(spark, "warmup"):
+        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        docs.groupBy(F.length("text") % 7).count().collect()
+        warm = docs.limit(64).mapInPandas(lambda it: it, docs.schema)
+        warm.agg(F.count(F.lit(1))).collect()
 
     walls: dict[str, float] = {}
     for name in _probes():
         spec = catalog.QUERIES.get(name)
         if spec is None:
             continue
-
-        def reset() -> None:
-            cache.unpersist_artifacts()
-            spark.catalog.clearCache()
-            # ContextCleaner frees broadcast/shuffle driver state only
-            # when the DRIVER GC collects the references -- a wide sweep
-            # on a big heap never GCs, so dead broadcast blocks
-            # accumulate until allocation stalls (the r10 37-probe sf10
-            # sweep died at 16g / needed 48g + 3 chunks). An explicit
-            # driver GC per run keeps the live set flat (r10 task 5a).
+        # A per-probe WARM pass in the "warmup" group: the session warm-up
+        # cannot warm each query's own codegen/JIT, so the small-scale
+        # sweep (fresh JVM) recorded walls up to 8x its large-scale twin's
+        # (16 such inversions in the r11 decade-1 pre-fix artifact).
+        # SCALE_NO_WARM=1 skips it. Each run's scope releases its
+        # artifacts, so the timed run, and the next query, pay their own
+        # full build at BOTH scales: records stay the self-contained
+        # single-run cost. The driver GC after each run lets the
+        # ContextCleaner free dead broadcast/shuffle state, which a wide
+        # sweep on a big heap otherwise piles up until allocation stalls
+        # (the r10 37-probe sf10 sweep died at 16g; r10 task 5a).
+        for group in ([] if os.environ.get("SCALE_NO_WARM") else ["warmup"]) + [name]:
+            with cache.artifact_scope(spark, group):
+                t0 = time.monotonic()
+                eventlog.fold(spec.fn(spark, sf_dir))
+                walls[name] = round(time.monotonic() - t0, 2)
             sc._jvm.System.gc()
-
-        # Per-probe WARM pass under the "warmup" group: the generic
-        # session warm-up cannot warm each query's own codegen/JIT, so
-        # the small-scale sweep (fresh JVM) recorded walls up to 8x its
-        # large-scale twin's (the r11 decade-1 pre-fix artifact had 16
-        # such inversions). The warm pass runs the same plan unattributed,
-        # then artifacts are CLEARED so the timed run still pays its own
-        # full build -- records stay the self-contained single-run cost.
-        # SCALE_NO_WARM=1 skips it (quick iteration).
-        if not os.environ.get("SCALE_NO_WARM"):
-            sc.setJobGroup("warmup", "warmup")
-            eventlog.fold(spec.fn(spark, sf_dir))
-            reset()
-        sc.setJobGroup(name, name)
-        t0 = time.monotonic()
-        eventlog.fold(spec.fn(spark, sf_dir))
-        walls[name] = round(time.monotonic() - t0, 2)
-        # self-contained per query: the next one rebuilds its artifacts,
-        # so each query's records include its own build at BOTH scales
-        reset()
-        sc.setJobGroup("idle", "idle")
     spark.stop()  # flush the event log
     return {name: g.shuffle_records for name, g in eventlog.parse(log).items()}, walls
 

@@ -153,22 +153,21 @@ def _pair_probe(spark, sf_dir: str) -> tuple[dict, list[str]]:
     hot_pred = (F.col("doc_i") % 10 == 0) & (F.col("doc_j") % 10 == 0)
     n_hot = hot.filter(F.col("doc_id") % 10 == 0).count()
 
-    unc = dedup.minhash_lsh_pairs(hot, jaccard_threshold=0.5)
-    unc_hot = unc.filter(hot_pred).count()
-    cache.unpersist_artifacts()
-    cap = dedup.minhash_lsh_pairs(hot, jaccard_threshold=0.5, bucket_cap=PAIR_CAP)
-    cap_hot = cap.filter(hot_pred).count()
-    # star recall: distinct hot docs touched by at least one capped pair
-    cap_cover = (
-        cap.filter(hot_pred)
-        .select(F.explode(F.array("doc_i", "doc_j")).alias("d"))
-        .distinct()
-        .count()
-    )
-    cache.unpersist_artifacts()
-    cont = dedup.ngram_jaccard_pairs(hot, jaccard_threshold=0.4, anchor_cap=PAIR_CAP)
-    cont_hot = cont.filter(hot_pred).count()
-    cache.unpersist_artifacts()
+    with cache.artifact_scope(spark, "pair_probe_uncapped"):
+        unc_hot = dedup.minhash_lsh_pairs(hot, jaccard_threshold=0.5).filter(hot_pred).count()
+    with cache.artifact_scope(spark, "pair_probe_capped"):
+        cap = dedup.minhash_lsh_pairs(hot, jaccard_threshold=0.5, bucket_cap=PAIR_CAP)
+        cap_hot = cap.filter(hot_pred).count()
+        # star recall: distinct hot docs touched by at least one capped pair
+        cap_cover = (
+            cap.filter(hot_pred)
+            .select(F.explode(F.array("doc_i", "doc_j")).alias("d"))
+            .distinct()
+            .count()
+        )
+    with cache.artifact_scope(spark, "pair_probe_anchor"):
+        cont = dedup.ngram_jaccard_pairs(hot, jaccard_threshold=0.4, anchor_cap=PAIR_CAP)
+        cont_hot = cont.filter(hot_pred).count()
 
     expect_unc = n_hot * (n_hot - 1) // 2
     ceiling = _cap_ceiling(n_hot)
@@ -241,14 +240,11 @@ def main() -> None:
         # the at-scale emulation: dims too big to broadcast
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     })
-    sc = spark.sparkContext
     from groove_to_helpscout_migration_tool_spark.operators import cache
 
     for name, run in _scenarios(spark, sf_dir).items():
-        sc.setJobGroup(name, name)
-        run()
-        cache.unpersist_artifacts()
-        sc.setJobGroup("idle", "idle")
+        with cache.artifact_scope(spark, name):
+            run()
     pair_probe, pair_violations = _pair_probe(spark, sf_dir)
     spark.stop()  # flush + finalize the event log
 
