@@ -1157,7 +1157,8 @@ FROM (
         " cost scales with delta x nprobe x cell width; the net leg is"
         " one quantized (1 byte/dim) base scan per batch -- the price"
         " of a per-query min-recall guarantee that IVFROUTE_r13.json"
-        " shows no routing signal can deliver. Certified against the"
+        " (the routing block of tools/ann_recall.py) shows no routing"
+        " signal can deliver. Certified against the"
         " brute-force oracle over (capped delta x base): like SQ8, the"
         " whole approximate machinery must be output-invisible. The"
         " certification panel caps delta at vec_id < 4000 (~200"

@@ -224,7 +224,8 @@ SELECT qid AS query_id, nid AS neighbor_id, cosine, CAST(rn AS INTEGER) AS rank 
 ) WHERE rn <= 5
 """,
     doc=(
-        "Brute-force cosine top-k: the query set is a bounded codebook-style "
+        "Brute-force cosine top-k (similarity.brute_topk, also the "
+        "ground truth of tools/ann_recall.py): the query set is a bounded codebook-style "
         "fetch (10 rows by contract); the corpus streams ONCE through a "
         "single Arrow stage scoring each row against the whole query matrix "
         "(similarity.scores_vs_query_matrix -- dimension-axis accumulation, "
@@ -237,35 +238,7 @@ SELECT qid AS query_id, nid AS neighbor_id, cosine, CAST(rn AS INTEGER) AS rank 
 )
 def llm_ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["embeddings"])
-    emb = t.embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x
-        )
-    )
-    emb = emb.withColumn("norm", norm)
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("norm").alias("qnorm")
-    )
-    scored = (
-        SIM.scores_vs_query_matrix(emb, q)
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", F.col("vec_id").alias("nid"), "cosine")
-    )
-    # Shared salted two-phase top-k (similarity.two_phase_topk): phase 1
-    # bounds each (qid, salt) hash-agg group, phase 2 merges <= salt*k
-    # candidates per query -- never a corpus-sized window partition per
-    # query. struct(cos DESC, -nid DESC) == the oracle's (cosine DESC,
-    # nid ASC) row_number order on the ROUNDED cosine.
-    top = SIM.two_phase_topk(scored, "qid", 5, 8)
-    return top.select(
-        F.col("qid").alias("query_id"),
-        F.col("nid").alias("neighbor_id"),
-        "cosine",
-        F.col("rank").cast("int").alias("rank"),
-    )
+    return SIM.brute_topk(t.embeddings, k=5, query_max_id=10)
 
 
 # ---------------------------------------------------------------------------
@@ -1018,8 +991,9 @@ def llm_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Floor-carrying ANN (r13): the IVF probe's candidates UNIONED"
         " with the global int8 two-phase pool as an exact safety net, one"
         " shared exact re-rank (similarity.ivf_sq8_hybrid_topk). Built"
-        " after the committed routing sweep (tools/ivf_route_sweep.py,"
-        " IVFROUTE_r13.json) measured that NO per-query signal -- probe"
+        " after the committed routing measurement (IVFROUTE_r13.json, now"
+        " the ivf routing block of tools/ann_recall.py) measured that NO"
+        " per-query signal -- probe"
         " margin, boundary gap, or retrieved-cosine -- separates the"
         " quantizer-resolution-bound recall-tail offenders below a 0.25"
         " routed fraction at every scale, so a per-query min-recall floor"

@@ -2,7 +2,8 @@
 
 Every ANN top-k is a candidate generator plus ONE exact re-rank:
   - a generator emits (qid, nid) id pairs only:
-      lsh_topk        -- query multiprobe keys x the LSH inverted lists;
+      lsh_topk        -- query multiprobe keys x the LSH inverted lists
+                         (_lsh_candidates);
       ivf_topk        -- cell_probe over label_centroids (optionally
                          Lloyd-refined by refined_centroids);
       ivf_probe_delta -- cell_probe of a delta batch against the base
@@ -12,12 +13,13 @@ Every ANN top-k is a candidate generator plus ONE exact re-rank:
                          UNION the int8 pool (the exact safety net).
   - _rerank re-joins vectors for the surviving pairs and ranks them by
     exact rounded cosine through the salted two_phase_topk.
-The brute-force baseline (catalog: llm_ann_topk_cosine) scores a
-bounded query matrix against the whole corpus (scores_vs_query_matrix)
-and ranks through the same two_phase_topk. The LSH hyperplanes are +-1
-vectors derived from md5 bits at BUILD time (in Python's hashlib, which
-matches SQL md5 byte-for-byte), inlined as literals into both the Spark
-plan and the DuckDB oracle -- fully deterministic, no engine RNG.
+The brute-force baseline brute_topk (catalog: llm_ann_topk_cosine)
+scores a bounded query matrix against the whole corpus
+(scores_vs_query_matrix) and ranks through the same two_phase_topk. The
+LSH hyperplanes are +-1 vectors derived from md5 bits at BUILD time (in
+Python's hashlib, which matches SQL md5 byte-for-byte), dotted through
+the IVF codebook's _centroid_dots_udf and inlined as literals into the
+DuckDB oracle -- fully deterministic, no engine RNG.
 
 Scale/perf design shared by all of them:
   - bucket/cell keys are tiny; the candidate self-join and its distinct
@@ -67,47 +69,26 @@ HYPERPLANES: list[list[int]] = [
 ]
 
 
-_PLANES_NP = None  # lazy; built after HYPERPLANES below
+def _planes(n: int) -> np.ndarray:
+    """The first ``n`` hyperplanes as an (n, DIM) matrix: every
+    ``bands x bits`` geometry is a prefix of one sequence."""
+    return np.array(
+        [[_plane_sign(k, i) for i in range(DIM)] for k in range(n)], dtype=np.float64
+    )
 
 
-@pandas_udf(T.ArrayType(T.DoubleType()))
-def _plane_dots_batch(vs: pd.Series) -> pd.Series:
-    """All N_PLANES hyperplane dot products per vector, Arrow-batched.
-
-    The interpreted higher-order-function dot is the hot path of the
-    corpus-side signature build (12 interpreted 64-element folds per
-    row); this computes the same values vectorized across the batch.
-    CRITICAL for oracle parity: the accumulation loops the DIMENSION
-    axis left-to-right (acc += x_i * s_i), so every float add happens in
-    exactly the order of F.aggregate / DuckDB list_sum -- bit-identical
-    signs and margins, just batched row-wise.
-    """
-    global _PLANES_NP
-    if _PLANES_NP is None:
-        _PLANES_NP = np.array(HYPERPLANES, dtype=np.float64)
-    if len(vs) == 0:
-        return pd.Series([], dtype=object)
-    m = np.array(vs.tolist(), dtype=np.float64)  # (rows, DIM)
-    acc = np.zeros((m.shape[0], _PLANES_NP.shape[0]))
-    for i in range(m.shape[1]):
-        acc += m[:, i, None] * _PLANES_NP[None, :, i]
-    return pd.Series(list(acc))
-
-
-def _band_keys_from_dots(ds) -> "F.Column":
-    """Band bucket keys from a MATERIALIZED dots array column (the
-    _plane_dots_batch output): element_at on a real column is evaluated
-    once, unlike re-deriving each interpreted dot."""
-    bits = [
+def _band_keys_from_dots(ds, bands: int, bits: int) -> "F.Column":
+    """Band bucket keys ('b' + the band's sign bits) from a MATERIALIZED
+    dots array column: element_at on a real column is evaluated once,
+    unlike re-deriving each interpreted dot."""
+    signs = [
         F.when(F.element_at(ds, k + 1) > 0, F.lit("1")).otherwise(F.lit("0"))
-        for k in range(N_PLANES)
+        for k in range(bands * bits)
     ]
     return F.array(
         *[
-            F.concat_ws(
-                "", F.lit(str(b)), *bits[b * BITS_PER_BAND : (b + 1) * BITS_PER_BAND]
-            )
-            for b in range(N_BANDS)
+            F.concat_ws("", F.lit(str(b)), *signs[b * bits : (b + 1) * bits])
+            for b in range(bands)
         ]
     )
 
@@ -132,12 +113,20 @@ def _margin_patterns() -> list[tuple[int, ...]]:
 MARGIN_PATTERNS: list[tuple[int, ...]] = _margin_patterns()
 
 
-def lsh_probe_frame(emb: DataFrame, query_max_id: int) -> DataFrame:
-    """-> (qid, bkey): query-side multiprobe keys, margin-ordered.
+def lsh_probe_frame(
+    emb: DataFrame,
+    query_max_id: int,
+    bands: int = N_BANDS,
+    bits: int = BITS_PER_BAND,
+    patterns: list[tuple[int, ...]] = MARGIN_PATTERNS,
+) -> DataFrame:
+    """-> (qid, bkey): query-side multiprobe keys, margin-ordered, for
+    the ``bands x bits`` geometry (lsh_index's) and the ``patterns``
+    flip set over margin ranks.
 
     One Arrow-batched mapInPandas stage: dots (dimension-axis sequential
     accumulation, bit-identical to the oracle's list_sum), bits, margins,
-    per-band margin ranks, and the MARGIN_PATTERNS flips all happen in
+    per-band margin ranks, and the pattern flips all happen in
     Python per batch. An earlier version unrolled ranks + 2x44 probe keys
     as Catalyst expressions; the optimizer spent multiple SECONDS on the
     collapsed tree to then evaluate it over a handful of query rows.
@@ -148,13 +137,10 @@ def lsh_probe_frame(emb: DataFrame, query_max_id: int) -> DataFrame:
         [T.StructField("qid", T.LongType()), T.StructField("bkey", T.StringType())]
     )
     q = emb.select("vec_id", "v").filter(F.col("vec_id") < query_max_id)
+    planes = _planes(bands * bits)
+    band_ks = [list(range(b * bits, (b + 1) * bits)) for b in range(bands)]
 
     def gen(batches):
-        planes = np.array(HYPERPLANES, dtype=np.float64)
-        bands = [
-            list(range(b * BITS_PER_BAND, (b + 1) * BITS_PER_BAND))
-            for b in range(N_BANDS)
-        ]
         for pdf in batches:
             out = {"qid": [], "bkey": []}
             if len(pdf):
@@ -163,32 +149,19 @@ def lsh_probe_frame(emb: DataFrame, query_max_id: int) -> DataFrame:
                 for i in range(m.shape[1]):
                     acc += m[:, i, None] * planes[None, :, i]
                 for vec_id, dots in zip(pdf["vec_id"], acc):
-                    bits = ["1" if d > 0 else "0" for d in dots]
-                    margins = [abs(d) for d in dots]
-                    for b, band in enumerate(bands):
-                        # rank = count of strictly-smaller (margin, k) pairs:
-                        # a total order, so ranks permute 0..BITS_PER_BAND-1
-                        rank = {
-                            k: sum(
-                                1
-                                for j in band
-                                if j != k
-                                and (
-                                    margins[j] < margins[k]
-                                    or (margins[j] == margins[k] and j < k)
-                                )
-                            )
-                            for k in band
-                        }
-                        for pat in MARGIN_PATTERNS:
-                            key = [str(b)]
-                            for k in band:
-                                bit = bits[k]
-                                if pat and rank[k] in pat:
-                                    bit = "0" if bit == "1" else "1"
-                                key.append(bit)
+                    signs = ["1" if d > 0 else "0" for d in dots]
+                    flipped = ["0" if d > 0 else "1" for d in dots]
+                    for b, band in enumerate(band_ks):
+                        # margin rank: position in the (|dot|, k) total order,
+                        # so ranks permute 0..bits-1 (rank 0 least confident)
+                        order = sorted(band, key=lambda k: (abs(dots[k]), k))
+                        rank = {k: r for r, k in enumerate(order)}
+                        for pat in patterns:
                             out["qid"].append(int(vec_id))
-                            out["bkey"].append("".join(key))
+                            out["bkey"].append(str(b) + "".join(
+                                flipped[k] if rank[k] in pat else signs[k]
+                                for k in band
+                            ))
             yield pd.DataFrame(out, columns=["qid", "bkey"])
 
     return q.mapInPandas(gen, schema=schema)
@@ -203,7 +176,7 @@ def dot(a, b) -> "F.Column":
 @pandas_udf(T.DoubleType())
 def _pair_dot_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     """Pairwise dot product, Arrow-batched -- the candidate-scoring hot
-    path. Same bit-exactness contract as _plane_dots_batch: accumulate
+    path. Same bit-exactness contract as _centroid_dots_udf: accumulate
     the dimension axis left-to-right so each float add matches the
     interpreted F.aggregate / DuckDB list_sum order exactly."""
     if len(a) == 0:
@@ -307,16 +280,23 @@ def sql_hyperplane_literal(k: int) -> str:
     return "[" + ", ".join(f"{float(s):.1f}" for s in HYPERPLANES[k]) + "]"
 
 
-def lsh_index(emb: DataFrame) -> DataFrame:
+def lsh_index(
+    emb: DataFrame, bands: int = N_BANDS, bits: int = BITS_PER_BAND
+) -> DataFrame:
     """Persisted inverted-list index (vec_id, bkey) over the prepared
-    corpus. Like prepared(), this is a build-once artifact: at 100 TB it
+    corpus for the ``bands x bits`` plane geometry. The plane dots come
+    from the memoized _centroid_dots_udf, so equal geometries give equal
+    plans. Like prepared(), this is a build-once artifact: at 100 TB it
     is a bucketed table written per corpus snapshot and shared by every
     query batch, so its cost amortizes to ~zero per query. Locally the
     persist makes the steady state measurable (the CacheManager matches
     the canonicalized plan across calls in one session)."""
+    dots = _centroid_dots_udf(_planes(bands * bits))
     return persist_artifact(
-        emb.select("vec_id", _plane_dots_batch("v").alias("ds"))
-        .select("vec_id", F.explode(_band_keys_from_dots(F.col("ds"))).alias("bkey"))
+        emb.select("vec_id", dots("v").alias("ds")).select(
+            "vec_id",
+            F.explode(_band_keys_from_dots(F.col("ds"), bands, bits)).alias("bkey"),
+        )
     )
 
 
@@ -330,23 +310,35 @@ def lsh_topk(embeddings: DataFrame, k: int = 5, query_max_id: int = 10) -> DataF
     SCOPE (r12, measurement-backed): the SMALL-N ANN path. On this
     corpus geometry the true top-5 cosines sit in the sign-LSH noise
     band (0.32-0.48), so every config with >=0.9 recall needs a >=0.42
-    candidate fraction (10-config sweep over bands 2-4 x bits 6-10 x
-    probe budgets 22-64/band) -- the pinned artifact measures the sf10
+    candidate fraction (the 10-geometry lsh_scope rows of
+    tools/ann_recall.py over bands 2-4 x bits 6-10 x probe budgets
+    22-64/band) -- the pinned artifact measures the sf10
     steady-state wall at ~0.64-0.68x brute across sessions
     (RECALL_r13.json wall_ratio_vs_brute; r12 measured 0.675), i.e.
     saturation, not indexing. For large corpora use ivf_topk
     (steady-state ~0.15-0.4x brute at sf10, wall-pinned in
     tools/ann_recall.py) or sq8_topk (exact, ~0.12-0.2x)."""
     emb = prepared(embeddings)
-    ex = lsh_index(emb)
-    q = lsh_probe_frame(emb, query_max_id)
-    cand = (
+    return _rerank(_lsh_candidates(emb, query_max_id), emb, k)
+
+
+def _lsh_candidates(
+    emb: DataFrame,
+    query_max_id: int,
+    bands: int = N_BANDS,
+    bits: int = BITS_PER_BAND,
+    patterns: list[tuple[int, ...]] = MARGIN_PATTERNS,
+) -> DataFrame:
+    """(qid, nid) candidates of lsh_topk: the panel's multiprobe keys
+    joined to the inverted lists of the same ``bands x bits`` geometry."""
+    ex = lsh_index(emb, bands, bits)
+    q = lsh_probe_frame(emb, query_max_id, bands, bits, patterns)
+    return (
         q.join(ex.select(F.col("vec_id").alias("nid"), "bkey"), ["bkey"])
         .filter(F.col("nid") != F.col("qid"))
         .select("qid", "nid")
         .distinct()
     )
-    return _rerank(cand, emb, k)
 
 
 QUANT_SCALE = 1_000_000.0  # fixed-point scale for deterministic centroid means
@@ -581,6 +573,30 @@ def _rerank(
         bounded_input=bounded_input,
     )
     return ranked.select(
+        F.col("qid").alias("query_id"),
+        F.col("nid").alias("neighbor_id"),
+        "cosine",
+        F.col("rank").cast("int").alias("rank"),
+    )
+
+
+def brute_topk(embeddings: DataFrame, k: int = 5, query_max_id: int = 10) -> DataFrame:
+    """Exact cosine top-k of the panel vec_id < ``query_max_id``: one
+    Arrow stage scores the corpus against the collected query matrix
+    (scores_vs_query_matrix), the salted two_phase_topk ranks it. The
+    truth every ANN family is measured against."""
+    emb = embeddings.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    ).withColumn("norm", norm(F.col("v")))
+    q = emb.filter(F.col("vec_id") < query_max_id).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("norm").alias("qnorm")
+    )
+    scored = (
+        scores_vs_query_matrix(emb, q)
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", F.col("vec_id").alias("nid"), "cosine")
+    )
+    return two_phase_topk(scored, "qid", k, SQ8_SALT).select(
         F.col("qid").alias("query_id"),
         F.col("nid").alias("neighbor_id"),
         "cosine",
@@ -901,22 +917,18 @@ def ivf_sq8_hybrid_topk(
     one shared exact re-rank. nprobe=5 is the certified catalog IVF
     config (llm_ann_ivf_topk).
 
-    Why a union over EVERY query and not margin routing: the committed
-    routing sweep (tools/ivf_route_sweep.py, IVFROUTE_r13.json) measured
-    every candidate signal -- the probe-horizon margin VERDICT r12
-    named, the probe-boundary gap, and the result-aware k-th retrieved
-    cosine -- against the actual recall-tail offenders at sf0.1/sf1/sf10
-    and found NONE that catches them below a 0.25 routed fraction at
-    every scale (at sf10 the offenders sit AT the panel median margin:
-    0.18-0.20 vs median 0.20). The offenders are quantizer-resolution-
-    bound (their true top-5 are cross-cluster noise-band cosines spread
-    uniformly over unprobed cells -- NOTES.md round 12), so no cell-
-    geometry statistic can see them. The floor therefore needs an exact
-    safety net on every query; the cheapest is the int8 pool (1
-    byte/dim scan bandwidth, pool cut via the salted two_phase_topk,
-    pool-survival recall 1.0 measured at every snapshot), giving
-    min-recall >= the net's pool survival by construction -- asserted
-    >= 0.4 per snapshot in tools/ann_recall.py.
+    Why a union over EVERY query and not margin routing: the routing
+    block of tools/ann_recall.py (IVFROUTE_r13.json) scores the probe
+    margin, the probe-boundary gap and the k-th retrieved cosine against
+    the recall-tail offenders, and at sf0.1/sf1/sf10 none catches them
+    below a 0.25 routed fraction (at sf10 they sit AT the panel median
+    margin). The offenders are quantizer-resolution-bound (their true
+    top-5 are cross-cluster noise-band cosines spread over unprobed
+    cells -- NOTES.md round 12), so the floor needs an exact net on every
+    query; the cheapest is the int8 pool (1 byte/dim, pool-survival
+    recall 1.0 at every snapshot), giving min-recall >= the net's pool
+    survival by construction -- asserted >= 0.4 per snapshot in
+    tools/ann_recall.py.
 
     At 100 TB: the IVF leg serves the clustered mass at sublinear cost;
     the net leg is one quantized linear scan at a quarter of the float
@@ -925,12 +937,21 @@ def ivf_sq8_hybrid_topk(
     cartesian (the query side broadcasts in both legs), candidates
     deduped by one (qid, nid) hash aggregate."""
     emb = prepared(embeddings)
-    cand = (
+    return _rerank(
+        _hybrid_candidates(embeddings, emb, query_max_id, nprobe, pool), emb, k
+    )
+
+
+def _hybrid_candidates(
+    embeddings: DataFrame, emb: DataFrame, query_max_id: int, nprobe: int, pool: int
+) -> DataFrame:
+    """(qid, nid) candidates of ivf_sq8_hybrid_topk: the IVF probe leg
+    UNION the int8 pool, deduplicated."""
+    return (
         _ivf_candidates(embeddings, emb, query_max_id, nprobe)
         .unionByName(_sq8_pool_candidates(emb, pool, query_max_id))
         .distinct()
     )
-    return _rerank(cand, emb, k)
 
 
 def ivf_probe_delta(

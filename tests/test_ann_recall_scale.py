@@ -3,16 +3,21 @@ tail floors + scale-path pin added r12 per VERDICT r11 tasks 1-2).
 
 Hash certification proves the bucketed/capped ANN plans compute their
 own semantics exactly; it cannot see approximation-quality drift (LSH
-bucket saturation, quantizer overlap). tools/ann_recall.py measures
-recall@k against the brute-force baseline on a FIXED 200-query panel at
-sf0.1/sf1/sf10 and stamps RECALL_r13.json; this test asserts the
-committed artifact's floors so a regenerated artifact with degraded
-recall turns the suite red.
+bucket saturation, quantizer overlap). tools/ann_recall.py, the one ANN
+evaluation driver, scores every candidate generator of
+operators/similarity.py through the package's own operators: recall@k
+against similarity.brute_topk on a FIXED 200-query panel, candidate
+fraction, the ivf routing signals and the LSH geometry rows. The
+committed artifacts RECALL_r13.json, IVFROUTE_r13.json and
+LSHSCOPE_r13.json (sf0.1/sf1/sf10) came from its predecessors; the
+driver reproduces them (CHANGES.md). These tests assert the committed
+floors, so a regenerated artifact with degraded recall turns the suite
+red, and run the driver itself at sf0.01.
 
 r13 adds the hybrid family (similarity.ivf_sq8_hybrid_topk: IVF probe
 candidates UNION the int8 pool as an exact safety net) and the MIN
-per-query floor it carries -- built after the committed routing sweep
-(tools/ivf_route_sweep.py, IVFROUTE_r13.json) measured that no
+per-query floor it carries -- built after the committed routing
+measurement (IVFROUTE_r13.json, now the driver's routing block) found no
 per-query signal separates the quantizer-resolution-bound IVF tail
 offenders below a 0.25 routed fraction at every scale, so routing (the
 form VERDICT r12 named) cannot carry the floor; a net over every query
@@ -99,7 +104,7 @@ def test_min_query_floor_holds_for_floor_carrying_families():
 
 
 def test_routing_sweep_backs_the_exemption_and_the_net():
-    """IVFROUTE_r13.json (tools/ivf_route_sweep.py): the measurement
+    """IVFROUTE_r13.json (the driver's routing block): the measurement
     behind both the ivf min-floor exemption and the hybrid's design --
     no signal catches the recall-tail offenders below a 0.25 routed
     fraction at every snapshot, so the floor needs a net, not routing."""
@@ -183,7 +188,7 @@ def test_lsh_recall_does_not_degrade_with_scale():
 
 
 def test_lsh_scope_sweep_backs_the_small_n_re_scope():
-    """LSHSCOPE_r13.json (tools/lsh_scope_sweep.py): the committed
+    """LSHSCOPE_r13.json (the driver's lsh_scope rows): the committed
     config sweep behind the r12 re-scope, regenerated r13 with the
     deterministic (cosine DESC, nid ASC) ground-truth tie-break (ADVICE
     r12: the shipped-must-win assertion rides on a 0.007 margin at
@@ -207,3 +212,37 @@ def test_lsh_scope_sweep_backs_the_small_n_re_scope():
             if isinstance(r, dict) and "recall" in r and n != "shipped-2x6"
         ]
         assert shipped["recall"] >= max(others), (sf_dir, shipped, max(others))
+
+
+def test_driver_scores_the_package_generators(spark, sf_dir):
+    """tools/ann_recall.snapshot at sf0.01 on a 50-query panel. Under the
+    (cosine DESC, nid ASC) total order topk(cand) & truth == cand & truth,
+    so the default LSH geometry's candidate recall must equal the lsh
+    family's re-ranked recall query by query: any drift between the
+    geometry rows and the shipped operator turns this red."""
+    from tools import ann_recall
+
+    snap, per_q = ann_recall.snapshot(
+        spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"), panel=50
+    )
+    assert len(per_q["lsh"]) == 50
+    assert per_q["shipped-2x6"] == per_q["lsh"]
+    assert snap["recall"]["sq8"] == 1.0
+    assert all(per_q["hybrid"][q] >= per_q["ivf"][q] for q in per_q["ivf"])
+    fracs = list(snap["cand_frac"].values())
+    fracs += [row["cand_frac"] for row in snap["lsh_scope"].values()]
+    assert len(fracs) == 4 + len(ann_recall.LSH_GEOMETRIES)
+    assert all(0 < f <= 1 for f in fracs), fracs
+
+
+def test_default_lsh_geometry_keeps_the_index_plan(spark, sf_dir):
+    """lsh_index's plane dots come from the memoized dots UDF, so the
+    default geometry spelled out gives the same plan (the CacheManager
+    reuses the persisted index) and another geometry a different one."""
+    from groove_to_helpscout_migration_tool_spark.operators import similarity as SIM
+    from groove_to_helpscout_migration_tool_spark.session import load_tables
+
+    emb = SIM.prepared(load_tables(spark, sf_dir, ["embeddings"]).embeddings)
+    default = SIM.lsh_index(emb)
+    assert default.sameSemantics(SIM.lsh_index(emb, bands=2, bits=6))
+    assert not default.sameSemantics(SIM.lsh_index(emb, bands=2, bits=8))

@@ -405,6 +405,16 @@ class TestBenchContract:
         assert len(parsed["queries"]) + omitted == len(bench.HEADLINE)
         assert set(detail["queries"]) == set(bench.HEADLINE)
 
+    def test_artifacts_are_one_runs_not_a_sum_over_runs(self, spark, sf_dir):
+        """``artifacts`` counts what one run registers: every run is a
+        fresh ``fn()`` that registers its persists again, so a sum would
+        scale with the adaptive warm-run count."""
+        import bench
+
+        one = bench.time_query(spark, sf_dir, "q11_important_stock", n_warm=1)
+        two = bench.time_query(spark, sf_dir, "q11_important_stock", n_warm=2)
+        assert one["artifacts"] == two["artifacts"] > 0
+
     def test_timed_frame_prunes_no_scan_the_query_reads(self, spark, sf_dir):
         """The frame bench.py collects must read what the query's own
         plan reads: a ``count()`` prunes 7 headline queries' scans down

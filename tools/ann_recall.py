@@ -1,89 +1,50 @@
-"""Measure ANN recall@k AT SCALE against the brute-force baseline.
+"""One ANN evaluation driver: every candidate generator of
+operators/similarity.py, scored through the package's own operators on
+the fixed query panel vec_id < PANEL (the same at every scale).
 
-Hash-certification of the capped/bucketed ANN queries proves the plan
-computes ITS OWN semantics exactly -- it cannot see approximation
-quality drift. Bucket saturation (flagged by the sf10 probe notes for
-LSH at 60M rows / 200k vectors) degrades RECALL while every hash stays
-green, so recall needs its own scale measurement (VERDICT r10 task 3).
+Every ANN top-k is a (qid, nid) candidate generator plus one exact
+re-rank. Hash certification proves each plan computes its own
+semantics, not its approximation quality, so per snapshot this tool
+reports:
 
-For each snapshot dir this tool runs, on a FIXED query panel
-(vec_id < ANN_RECALL_QUERIES, default 200 -- identical panel at every
-scale, so numbers are comparable across snapshots):
+  - truth: similarity.brute_topk (llm_ann_topk_cosine's plan);
+  - families: lsh_topk, ivf_topk (nprobe=5, llm_ann_ivf_topk's config),
+    sq8_topk (identical to brute by design: a 1.0-recall control) and
+    ivf_sq8_hybrid_topk (the floor-carrying IVF probe UNION int8 pool;
+    it runs after ivf and sq8 so its legs reuse their build-once cell
+    assignment and int8 corpus). Each runs twice: wall_build_s includes
+    the artifact build, wall_s is the steady state the wall pins are
+    about. Recall mean/p10/min come from the re-ranked output; cand_frac
+    (the filter's cost) from one aggregate over the generator frame;
+  - routing: the ivf signals a router to an exact path could use --
+    margin (cell csim rank 1 minus rank nprobe+1) and boundary (rank
+    nprobe minus rank nprobe+1) from _with_cell_ranking, and kth_ret
+    (the rank-k cosine of the ivf output) -- with the panel fraction a
+    threshold catching every offender (recall < LOW) routes; usable
+    only below ROUTE_MAX at every snapshot;
+  - lsh_scope: LSH_GEOMETRIES through similarity._lsh_candidates:
+    candidate recall and fraction; one reaching PRUNE_RECALL below
+    PRUNE_FRAC would be a pruning winner. They run last: each adds a
+    plane matrix to the bounded dots-UDF memo, which must still hold the
+    codebook the hybrid shares with ivf.
 
-  - brute:  exact top-k (similarity.scores_vs_query_matrix +
-            two_phase_topk -- the llm_ann_topk_cosine plan with the
-            wider panel), the ground truth;
-  - lsh:    similarity.lsh_topk   (bucket join + exact re-rank);
-  - ivf:    similarity.ivf_topk   (nprobe=5 coarse cells -- the catalog
-            llm_ann_ivf_topk config, raised from 3 in r11 exactly
-            because this sweep measured 0.61 at sf1; keep in lockstep
-            with catalog/llm_ops.py);
-  - sq8:    similarity.sq8_topk   (int8 first pass + exact re-rank;
-            bit-identical to brute by design -- a 1.0-recall control
-            that validates the harness itself);
-  - hybrid: similarity.ivf_sq8_hybrid_topk (r13: IVF probe candidates
-            UNION the int8 pool as an exact safety net -- the
-            floor-carrying production form; runs AFTER ivf and sq8 so
-            its legs reuse their session-persisted artifacts, which is
-            also the 100 TB accounting: the cell assignment and int8
-            corpus are build-once snapshot tables).
+Floors per family per snapshot: mean >= FLOOR, p10 >= P10_FLOOR, min >=
+MIN_FLOORS (plain ivf exempt: its tail is quantizer-resolution-bound and
+no routing signal catches it, so the hybrid's int8 net carries the
+floor). Wall pins at the largest snapshot: ivf and hybrid steady walls
+<= IVF/HYBRID_WALL_RATIO_MAX x brute's. LSH, the small-N path, has none.
 
-Asserted floors (VERDICT r11 task 1 + r12 task 3: mean, tail, AND min):
-  - mean recall@k >= 0.7 per family per snapshot;
-  - p10 per-query recall >= 0.4 per family per snapshot;
-  - MIN per-query recall >= 0.4 per family per snapshot for every
-    family EXCEPT plain ivf (MIN_FLOORS): ivf's min is quantizer-
-    resolution-bound at 0.2 -- its outlier queries' true top-5 are
-    cross-cluster noise-band cosines spread uniformly over unprobed
-    cells, and the committed routing sweep (tools/ivf_route_sweep.py,
-    IVFROUTE_r13.json) measured that NO per-query signal (probe margin,
-    boundary gap, retrieved-cosine) catches those offenders below a
-    0.25 routed fraction at every scale -- so the min floor is carried
-    by the hybrid (the exact int8 net over every query), and plain ivf
-    stays measured for lockstep with the certified catalog config;
-  - scale-path wall pins (VERDICT r11 task 2): at the LARGEST snapshot
-    ivf_wall <= IVF_WALL_RATIO_MAX * brute_wall, and the floor-carrying
-    hybrid <= HYBRID_WALL_RATIO_MAX * brute_wall (the per-query
-    guarantee must cost less than the guarantee-free exact scan). LSH
-    carries NO wall floor -- it is the documented small-N path (a
-    config sweep measured every >=0.9-recall LSH config at >=0.42
-    candidate fraction on this corpus geometry, so it cannot beat brute
-    by 2x at any bit budget; COVERAGE.md + NOTES.md round 12).
-
-Each family runs TWICE per snapshot: wall_build_s is the first pass
-(includes the one-time index/artifact build -- at 100 TB a bucketed
-table written once per corpus snapshot and amortized over every query
-batch), wall_s is the second pass (steady state, the per-query-batch
-cost the wall pin is about). The two differ by ~4x for LSH at sf10
-(301s vs 77s measured r12), so conflating them makes the artifact
-non-reproducible across sessions -- r11's single-pass stamp happened to
-catch a warm index and read 79.5s where a cold session reads ~230s.
-
-Usage: python tools/ann_recall.py [sf_dir ...]
-       (default: the sf0.1 testdata snapshot and this checkout's
-                 testdata_sf1 and testdata_sf10)
-Env:   ANN_RECALL_JSON=<path>  write the artifact (default RECALL_r13.json)
-       ANN_RECALL_QUERIES=<n>  panel size (default 200)
-       ANN_RECALL_K=<k>        k (default 5)
-
-Output JSON: {"panel": n, "k": k, "floor": 0.7, "p10_floor": 0.4,
-              "min_floors": {family: floor|null},
-              "min_floor_exemption": "...",
-              "ivf_wall_ratio_max": 0.5, "hybrid_wall_ratio_max": 0.75,
-              "snapshots": {dir: {"n_vectors": N,
-                                  "recall": {family: mean},
-                                  "p10_query_recall": {family: r},
-                                  "min_query_recall": {family: r},
-                                  "wall_build_s": {family: s},
-                                  "wall_s": {family: s (steady state)},
-                                  "wall_ratio_vs_brute": {family: r}}},
-              "floor_violations": [...]}
+Usage: python tools/ann_recall.py OUT.json [sf_dir ...]
+       (default: sf0.1 testdata, this checkout's testdata_sf1, _sf10)
+Exits 1 when a floor or wall pin is violated.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -96,13 +57,17 @@ from groove_to_helpscout_migration_tool_spark import get_session
 from groove_to_helpscout_migration_tool_spark.operators import cache, similarity as SIM
 from groove_to_helpscout_migration_tool_spark.session import load_tables
 
+PANEL = 200            # queries vec_id < PANEL
+K = 5
+NPROBE = 5             # the catalog llm_ann_ivf_topk config
 FLOOR = 0.7            # per-family MEAN recall@k floor
 P10_FLOOR = 0.4        # per-family 10th-percentile per-query floor
+LOW = 0.4              # a routing offender's recall is below this
 IVF_WALL_RATIO_MAX = 0.5   # scale-path pin at the largest snapshot
 HYBRID_WALL_RATIO_MAX = 0.75  # floor-carrying form must beat exact scan
-# Per-family MIN per-query floors (r13). None == documented exemption:
-# plain ivf's min is quantizer-resolution-bound (IVFROUTE_r13.json shows
-# no routing signal exists); the hybrid carries the floor instead.
+ROUTE_MAX = 0.25       # a usable routing signal routes less than this
+PRUNE_RECALL, PRUNE_FRAC = 0.9, 0.42
+# Per-family MIN per-query floors. None == documented exemption.
 MIN_FLOORS: dict[str, float | None] = {
     "lsh": 0.4,
     "ivf": None,
@@ -111,190 +76,273 @@ MIN_FLOORS: dict[str, float | None] = {
 }
 
 
-def brute_topk(emb, k: int, query_max_id: int):
-    """Exact baseline: the llm_ann_topk_cosine plan (one Arrow stage vs
-    the collected query matrix, salted two-phase top-k) with a
-    parameterized panel."""
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    e = e.withColumn(
-        "norm", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda a, x: a + x * x))
-    )
-    q = e.filter(F.col("vec_id") < query_max_id).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    scored = (
-        SIM.scores_vs_query_matrix(e, q)
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", F.col("vec_id").alias("nid"), "cosine")
-    )
-    return SIM.two_phase_topk(scored, "qid", k, 8)
+def _pats_width(w: int) -> list[tuple[int, ...]]:
+    """Every subset of the w lowest-margin bits: a bigger probe budget
+    than the shipped patterns for w >= 5."""
+    return [p for r in range(w + 1) for p in itertools.combinations(range(w), r)]
 
 
-def pairs(df) -> dict[int, set[int]]:
-    out: dict[int, set[int]] = {}
-    for r in df.select("qid", "nid").collect():
-        out.setdefault(r[0], set()).add(r[1])
-    return out
-
-
-def normalize(df):
-    """Top-k frames differ in column names across operators; take the
-    first two id-typed columns as (qid, nid)."""
-    cols = df.columns
-    qcol = "qid" if "qid" in cols else "query_id"
-    ncol = "nid" if "nid" in cols else "neighbor_id"
-    return df.select(F.col(qcol).alias("qid"), F.col(ncol).alias("nid"))
+# (name, bands, bits per band, probe patterns); the first is lsh_topk's
+LSH_GEOMETRIES: list[tuple[str, int, int, list[tuple[int, ...]]]] = [
+    ("shipped-2x6", 2, 6, SIM.MARGIN_PATTERNS),
+    ("2x8", 2, 8, SIM.MARGIN_PATTERNS),
+    ("2x8-w5", 2, 8, _pats_width(5)),
+    ("2x8-w6", 2, 8, _pats_width(6)),
+    ("2x10", 2, 10, SIM.MARGIN_PATTERNS),
+    ("2x10-w6", 2, 10, _pats_width(6)),
+    ("3x8", 3, 8, SIM.MARGIN_PATTERNS),
+    ("4x8", 4, 8, SIM.MARGIN_PATTERNS),
+    ("4x8-w5", 4, 8, _pats_width(5)),
+    ("4x10-w6", 4, 10, _pats_width(6)),
+]
 
 
 def p10(values: list[float]) -> float:
-    """10th percentile, lower-interpolation (the conservative side: the
-    reported p10 is an ACTUAL per-query recall, never an interpolated
-    value above one)."""
-    if not values:
-        return 0.0
-    s = sorted(values)
-    return s[int(0.10 * (len(s) - 1))]
+    """10th percentile, lower interpolation: an actual panel value."""
+    return sorted(values)[int(0.10 * (len(values) - 1))]
+
+
+def _timed(topk) -> tuple[dict[int, list[tuple[int, float]]], float]:
+    """-> ({query_id: [(neighbor_id, cosine)] by rank}, wall seconds)."""
+    t0 = time.time()
+    rows = topk().select("query_id", "neighbor_id", "cosine", "rank").collect()
+    wall = round(time.time() - t0, 2)
+    out: dict[int, list[tuple[int, float]]] = {}
+    for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+        out.setdefault(r["query_id"], []).append((r["neighbor_id"], r["cosine"]))
+    return out, wall
+
+
+def _candidates(cand, truth_df, truth: dict[int, set], n_vec: int):
+    """-> ({qid: candidate recall}, candidate fraction) of a generator
+    frame, from one per-query aggregate over it."""
+    rows = (
+        cand.join(F.broadcast(truth_df), ["qid", "nid"], "left")
+        .groupBy("qid")
+        .agg(F.count(F.lit(1)).alias("n"), F.count("hit").alias("hits"))
+        .collect()
+    )
+    hits = {r["qid"]: r["hits"] for r in rows}
+    rec = {q: hits.get(q, 0) / max(len(t), 1) for q, t in truth.items()}
+    return rec, sum(r["n"] for r in rows) / (len(truth) * n_vec)
+
+
+def _stats(per_q: dict[int, float]) -> tuple[float, float, float]:
+    vals = list(per_q.values())
+    return round(sum(vals) / len(vals), 4), round(p10(vals), 4), round(min(vals), 4)
+
+
+def _routing(raw, emb, panel: int, ivf_top, ivf_recall: dict[int, float]) -> dict:
+    """The ivf offenders (recall < LOW) and, per routing signal, the
+    panel fraction a threshold catching all of them routes."""
+    book = SIM.codebook(SIM.label_centroids(raw, emb))
+
+    def csim(rank: int):
+        return F.element_at(F.col("_csims"), rank)["csim"]
+
+    rows = (
+        SIM._with_cell_ranking(emb.filter(F.col("vec_id") < panel), book)
+        .select(
+            "vec_id",
+            (csim(1) - csim(NPROBE + 1)).alias("margin"),
+            (csim(NPROBE) - csim(NPROBE + 1)).alias("boundary"),
+        )
+        .collect()
+    )
+    qids = sorted(ivf_recall)
+    signals = {
+        "margin": {r["vec_id"]: r["margin"] for r in rows},
+        "boundary": {r["vec_id"]: r["boundary"] for r in rows},
+        "kth_ret": {
+            q: ivf_top[q][K - 1][1] if len(ivf_top.get(q, [])) >= K else -2.0
+            for q in qids
+        },
+    }
+    offenders = [q for q in qids if ivf_recall[q] < LOW]
+    out = {}
+    for name, by_q in signals.items():
+        vals = [by_q[q] for q in qids]
+        thr = max(by_q[q] for q in offenders) + 1e-9 if offenders else None
+        routed = sum(v < thr for v in vals) / len(vals) if offenders else 0.0
+        out[name] = {
+            "offender_values": [round(by_q[q], 4) for q in offenders],
+            "panel_median": round(statistics.median(vals), 4),
+            "panel_p10": round(p10(vals), 4),
+            "catch_all_threshold": round(thr, 4) if offenders else None,
+            "routed_fraction_at_catch_all": round(routed, 3),
+        }
+        print(f"  routing {name}: routed_fraction_to_catch_all={routed:.3f}", flush=True)
+    return {
+        "offender_queries": offenders,
+        "offender_recalls": [round(ivf_recall[q], 2) for q in offenders],
+        "signals": out,
+    }
+
+
+def snapshot(spark, sf_dir: str, panel: int = PANEL) -> tuple[dict, dict]:
+    """Evaluate one snapshot -> (its artifact record, {family or
+    geometry name: {qid: recall}}: the re-ranked recall of a family, the
+    candidate recall of an LSH geometry)."""
+    raw = load_tables(spark, sf_dir, ["embeddings"]).embeddings
+    n_vec = raw.count()
+    emb = SIM.prepared(raw)
+    # the truth, with the build/steady pair the wall pins compare against
+    _, build_brute = _timed(lambda: SIM.brute_topk(raw, K, panel))
+    truth_top, wall_brute = _timed(lambda: SIM.brute_topk(raw, K, panel))
+    builds, walls = {"brute": build_brute}, {"brute": wall_brute}
+    truth = {q: {n for n, _ in top} for q, top in truth_top.items()}
+    truth_df = spark.createDataFrame(
+        [(q, n, True) for q, ns in truth.items() for n in ns],
+        "qid bigint, nid bigint, hit boolean",
+    )
+    families = {
+        "lsh": (
+            lambda: SIM.lsh_topk(raw, k=K, query_max_id=panel),
+            lambda: SIM._lsh_candidates(emb, panel),
+        ),
+        "ivf": (
+            lambda: SIM.ivf_topk(raw, k=K, query_max_id=panel, nprobe=NPROBE),
+            lambda: SIM._ivf_candidates(raw, emb, panel, NPROBE),
+        ),
+        "sq8": (
+            lambda: SIM.sq8_topk(raw, k=K, query_max_id=panel),
+            lambda: SIM._sq8_pool_candidates(emb, SIM.SQ8_POOL, panel),
+        ),
+        "hybrid": (
+            lambda: SIM.ivf_sq8_hybrid_topk(raw, k=K, query_max_id=panel, nprobe=NPROBE),
+            lambda: SIM._hybrid_candidates(raw, emb, panel, NPROBE, SIM.SQ8_POOL),
+        ),
+    }
+    per_query: dict[str, dict[int, float]] = {}
+    stats: dict[str, tuple[float, float, float]] = {}
+    cand_frac: dict[str, float] = {}
+    for fam, (topk, generator) in families.items():
+        _, builds[fam] = _timed(topk)
+        top, walls[fam] = _timed(topk)
+        if fam == "ivf":
+            ivf_top = top
+        per_query[fam] = {
+            q: len({n for n, _ in top.get(q, [])} & t) / max(len(t), 1)
+            for q, t in truth.items()
+        }
+        stats[fam] = _stats(per_query[fam])
+        cand_frac[fam] = round(_candidates(generator(), truth_df, truth, n_vec)[1], 4)
+        print(
+            f"{sf_dir} {fam}: recall@{K},p10,min={stats[fam]}"
+            f" cand_frac={cand_frac[fam]} build={builds[fam]}s steady={walls[fam]}s",
+            flush=True,
+        )
+    routing = _routing(raw, emb, panel, ivf_top, per_query["ivf"])
+    lsh_scope = {}
+    for name, bands, bits, pats in LSH_GEOMETRIES:
+        rec, frac = _candidates(
+            SIM._lsh_candidates(emb, panel, bands, bits, pats), truth_df, truth, n_vec
+        )
+        per_query[name] = rec
+        mean, tail, _ = _stats(rec)
+        lsh_scope[name] = {"recall": mean, "p10": tail, "cand_frac": round(frac, 4),
+                           "probes_per_band": len(pats)}
+        print(f"{sf_dir} lsh {name}: {lsh_scope[name]}", flush=True)
+    record = {
+        "n_vectors": n_vec,
+        "recall": {f: s[0] for f, s in stats.items()},
+        "p10_query_recall": {f: s[1] for f, s in stats.items()},
+        "min_query_recall": {f: s[2] for f, s in stats.items()},
+        "cand_frac": cand_frac,
+        "wall_build_s": builds,
+        "wall_s": walls,
+        "wall_ratio_vs_brute": {
+            f: round(walls[f] / max(walls["brute"], 1e-9), 3) for f in families
+        },
+        "routing": routing,
+        "lsh_scope": lsh_scope,
+    }
+    return record, per_query
+
+
+def _violations(sf_dir: str, snap: dict) -> list[str]:
+    out = []
+    for fam, mfloor in MIN_FLOORS.items():
+        if snap["recall"][fam] < FLOOR:
+            out.append(f"{sf_dir}:{fam}={snap['recall'][fam]}")
+        if snap["p10_query_recall"][fam] < P10_FLOOR:
+            out.append(f"{sf_dir}:{fam}:p10={snap['p10_query_recall'][fam]}")
+        if mfloor is not None and snap["min_query_recall"][fam] < mfloor:
+            out.append(f"{sf_dir}:{fam}:min={snap['min_query_recall'][fam]}")
+    return out
 
 
 def main() -> None:
-    dirs = sys.argv[1:] or [
+    if len(sys.argv) < 2:
+        sys.exit("usage: python tools/ann_recall.py OUT.json [sf_dir ...]")
+    out_path = sys.argv[1]
+    dirs = sys.argv[2:] or [
         "/root/testdata/sf0.1",
         os.path.join(ROOT, "testdata_sf1"),
         os.path.join(ROOT, "testdata_sf10"),
     ]
-    n_queries = int(os.environ.get("ANN_RECALL_QUERIES", "200"))
-    k = int(os.environ.get("ANN_RECALL_K", "5"))
-    out_path = os.environ.get("ANN_RECALL_JSON", os.path.join(ROOT, "RECALL_r13.json"))
     spark = get_session()
     snapshots: dict[str, dict] = {}
     violations: list[str] = []
-    sized: list[tuple[int, str]] = []
     for sf_dir in dirs:
         with cache.artifact_scope(spark, os.path.basename(sf_dir)):
-            t = load_tables(spark, sf_dir, ["embeddings"])
-            emb = t.embeddings
-            n_vec = emb.count()
-            sized.append((n_vec, sf_dir))
-            # ground truth once per snapshot; brute also gets the two-pass
-            # treatment (pass 1 builds/caches prepared(); pass 2 is the
-            # steady-state scan every approximate family is compared to)
-            t0 = time.time()
-            truth = pairs(normalize(brute_topk(emb, k, n_queries)))
-            builds = {"brute": round(time.time() - t0, 2)}
-            t0 = time.time()
-            truth = pairs(normalize(brute_topk(emb, k, n_queries)))
-            walls = {"brute": round(time.time() - t0, 2)}
-            fams = {
-                "lsh": lambda: SIM.lsh_topk(emb, k=k, query_max_id=n_queries),
-                # nprobe=5 == the catalog llm_ann_ivf_topk config
-                "ivf": lambda: SIM.ivf_topk(emb, k=k, query_max_id=n_queries, nprobe=5),
-                "sq8": lambda: SIM.sq8_topk(emb, k=k, query_max_id=n_queries),
-                # runs last ON PURPOSE: its legs reuse the cell assignment /
-                # int8 corpus persisted by the ivf+sq8 passes above -- the
-                # honest steady-state accounting, since both are build-once
-                # snapshot artifacts at 100 TB (its wall_build_s is
-                # therefore NOT a cold build; the cold costs are ivf's and
-                # sq8's own build stamps)
-                "hybrid": lambda: SIM.ivf_sq8_hybrid_topk(
-                    emb, k=k, query_max_id=n_queries, nprobe=5
-                ),
-            }
-            recall: dict[str, float] = {}
-            p10_q: dict[str, float] = {}
-            min_q: dict[str, float] = {}
-            for fam, build in fams.items():
-                t0 = time.time()
-                got = pairs(normalize(build()))
-                builds[fam] = round(time.time() - t0, 2)
-                t0 = time.time()
-                got = pairs(normalize(build()))
-                walls[fam] = round(time.time() - t0, 2)
-                per_q = [
-                    len(got.get(qid, set()) & tset) / max(len(tset), 1)
-                    for qid, tset in truth.items()
-                ]
-                recall[fam] = round(sum(per_q) / max(len(per_q), 1), 4)
-                p10_q[fam] = round(p10(per_q), 4)
-                min_q[fam] = round(min(per_q), 4) if per_q else 0.0
-                if recall[fam] < FLOOR:
-                    violations.append(f"{sf_dir}:{fam}={recall[fam]}")
-                if p10_q[fam] < P10_FLOOR:
-                    violations.append(f"{sf_dir}:{fam}:p10={p10_q[fam]}")
-                mfloor = MIN_FLOORS.get(fam)
-                if mfloor is not None and min_q[fam] < mfloor:
-                    violations.append(f"{sf_dir}:{fam}:min={min_q[fam]}")
-                print(
-                    f"{sf_dir} {fam}: recall@{k}={recall[fam]}"
-                    f" p10={p10_q[fam]} min={min_q[fam]}"
-                    f" build={builds[fam]}s steady={walls[fam]}s",
-                    flush=True,
-                )
-            ratios = {
-                fam: round(walls[fam] / max(walls["brute"], 1e-9), 3)
-                for fam in fams
-            }
-            snapshots[sf_dir] = {
-                "n_vectors": n_vec,
-                "recall": recall,
-                "p10_query_recall": p10_q,
-                "min_query_recall": min_q,
-                "wall_build_s": builds,
-                "wall_s": walls,
-                "wall_ratio_vs_brute": ratios,
-            }
+            snapshots[sf_dir], _ = snapshot(spark, sf_dir)
+        violations += _violations(sf_dir, snapshots[sf_dir])
     # scale-path pins: IVF must actually accelerate at the largest
     # scale, and the floor-carrying hybrid must beat the exact scan
-    largest = max(sized)[1]
-    ivf_ratio = snapshots[largest]["wall_ratio_vs_brute"]["ivf"]
-    if ivf_ratio > IVF_WALL_RATIO_MAX:
-        violations.append(f"{largest}:ivf_wall_ratio={ivf_ratio}")
-    hyb_ratio = snapshots[largest]["wall_ratio_vs_brute"]["hybrid"]
-    if hyb_ratio > HYBRID_WALL_RATIO_MAX:
-        violations.append(f"{largest}:hybrid_wall_ratio={hyb_ratio}")
-    # VERDICT r12 task 6: price the LSH index build honestly. The build
-    # premium over the brute path's own build (prepared() etc.) is paid
-    # back at (brute_steady - lsh_steady) per query batch; below the
-    # break-even batch count, brute is cheaper END TO END and the LSH
-    # index should not be built at all. Stamped per snapshot so the
-    # small-N scope note carries the amortization math, not a vibe.
+    largest = max(snapshots, key=lambda d: snapshots[d]["n_vectors"])
+    ratios = snapshots[largest]["wall_ratio_vs_brute"]
+    if ratios["ivf"] > IVF_WALL_RATIO_MAX:
+        violations.append(f"{largest}:ivf_wall_ratio={ratios['ivf']}")
+    if ratios["hybrid"] > HYBRID_WALL_RATIO_MAX:
+        violations.append(f"{largest}:hybrid_wall_ratio={ratios['hybrid']}")
+    # the LSH build premium over brute's own build pays back at the
+    # steady per-batch saving: premium <= 0 at once, saving <= 0 never
     lsh_break_even = {}
     for sf_dir, snap in snapshots.items():
         saving = snap["wall_s"]["brute"] - snap["wall_s"]["lsh"]
         premium = snap["wall_build_s"]["lsh"] - snap["wall_build_s"]["brute"]
-        # premium <= 0 (build no dearer than brute's own prepared()
-        # build) pays back immediately -> 0 batches; saving <= 0 (steady
-        # LSH not faster) -> the index NEVER pays back -> null
         lsh_break_even[sf_dir] = (
             round(max(premium, 0.0) / saving, 1) if saving > 0 else None
         )
-    from tools.lsh_scope_sweep import CONFIGS as LSH_CONFIGS
-
+    routing_signal_usable = any(
+        max(
+            s["routing"]["signals"][name]["routed_fraction_at_catch_all"]
+            for s in snapshots.values()
+        )
+        < ROUTE_MAX
+        for name in ("margin", "boundary", "kth_ret")
+    )
+    pruning_winners = [
+        [d, name]
+        for d, s in snapshots.items()
+        for name, r in s["lsh_scope"].items()
+        if r["recall"] >= PRUNE_RECALL and r["cand_frac"] < PRUNE_FRAC
+    ]
     out = {
-        "panel": n_queries,
-        "k": k,
+        "panel": PANEL,
+        "k": K,
         "floor": FLOOR,
         "p10_floor": P10_FLOOR,
         "min_floors": MIN_FLOORS,
         "min_floor_exemption": (
             "ivf: min is quantizer-resolution-bound (outlier queries'"
             " true top-5 are cross-cluster noise-band cosines spread"
-            " uniformly over unprobed cells); the committed routing"
-            " sweep (tools/ivf_route_sweep.py, IVFROUTE_r13.json) found"
-            " no per-query signal catching them below a 0.25 routed"
-            " fraction at every scale, so the min floor is carried by"
-            " the hybrid family (exact int8 net over every query)"
+            " uniformly over unprobed cells); the routing block"
+            " (snapshots.*.routing) finds no per-query signal catching"
+            f" them below a {ROUTE_MAX} routed fraction at every scale,"
+            " so the min floor is carried by the hybrid family (exact"
+            " int8 net over every query)"
         ),
         "ivf_wall_ratio_max": IVF_WALL_RATIO_MAX,
         "hybrid_wall_ratio_max": HYBRID_WALL_RATIO_MAX,
         "lsh_scope": (
-            f"small-N path: a {len(LSH_CONFIGS)}-config (bands x bits x"
-            " probe-budget) sweep at"
-            " sf1/sf10 measured every >=0.9-recall config at >=0.42 candidate"
-            " fraction -- this corpus's true top-5 cosines sit in the"
-            " hyperplane noise band (0.32-0.48), so sign-LSH cannot prune it;"
-            " IVF and SQ8 are the asserted scale paths (NOTES.md round 12)"
+            f"small-N path: the {len(LSH_GEOMETRIES)} lsh_scope geometries"
+            " (bands x bits x probe budget) reach >=0.9 recall only at"
+            " >=0.42 candidate fraction -- this corpus's true top-5"
+            " cosines sit in the hyperplane noise band (0.32-0.48), so"
+            " sign-LSH cannot prune it; IVF and SQ8 are the asserted scale"
+            " paths (NOTES.md round 12)"
         ),
         "lsh_break_even_batches": lsh_break_even,
         "lsh_break_even_note": (
@@ -304,12 +352,18 @@ def main() -> None:
             " not faster than brute at that snapshot, so the index never"
             " pays back"
         ),
+        "routing_signal_usable": routing_signal_usable,
+        "pruning_winners": pruning_winners,
         "snapshots": snapshots,
         "floor_violations": violations,
     }
     with open(out_path, "w") as fh:
         json.dump(out, fh, indent=1)
-    print(f"wrote {out_path}; violations: {violations}")
+    print(
+        f"wrote {out_path}; violations: {violations};"
+        f" routing_signal_usable={routing_signal_usable};"
+        f" pruning_winners={pruning_winners}"
+    )
     sys.exit(1 if violations else 0)
 
 
